@@ -6670,10 +6670,14 @@ object VersionedTable {
   // ------------------------------------------------------------- change feed
 
   /** Change-data-feed between two versions: one row per inserted, deleted,
-    * or updated key, classified by a full-outer self-join on `keys`.
+    * or updated key, classified by pairing the two sides on `keys` with
+    * full-outer join semantics (computed as a union plus one aggregate).
     * `op` ∈ insert|update|delete; value columns carry the NEW side for
     * insert/update and the OLD side for delete (the row that disappeared).
     * Unchanged keys are omitted. Comparison is null-safe per column.
+    * As under SQL join equality, a key tuple with any NULL part never
+    * pairs: such a row always surfaces as a delete (old side) and/or an
+    * insert (new side), never as an update or as unchanged.
     *
     * FILE-LEVEL PRUNING — the property that makes this a CDC primitive at
     * 100 TB rather than an audit query: data files are immutable once
@@ -6693,9 +6697,9 @@ object VersionedTable {
     *
     * Soundness requires each snapshot to carry at most one row per key
     * tuple (the loader upsert invariant): a duplicate key split across a
-    * shared and a non-shared file would make the pruned join see only half
-    * its rows. Cost: one join of two file-pruned scans — the audit never
-    * replays load history.
+    * shared and a non-shared file would make the pruned diff see only half
+    * its rows. Cost: one aggregate over two file-pruned scans — the audit
+    * never replays load history.
     */
   def changes(tgt: Catalog, table: String, fromV: Long, toV: Long,
               keys: Seq[String]): DataFrame =
@@ -6779,12 +6783,10 @@ object VersionedTable {
     // candidate IS that side's value — deterministic — and a missing side
     // reads as all-null exactly like the join's absent side. Plan shape:
     // union → one partial+final aggregate (one Exchange), vs two Exchanges
-    // + two sorts + SortMergeJoinExec before. One behavioral edge moves:
-    // NULL key components now pair by groupBy equality where SQL join
-    // equality kept them forever-distinct — consistent with the loader's
-    // own key semantics (collapseLastPerKey windows and bucketIdExpr both
-    // group null keys), and unreachable from loader-stamped tables whose
-    // upsert keys are non-null.
+    // + two sorts + SortMergeJoinExec for the join. groupBy equates NULL
+    // keys where join equality never does, so a row with any NULL key
+    // part gets its own group via `__nk` = (side, id); `__nk` is null for
+    // non-null keys, which therefore group exactly as they would join.
     // Each side rides as ONE nullable struct (not flat null-padded
     // columns): an absent side is a single null bit in the unsafe row, so
     // the union's shuffle bytes stay at the join's per-side width
@@ -6795,11 +6797,18 @@ object VersionedTable {
     def nullOf(src: org.apache.spark.sql.types.StructType, names: Seq[String]) =
       lit(null).cast(org.apache.spark.sql.types.StructType(
         names.map(n => src(n))))
+    require(a.columns.contains(Loader.IdCol),
+      "change feed expects loader-stamped tables (id column present)")
+    def nullKeyTag(sideNo: Int, id: String) =
+      when(keys.map(col(_).isNull).foldLeft(lit(false))(_ || _),
+        struct(lit(sideNo).as("side"), col(id).as("id"))).as("__nk")
     val aPad = aR.select(keys.map(col) ++ Seq(
+      nullKeyTag(0, s"__a_${Loader.IdCol}"),
       sideStruct(aValNames).as("__sa"), nullOf(b.schema, bValNames).as("__sb")): _*)
     val bPad = b.select(keys.map(col) ++ Seq(
+      nullKeyTag(1, Loader.IdCol),
       nullOf(aR.schema, aValNames).as("__sa"), sideStruct(bValNames).as("__sb")): _*)
-    val paired = aPad.unionByName(bPad).groupBy(keys.map(col): _*)
+    val paired = aPad.unionByName(bPad).groupBy((keys :+ "__nk").map(col): _*)
       .agg(any_value(col("__sa"), lit(true)).as("__sa"),
         any_value(col("__sb"), lit(true)).as("__sb"))
     // re-flatten to the join's column names (a null side's getField reads
@@ -6810,8 +6819,6 @@ object VersionedTable {
     // presence flags: the absent side's columns aggregate to null (no
     // non-null candidate); use the id column (never null in a loaded
     // table) as the unambiguous presence marker
-    require(a.columns.contains(Loader.IdCol),
-      "change feed expects loader-stamped tables (id column present)")
     val presentA = col(s"__a_${Loader.IdCol}").isNotNull
     val presentB = col(Loader.IdCol).isNotNull
     val changed = (valCols.map(c => !(col(s"__a_$c") <=> col(c))) ++

@@ -711,6 +711,23 @@ class EqualityDeleteSpec extends SparkSpec {
     assert(live.length == 12) // 10 + reinserted null + new k=100
   }
 
+  test("the change feed keeps a deleted row whose key is null") {
+    // two NULL-keyed rows (no upsertFields, so NULL keys load); deleting
+    // one must surface it as a delete — a NULL key never pairs, so the
+    // surviving NULL-keyed row cannot absorb the vanished one
+    VersionedTable.load(lib, "nd",
+      Seq((Some(1L), 1.0), ((None: Option[Long]), 2.0),
+        ((None: Option[Long]), 3.0)).toDF("k", "v"),
+      idOrder = Seq("v"))
+    val v1 = VersionedTable.currentVersion(lib, "nd").get
+    VersionedTable.delete(lib, "nd", col("v") === 3.0)
+    val v2 = VersionedTable.currentVersion(lib, "nd").get
+    val feed = VersionedTable.changes(lib, "nd", v1, v2, Seq("k")).collect()
+    assert(feed.exists(r => r.isNullAt(r.fieldIndex("k")) &&
+      r.getAs[String]("op") == "delete" && r.getAs[Double]("v") == 3.0),
+      s"the deleted null-key row must reach the feed: " + feed.mkString(";"))
+  }
+
   test("the MOR keyed upsert probe sees through live tombstones") {
     // merge-on-read table, then a write-without-read upsert (live
     // tombstone), then a LIBRARY keyed upsert (the MOR load path): its
