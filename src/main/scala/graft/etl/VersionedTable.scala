@@ -1704,6 +1704,29 @@ object VersionedTable {
     graft.sources.ParquetSource
       .footerMaxLongInFiles(tgt.spark, absFiles, Loader.IdCol)
 
+  /** Max of the id column across a commit's new files `newRel`, from the
+    * `id` ranges [[manifestMeta]] already read into `fm` — one footer
+    * pass per new file per commit. The ranges answer when every
+    * populated new file has a `long` id range and records zero null ids:
+    * then every populated row group carries the non-null id statistics
+    * [[footerMaxId]] reads, and the two agree exactly. Otherwise (no
+    * range — stats missing, id outside the stats columns, a null or
+    * absent id column) the strict footer pass decides, so the answer is
+    * [[footerMaxId]]'s in every case. */
+  private def newFilesMaxId(tgt: Catalog, table: String, fm: FileMeta,
+                            newRel: Seq[String]): Option[Long] = {
+    val maxes = newRel.filter(r => fm.rows.get(r).forall(_ > 0)).map { r =>
+      fm.stats.get(r).flatMap(_.get(Loader.IdCol)).collect {
+        case ("long", _, hi)
+          if fm.nulls.get(r).flatMap(_.get(Loader.IdCol)).contains(0L) =>
+          hi.toLong
+      }
+    }
+    if (maxes.forall(_.isDefined)) maxes.flatten.maxOption
+    else footerMaxId(tgt,
+      newRel.map(r => new Path(dataDir(tgt, table), r).toString))
+  }
+
   // --------------------------------------------------------------- zone maps
 
   /** Manifest zone maps cover at most this many columns (schema order) —
@@ -1730,8 +1753,8 @@ object VersionedTable {
   /** Per-file metadata (zone maps, byte sizes, null counts, row counts)
     * for a new manifest: parent-carried entries for `carryRel` plus
     * freshly-footer-read entries for the new files — ONE footer pass per
-    * new file at commit time (metadata-only, O(new files); the same
-    * footers the id-floor probe touches). */
+    * new file at commit time (metadata-only, O(new files)); the commit's
+    * max id comes from the same pass ([[newFilesMaxId]]). */
   private[etl] final case class FileMeta(stats: FileStats,
                                          sizes: Map[String, Long],
                                          nulls: Map[String, Map[String, Long]],
@@ -2086,13 +2109,11 @@ object VersionedTable {
     * layout already is, applied to arbitrary predicate trees: an eq
     * constraint on every bucket key (or a small IN on a single-key
     * layout) hashes driver-side to its bucket set, and all other
-    * buckets' files skip with zero I/O. None = the predicate doesn't
-    * pin the keys (or a value's string form may drift from Spark's
-    * cast) — no restriction, never a wrong skip. The hash is
-    * [[graft.functions.PortableHash.hmodJvm]], the bit-identical JVM
-    * twin of the writer's [[Loader.bucketIdExpr]]; values are limited to
-    * the types whose JVM toString equals Spark's cast-to-string exactly
-    * (integrals, strings, booleans). */
+    * buckets' files skip with zero I/O and no job. None = the predicate
+    * doesn't pin the keys (or a value has no exact key string, see
+    * [[bucketKeyString]]) — no restriction, never a wrong skip. The hash
+    * is [[graft.functions.PortableHash.hmodJvm]], the bit-identical JVM
+    * twin of the writer's [[Loader.bucketIdExpr]]. */
   private[etl] def bucketsFor(man: Manifest,
                               p: ZonePred.P): Option[Set[Int]] =
     man.bucket.flatMap { case (keys, n) =>
@@ -2100,15 +2121,14 @@ object VersionedTable {
         case ZonePred.And(ps) => ps.flatMap(conj)
         case leaf => Seq(leaf)
       }
-      def str(v: Any): Option[String] = v match {
-        case s: String => Some(s)
-        case _: Long | _: Int | _: Short | _: Byte | _: Boolean =>
-          Some(v.toString)
-        case _ => None // double/date/ts: cast-to-string may drift
-      }
+      lazy val types = recordedSchema(man).fold(
+        Map.empty[String, org.apache.spark.sql.types.DataType])(
+        _.fields.map(f => f.name -> f.dataType).toMap)
+      def str(c: String, v: Any): Option[String] =
+        bucketKeyString(v, resolveKey(types, c))
       val leaves = conj(p)
       def eqOf(c: String): Option[String] = leaves.collectFirst {
-        case ZonePred.Leaf(lc, "eq", Seq(v)) if lc == c => str(v)
+        case ZonePred.Leaf(lc, "eq", Seq(v)) if lc == c => str(c, v)
       }.flatten
       def bucketOf(parts: Seq[String]): Int =
         (graft.functions.PortableHash.hmodJvm(parts.mkString("\u0001")) % n)
@@ -2118,7 +2138,7 @@ object VersionedTable {
         eqOf(k).map(s => Set(bucketOf(Seq(s)))).orElse(
           leaves.collectFirst {
             case ZonePred.Leaf(lc, "in", vs) if lc == k && vs.sizeIs <= 256 =>
-              val ss = vs.map(str)
+              val ss = vs.map(str(k, _))
               if (ss.forall(_.isDefined))
                 Some(ss.flatten.map(s => bucketOf(Seq(s))).toSet)
               else None
@@ -2129,6 +2149,51 @@ object VersionedTable {
         else None
       }
     }
+
+  /** `v` stringified exactly as the writer's [[Loader.bucketIdExpr]]
+    * stringifies a key column of type `colType`: Spark's own `Cast` to
+    * the column's type, then to string, evaluated on the driver in the
+    * session's time zone and eval mode — so date, timestamp, double and
+    * decimal keys hash like the written rows, with no second formatting
+    * rule to drift. None when an eq match would not imply equal key
+    * strings: Spark compares a string column with a non-string value in
+    * the value's domain ('05' = 5), and a value that does not up-cast to
+    * the column's type makes Spark compare in a wider domain (a long
+    * column against 2^53 as a double matches 2^53 + 1); also when the
+    * cast fails or yields null, and for a floating zero (0.0 = -0.0,
+    * but the two stringify apart). A manifest with no recorded schema
+    * (legacy) takes the value's own type, for strings, integrals and
+    * booleans only. */
+  private[etl] def bucketKeyString(
+      v: Any, colType: Option[org.apache.spark.sql.types.DataType])
+      : Option[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.types._
+    scala.util.Try(Literal(v)).toOption.flatMap { l =>
+      val from = l.dataType
+      val to = colType.getOrElse(from)
+      val exact = (from, to) match {
+        case _ if colType.isEmpty => from match {
+          case StringType | BooleanType | ByteType | ShortType | IntegerType |
+               LongType => true
+          case _ => false
+        }
+        case _ if from == to => true
+        case (_, _: StringType) => false
+        case (StringType, _) => true
+        case _ => Cast.canUpCast(from, to)
+      }
+      val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+      if (!exact) None
+      else scala.util.Try(Cast(l, to, tz).eval() match {
+        case null => None
+        // 0.0 = -0.0 in Spark's comparison, but the two stringify apart
+        case d: Double if d == 0.0 => None
+        case f: Float if f == 0.0f => None
+        case typed => Some(Cast(Literal(typed, to), StringType, tz).eval().toString)
+      }).toOption.flatten
+    }
+  }
 
   /** Hidden-path rule for walking batch dirs: Spark's own convention —
     * `_`/`.`-prefixed names are metadata EXCEPT partition-style `name=val`
@@ -2555,18 +2620,19 @@ object VersionedTable {
     }
     val newRel = newParts.map(_._1)
     val newV = cur.getOrElse(0L) + 1L
+    val newAbs = newRel.map(r => new Path(dataDir(tgt, table), r).toString)
+    val fm = manifestMeta(tgt, table, headMan, carryRel, newParts, out.schema)
     // the committed version's max id, from the new files' footer stats
     // (metadata-only), combined with the prior floor whenever prior files
-    // carry forward (their ids are ≤ the floor by construction)
-    val newAbs = newRel.map(r => new Path(dataDir(tgt, table), r).toString)
+    // carry forward (their ids are ≤ the floor by construction).
     // MONOTONE floor: always at least the parent's — a rewrite that drops
     // the max-id row must not lower the floor (its id may be referenced
     // by retained older versions; reissuing it would corrupt audit joins)
-    val committedMax = footerMaxId(tgt, newAbs).map(m => math.max(m, maxId))
+    val committedMax = newFilesMaxId(tgt, table, fm, newRel)
+      .map(m => math.max(m, maxId))
     preCommitHook.value()
     if (tryCommitManifest(tgt, table,
-      { val fm = manifestMeta(tgt, table, headMan, carryRel, newParts, out.schema)
-        // a keyed load RECORDS its keys ([[UpsertKeysProp]]); appends
+      { // a keyed load RECORDS its keys ([[UpsertKeysProp]]); appends
         // carry the recorded keys forward untouched, a keyed load with
         // different keys overwrites (latest declaration wins)
         val props0 = headMan.fold(Map.empty[String, String])(_.props)
@@ -3198,11 +3264,10 @@ object VersionedTable {
           }
         }
       val newRel = newParts.map(_._1)
-      val newAbs = newRel.map(r => new Path(dataDir(tgt, table), r).toString)
-      val committedMax = footerMaxId(tgt, newAbs).map(math.max(_, floor))
-        .orElse(headMan.flatMap(_.maxId))
-      preCommitHook.value()
       val fm = manifestMeta(tgt, table, None, Nil, newParts, out.schema)
+      val committedMax = newFilesMaxId(tgt, table, fm, newRel)
+        .map(math.max(_, floor)).orElse(headMan.flatMap(_.maxId))
+      preCommitHook.value()
       if (tryCommitManifest(tgt, table,
         Manifest(cur.getOrElse(0L) + 1, committedMax, None, newRel,
           fm.stats, fm.sizes, fm.nulls, fm.rows,
@@ -3265,12 +3330,11 @@ object VersionedTable {
           }
         }
       val newRel = newParts.map(_._1)
-      val newAbs = newRel.map(r => new Path(dataDir(tgt, table), r).toString)
-      val committedMax = footerMaxId(tgt, newAbs).map(math.max(_, floor))
-        .orElse(headMan.maxId)
-      preCommitHook.value()
       val fm = manifestMeta(tgt, table, Some(headMan), Nil, newParts,
         out.schema)
+      val committedMax = newFilesMaxId(tgt, table, fm, newRel)
+        .map(math.max(_, floor)).orElse(headMan.maxId)
+      preCommitHook.value()
       // the staged files were written under `physOf` — the commit must
       // record that SAME mapping (extendMapping can assign a FRESH
       // physical when the overwrite frame re-adds a retired name via the
@@ -3358,13 +3422,13 @@ object VersionedTable {
         }
       }
     val newRel = newParts.map(_._1)
-    val newAbs = newRel.map(r => new Path(dataDir(tgt, table), r).toString)
+    val fm = manifestMeta(tgt, table, Some(headMan), keepRel, newParts, out.schema)
     // same strictness as loadAttempt: when the footer probe bails on a
     // populated file, record NO floor (the next load scans) — fabricating
     // `floor` here would reissue the ids just stamped above it
-    val committedMax = footerMaxId(tgt, newAbs).map(math.max(_, floor))
+    val committedMax = newFilesMaxId(tgt, table, fm, newRel)
+      .map(math.max(_, floor))
     preCommitHook.value()
-    val fm = manifestMeta(tgt, table, Some(headMan), keepRel, newParts, out.schema)
     if (tryCommitManifest(tgt, table,
       Manifest(expectedVersion + 1, committedMax, headMan.bucket,
         keepRel ++ newRel, fm.stats, fm.sizes, fm.nulls, fm.rows,
@@ -3533,9 +3597,8 @@ object VersionedTable {
         // tombstone), so re-emitting a tombstoned row here would
         // resurrect it — the stamp-grouped anti-join filters first
         readRelsEq(tgt, table, headMan, rewriteRel.toSeq, rels =>
-          readRelsWithSidecars(tgt, table, rels,
-            rewriteDvs.map { case (rel, (p, _)) => rel -> p }, schemaFull,
-            physOfMan(headMan))),
+          readRelsApplyingSidecars(tgt, table, headMan, rels,
+            rewriteDvs.map { case (rel, (p, _)) => rel -> p }, schemaFull)),
         headMan.bucket, bloomColsOf(headMan), physOfMan(headMan),
         partSpecOf(headMan.props), zorderLayout(headMan.props))
     def cleanupRewrite(): Unit =
@@ -3622,17 +3685,16 @@ object VersionedTable {
       }
     val newRel = rwParts.map(_._1) ++ newParts.map(_._1) ++
       idParts.map(_._1) ++ emptyParts.map(_._1)
-    val stagedAbs = (newParts ++ idParts).map(p =>
-      new Path(dataDir(tgt, table), p._1).toString)
+    val stagedRel = (newParts ++ idParts).map(_._1)
     val floor0 = headMan.maxId
-    val committedMax =
-      if (stagedAbs.isEmpty) floor0
-      else footerMaxId(tgt, stagedAbs).map(m => math.max(m, floor0.getOrElse(0L)))
-        .orElse(floor0)
-    preCommitHook.value()
     val fm = manifestMeta(tgt, table, Some(headMan), keepSafe,
       rwParts ++ newParts ++ idParts ++ emptyParts,
       schemaFull.getOrElse(org.apache.spark.sql.types.StructType(Nil)))
+    val committedMax =
+      if (stagedRel.isEmpty) floor0
+      else newFilesMaxId(tgt, table, fm, stagedRel)
+        .map(m => math.max(m, floor0.getOrElse(0L))).orElse(floor0)
+    preCommitHook.value()
     // [[EqLiveUniqueProp]]: inserted/modified rows (MOR upsert merges,
     // MERGE inserts, UPDATE rewrites) may introduce duplicate keys —
     // the uniqueness invariant drops; a pure delete (DV-only) only
@@ -3903,7 +3965,6 @@ object VersionedTable {
                                matchedOf: DataFrame => DataFrame,
                                candRel: Seq[String],
                                dropWhole: Set[String]): Option[Long] = {
-    def abs(r: String) = new Path(dataDir(tgt, table), r).toString
     val stage = s"${tgt.dirPath(table)}.__vstage/mor-del-${java.util.UUID.randomUUID()}"
     val f = fs(tgt, dataDir(tgt, table))
     try {
@@ -3913,17 +3974,8 @@ object VersionedTable {
       val frags: Map[String, Seq[String]] =
         if (candRel.isEmpty) Map.empty
         else {
-          // raw (physical-named) read for the `_metadata` extraction,
-          // logical names restored before the caller's predicate runs
-          val physOf = physOfMan(man)
-          val sch = recordedSchema(man)
-          val raw = readFileListRaw(tgt, candRel.map(abs), sch, physOf)
-            .withColumn("__graft_fp", col("_metadata.file_path"))
-            .withColumn("__graft_ri", col("_metadata.row_index"))
-          val probe =
-            if (physOf.isEmpty) raw
-            else org.apache.spark.sql.graft.ColumnMapping.toLogicalNames(
-              raw, sch.get.fieldNames.toSeq ++ Seq("__graft_fp", "__graft_ri"))
+          val probe = scanWithIdentity(tgt, table, man, candRel,
+            scanSchema(tgt, table, man, candRel, None))
           writePositionFragments(tgt.spark,
             matchedOf(probe).select(col("__graft_fp"), col("__graft_ri")),
             stage)
@@ -3985,27 +4037,17 @@ object VersionedTable {
                                            man: Manifest, rels: Seq[String],
                                            sch: Option[org.apache.spark.sql.types.StructType])
       : DataFrame = {
-    def abs(r: String) = new Path(dataDir(tgt, table), r).toString
-    val physOf = physOfMan(man)
-    // raw (physical-named) frame for the `_metadata` extraction; logical
-    // names restored at the end — callers see (logical cols, __graft_fp,
-    // __graft_ri)
-    val raw = readFileListRaw(tgt, rels.map(abs), sch, physOf)
-      .withColumn("__graft_fp", col("_metadata.file_path"))
-      .withColumn("__graft_ri", col("_metadata.row_index"))
+    val raw = scanWithIdentity(tgt, table, man, rels,
+      scanSchema(tgt, table, man, rels, sch))
     val dirty = rels.filter(man.dvs.contains)
-    val lively =
-      if (dirty.isEmpty) raw
-      else {
-        val live = liveRowUdf(tgt.spark, dirty.map { r =>
-          new Path(abs(r)).toUri.getPath ->
-            new Path(dataDir(tgt, table), man.dvs(r)._1).toString
-        }.toMap)
-        raw.where(live(col("__graft_fp"), col("__graft_ri")))
-      }
-    if (physOf.isEmpty) lively
-    else org.apache.spark.sql.graft.ColumnMapping.toLogicalNames(
-      lively, sch.get.fieldNames.toSeq ++ Seq("__graft_fp", "__graft_ri"))
+    if (dirty.isEmpty) raw
+    else {
+      val live = liveRowUdf(tgt.spark, dirty.map { r =>
+        new Path(dataDir(tgt, table), r).toUri.getPath ->
+          new Path(dataDir(tgt, table), man.dvs(r)._1).toString
+      }.toMap)
+      raw.where(live(col("__graft_fp"), col("__graft_ri")))
+    }
   }
 
   /** MERGE-ON-READ KEYED UPSERT — one [[load]] attempt on a
@@ -5038,97 +5080,124 @@ object VersionedTable {
       throw new IllegalArgumentException(s"table '$table' has no version $v"))
     require(man.files.nonEmpty, s"version $v of '$table' lists no files")
     // equality tombstones (if any) wrap the whole composition: stamp
-    // groups anti-join their applicable tombstones, tombstone-free
-    // manifests keep the untouched fast paths below
-    readRelsEq(tgt, table, man, man.files, { rels =>
-      val dirty = rels.filter(man.dvs.contains)
-      val clean = rels.filterNot(man.dvs.contains)
-      if (dirty.nonEmpty) {
-        // merge-on-read: DV'd files filter their deleted positions
-        // (exact, row-index based); clean files keep the zone-map
-        // planning path below through a two-sided union. Compaction
-        // materializes DVs and restores the single-scan plan.
-        val dirtyDf = readRelsWithDvNoEq(tgt, table, man, dirty)
-        if (clean.isEmpty) dirtyDf
-        else readVersionClean(tgt, table, man, clean).unionByName(dirtyDf)
-      } else readVersionClean(tgt, table, man, rels)
-    })
+    // groups anti-join their applicable tombstones; within a group,
+    // DV'd files filter their deleted positions (merge-on-read) and
+    // clean files take the plain zone-map scan. Compaction materializes
+    // DVs and restores the single-scan plan.
+    readRelsEq(tgt, table, man, man.files,
+      readRelsWithDvNoEq(tgt, table, man, _))
   }
 
-  /** The DV-free read core: `rels` of `man` through the zone-map
-    * FileIndex (or a plain list read for stats-less legacy manifests). */
-  private def readVersionClean(tgt: Catalog, table: String, man: Manifest,
-                               rels: Seq[String]): DataFrame = {
-    val abs = rels.map(r => new Path(dataDir(tgt, table), r).toString)
-    val physOf = physOfMan(man)
-    if (man.stats.isEmpty) readFileList(tgt, abs, recordedSchema(man), physOf)
-    else {
-      // PLANNING-TIME zone maps: the scan is built over a custom
-      // FileIndex, so whatever filter Catalyst later pushes down —
-      // `.where`, SQL over a registered view, a join's pushed predicate,
-      // the incremental watermark — skips excluded files at listFiles
-      // time with no graft API involvement ([[readWhere]] remains the
-      // eager twin for probes and explicit predicates). File statuses
-      // come from the manifest's recorded byte sizes — ZERO per-file
-      // status RPCs for tables committed with sizes (a 100k-file table
-      // on an object store plans from the manifest alone); pre-sizes
-      // manifests fall back to one status call per missing file.
-      val fsys = fs(tgt, dataDir(tgt, table))
-      val statuses = rels.zip(abs).map { case (rel, a) =>
-        man.sizes.get(rel) match {
-          case Some(len) => new org.apache.hadoop.fs.FileStatus(
-            len, false, 1, 128L * 1024 * 1024, 0L, fsys.makeQualified(new Path(a)))
-          case None => fsys.getFileStatus(new Path(a))
-        }
-      }
+  /** The read schema of `rels` of `man`: the caller's explicit schema,
+    * else the manifest-recorded one (metadata widenings never rewrote
+    * the files, and a mixed-era file list must not take its shape from
+    * whichever footer the reader samples), else — legacy manifests
+    * only — the first file's footer. */
+  private def scanSchema(tgt: Catalog, table: String, man: Manifest,
+                         rels: Seq[String],
+                         schema: Option[org.apache.spark.sql.types.StructType])
+      : org.apache.spark.sql.types.StructType =
+    schema.orElse(recordedSchema(man)).getOrElse {
       tgt.spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the manifest-recorded schema wins (metadata widenings never
-      // rewrote the files); the footer probe is the legacy fallback
-      val schema = recordedSchema(man)
-        .getOrElse(tgt.spark.read.parquet(abs.head).schema)
-      val relByAbs = rels.map { rel =>
-        new Path(dataDir(tgt, table), rel).toUri.getPath -> rel
-      }.toMap
-      // COLUMN MAPPING: the scan reads PHYSICAL names (the logical
-      // rename is an alias projection on top), so predicates Catalyst
-      // pushes to the FileIndex arrive physical-named — translate each
-      // leaf back before consulting the LOGICAL manifest stats. The
-      // translation is constant per predicate but the closure runs per
-      // FILE — memoized like bucketsFor below, so a 100k-file listing
-      // rebuilds the tree once, not 100k times.
-      val toLogical = org.apache.spark.sql.graft.ColumnMapping.reverse(physOf)
-      val predCache =
-        new java.util.concurrent.ConcurrentHashMap[ZonePred.P, ZonePred.P]()
-      // bucketsFor is constant per predicate but the closure runs per
-      // FILE — memoize by tree (value equality) so a 100k-file listing
-      // hashes the key once, not 100k times
-      val bucketCache =
-        new java.util.concurrent.ConcurrentHashMap[ZonePred.P, Option[Set[Int]]]()
-      val admits = (absPath: String, p0: ZonePred.P) =>
-        relByAbs.get(absPath) match {
-          case None => true
-          case Some(rel) =>
-            val p =
-              if (toLogical.isEmpty) p0
-              else predCache.computeIfAbsent(p0,
-                org.apache.spark.sql.graft.ColumnMapping.mapZonePred(_, toLogical))
-            bucketCache.computeIfAbsent(p, bucketsFor(man, _)).forall(ks =>
-              bucketOfRel(rel).forall(ks.contains)) &&
-              fileAdmits(man, rel, p)
-        }
-      val df0 = org.apache.spark.sql.graft.ZoneMapRead.dataFrame(tgt.spark,
-        statuses, org.apache.spark.sql.graft.ColumnMapping
-          .physSchema(schema, physOf), admits)
-      val df =
-        if (physOf.isEmpty) df0
-        else org.apache.spark.sql.graft.ColumnMapping.toLogicalNames(
-          df0, schema.fieldNames.toSeq)
-      df.schema.fields.collect {
-        case fld if fld.dataType == org.apache.spark.sql.types.TimestampNTZType => fld.name
-      }.foldLeft(df)((d, c) =>
-        d.withColumn(c, col(c).cast(org.apache.spark.sql.types.TimestampType)))
+      tgt.spark.read.parquet(
+        new Path(dataDir(tgt, table), rels.head).toString).schema
     }
+
+  /** The scan of `rels` of `man` under `schema`, planned from the
+    * manifest alone: file statuses come from the recorded byte sizes, so
+    * there is no per-file status RPC and no listing job however many
+    * files it reads (pre-sizes manifests fall back to one status call
+    * per missing file). The frame carries PHYSICAL names on a
+    * column-mapped table — callers take `_metadata` columns off it
+    * before [[logicalView]] renames.
+    *
+    * PLANNING-TIME zone maps: the scan is built over a custom FileIndex,
+    * so whatever filter Catalyst later pushes down — `.where`, SQL over a
+    * registered view, a join's pushed predicate, the incremental
+    * watermark — skips excluded files at listFiles time with no graft
+    * API involvement ([[readWhere]] remains the eager twin for probes and
+    * explicit predicates). */
+  private def scanRaw(tgt: Catalog, table: String, man: Manifest,
+                      rels: Seq[String],
+                      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val physOf = physOfMan(man)
+    val fsys = fs(tgt, dataDir(tgt, table))
+    val abs = rels.map(r => new Path(dataDir(tgt, table), r))
+    val statuses = rels.zip(abs).map { case (rel, a) =>
+      man.sizes.get(rel) match {
+        case Some(len) => new org.apache.hadoop.fs.FileStatus(
+          len, false, 1, 128L * 1024 * 1024, 0L, fsys.makeQualified(a))
+        case None => fsys.getFileStatus(a)
+      }
+    }
+    val relByAbs = rels.zip(abs).map { case (rel, a) => a.toUri.getPath -> rel }.toMap
+    // COLUMN MAPPING: the scan reads PHYSICAL names (the logical
+    // rename is an alias projection on top), so predicates Catalyst
+    // pushes to the FileIndex arrive physical-named — translate each
+    // leaf back before consulting the LOGICAL manifest stats. The
+    // translation is constant per predicate but the closure runs per
+    // FILE — memoized like bucketsFor below, so a 100k-file listing
+    // rebuilds the tree once, not 100k times.
+    val toLogical = org.apache.spark.sql.graft.ColumnMapping.reverse(physOf)
+    val predCache =
+      new java.util.concurrent.ConcurrentHashMap[ZonePred.P, ZonePred.P]()
+    // bucketsFor is constant per predicate but the closure runs per
+    // FILE — memoize by tree (value equality) so a 100k-file listing
+    // hashes the key once, not 100k times
+    val bucketCache =
+      new java.util.concurrent.ConcurrentHashMap[ZonePred.P, Option[Set[Int]]]()
+    val admits = (absPath: String, p0: ZonePred.P) =>
+      relByAbs.get(absPath) match {
+        case None => true
+        case Some(rel) =>
+          val p =
+            if (toLogical.isEmpty) p0
+            else predCache.computeIfAbsent(p0,
+              org.apache.spark.sql.graft.ColumnMapping.mapZonePred(_, toLogical))
+          bucketCache.computeIfAbsent(p, bucketsFor(man, _)).forall(ks =>
+            bucketOfRel(rel).forall(ks.contains)) &&
+            fileAdmits(man, rel, p)
+      }
+    tgt.spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    org.apache.spark.sql.graft.ZoneMapRead.dataFrame(tgt.spark, statuses,
+      org.apache.spark.sql.graft.ColumnMapping.physSchema(schema, physOf),
+      admits)
   }
+
+  /** A [[scanRaw]] frame under its logical names (`names`: the scan
+    * schema's, plus any columns the caller appended to the raw frame),
+    * TIMESTAMP_NTZ columns normalized to session-zone timestamps. */
+  private def logicalView(raw: DataFrame, names: Seq[String],
+                          physOf: Map[String, String]): DataFrame =
+    ntzToTimestamp(
+      if (physOf.isEmpty) raw
+      else org.apache.spark.sql.graft.ColumnMapping.toLogicalNames(raw, names))
+
+  /** The DV-free read core: `rels` of `man` through the zone-map scan,
+    * under `schema` (default: [[scanSchema]]'s). */
+  private def readVersionClean(tgt: Catalog, table: String, man: Manifest,
+                               rels: Seq[String],
+                               schema: Option[org.apache.spark.sql.types.StructType]
+                                 = None): DataFrame = {
+    val sch = scanSchema(tgt, table, man, rels, schema)
+    logicalView(scanRaw(tgt, table, man, rels, sch), sch.fieldNames.toSeq,
+      physOfMan(man))
+  }
+
+  /** `rels` of `man` with each row's identity: the logical data columns
+    * plus `__graft_fp` (file path) and `__graft_ri` (row position). The
+    * `_metadata` extraction happens on the RAW (physical-named) frame —
+    * the logical rename is a projection that would hide the metadata
+    * column, so it comes last. */
+  private def scanWithIdentity(tgt: Catalog, table: String, man: Manifest,
+                               rels: Seq[String],
+                               schema: org.apache.spark.sql.types.StructType)
+      : DataFrame =
+    logicalView(scanRaw(tgt, table, man, rels, schema)
+      .withColumn("__graft_fp", col("_metadata.file_path"))
+      .withColumn("__graft_ri", col("_metadata.row_index")),
+      schema.fieldNames.toSeq ++ Seq("__graft_fp", "__graft_ri"),
+      physOfMan(man))
 
   /** DESCRIBE HISTORY: one row per retained version, from PURE METADATA
     * (manifests + their commit mtimes — no data I/O): version,
@@ -5169,7 +5238,6 @@ object VersionedTable {
       "live_eq_tombstones", "eq_tombstone_keys")
   }
 
-  /** The shared explicit-file-list read (NTZ normalization included). */
   /** The DV entries that survive when exactly `keep` files carry forward
     * (a rewritten/dropped file's DV dies with it). */
   private def dvCarry(parent: Option[Manifest],
@@ -5179,7 +5247,7 @@ object VersionedTable {
   }
 
   /** Read `rels` of `man`, APPLYING their deletion vectors: clean files
-    * take the plain parquet path untouched; DV'd files read with the
+    * take the plain zone-map scan untouched; DV'd files read with the
     * `_metadata.row_index` column and drop their DV positions through an
     * executor-side sorted-array probe (exact under row-group skipping —
     * the reader stamps true file positions). Every internal rewrite path
@@ -5195,12 +5263,9 @@ object VersionedTable {
   private def readRelsWithDvNoEq(tgt: Catalog, table: String, man: Manifest,
                                  rels: Seq[String],
                                  schema: Option[org.apache.spark.sql.types.StructType]
-                                   = None): DataFrame = {
-    val sch = schema.orElse(recordedSchema(man))
-    val (dirty, clean) = rels.partition(man.dvs.contains)
-    readRelsApplyingSidecars(tgt, table, dirty, clean,
-      dirty.map(r => r -> man.dvs(r)._1).toMap, sch, physOfMan(man))
-  }
+                                   = None): DataFrame =
+    readRelsApplyingSidecars(tgt, table, man, rels,
+      man.dvs.map { case (r, (sidecar, _)) => r -> sidecar }, schema)
 
   // ----------------------------------------------------- equality tombstones
   //
@@ -5899,10 +5964,10 @@ object VersionedTable {
         man.files.map(r => r -> oldStamps.getOrElse(r, newV - 1)).toMap ++
           newRel.map(_ -> newV)
     }
-    val committedMax = footerMaxId(tgt, stagedAbs).map(m => math.max(m, maxId))
-      .orElse(Some(maxId))
-    preCommitHook.value()
     val fm = manifestMeta(tgt, table, headMan, man.files, newParts, out.schema)
+    val committedMax = newFilesMaxId(tgt, table, fm, newRel)
+      .map(m => math.max(m, maxId)).orElse(Some(maxId))
+    preCommitHook.value()
     // UNIQUENESS INDUCTION for the truncation pad ([[EqTombstone.uniq]]):
     // the staged batch is key-distinct iff its row total equals the
     // tombstone's recorded key count — both already-computed metadata
@@ -6020,82 +6085,58 @@ object VersionedTable {
     else p1 + (EqSeqProp -> renderEqSeqs(stamps))
   }
 
-  /** [[readRelsWithDv]] with EXPLICIT sidecars — for positions merged by
-    * an in-flight statement that no manifest records yet (the MOR
-    * CoW-fraction rewrite reads a file's live rows this way). */
-  private def readRelsWithSidecars(tgt: Catalog, table: String,
-                                   rels: Seq[String],
-                                   sidecarByRel: Map[String, String],
-                                   schema: Option[org.apache.spark.sql.types.StructType]
-                                     = None,
-                                   physOf: Map[String, String] = Map.empty)
-      : DataFrame = {
-    val (dirty, clean) = rels.partition(sidecarByRel.contains)
-    readRelsApplyingSidecars(tgt, table, dirty, clean, sidecarByRel, schema,
-      physOf)
-  }
-
-  /** The shared DV-applying read core: sidecars decode EXECUTOR-SIDE
-    * (per-JVM LRU — [[org.apache.spark.sql.graft.DeletionVectors
-    * .readCached]]), so the driver broadcasts only (file → sidecar path)
-    * pointers, never the position arrays — a heavily-deleted file's
-    * vector stays off the driver heap on the rewrite path. */
+  /** Read `rels` of `man`, applying the deletion vectors `sidecarByRel`
+    * names (file → sidecar path). [[readRelsWithDv]] passes the
+    * manifest's own DVs; the MOR CoW-fraction rewrite passes positions
+    * merged by an in-flight statement that no manifest records yet.
+    * Sidecars decode EXECUTOR-SIDE (per-JVM LRU —
+    * [[org.apache.spark.sql.graft.DeletionVectors.readCached]]), so the
+    * driver broadcasts only (file → sidecar path) pointers, never the
+    * position arrays — a heavily-deleted file's vector stays off the
+    * driver heap on the rewrite path. Both sides are [[scanRaw]] scans,
+    * planned from the manifest. */
   private def readRelsApplyingSidecars(
-      tgt: Catalog, table: String,
-      dirty: Seq[String], clean: Seq[String],
+      tgt: Catalog, table: String, man: Manifest, rels: Seq[String],
       sidecarByRel: Map[String, String],
-      sch: Option[org.apache.spark.sql.types.StructType],
-      physOf: Map[String, String] = Map.empty): DataFrame = {
-    def abs(r: String) = new Path(dataDir(tgt, table), r).toString
-    if (dirty.isEmpty) return readFileList(tgt, clean.map(abs), sch, physOf)
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    val sch = scanSchema(tgt, table, man, rels, schema)
+    val (dirty, clean) = rels.partition(sidecarByRel.contains)
+    if (dirty.isEmpty) return readVersionClean(tgt, table, man, clean, Some(sch))
     val live = liveRowUdf(tgt.spark, dirty.map { r =>
-      new Path(abs(r)).toUri.getPath ->
+      new Path(dataDir(tgt, table), r).toUri.getPath ->
         new Path(dataDir(tgt, table), sidecarByRel(r)).toString
     }.toMap)
-    // `_metadata` extraction happens on the RAW (physical-named) frame —
-    // the logical rename is a projection that would hide the metadata
-    // column, so it comes last
-    val dirtyRaw = readFileListRaw(tgt, dirty.map(abs), sch, physOf)
-      .withColumn("__graft_fp", col("_metadata.file_path"))
-      .withColumn("__graft_ri", col("_metadata.row_index"))
+    val dirtyDf = scanWithIdentity(tgt, table, man, dirty, sch)
       .where(live(col("__graft_fp"), col("__graft_ri")))
       .drop("__graft_fp", "__graft_ri")
-    val dirtyDf =
-      if (physOf.isEmpty) dirtyRaw
-      else org.apache.spark.sql.graft.ColumnMapping.toLogicalNames(
-        dirtyRaw, sch.get.fieldNames.toSeq)
     if (clean.isEmpty) dirtyDf
-    else readFileList(tgt, clean.map(abs), sch, physOf).unionByName(dirtyDf)
+    else readVersionClean(tgt, table, man, clean, Some(sch)).unionByName(dirtyDf)
   }
 
-  /** The raw file-list read — PHYSICAL names when `physOf` is set (the
-    * mapped callers restore logical names LAST, after any `_metadata`
-    * extraction: a rename projection would hide the metadata column). */
-  private def readFileListRaw(tgt: Catalog, absFiles: Seq[String],
-                              schema: Option[org.apache.spark.sql.types.StructType],
-                              physOf: Map[String, String]): DataFrame = {
+  /** TIMESTAMP_NTZ columns of `df` as session-zone timestamps (the read
+    * boundary's normalization — see [[readVersion]]). */
+  private def ntzToTimestamp(df: DataFrame): DataFrame =
+    df.schema.fields.collect {
+      case fld if fld.dataType == org.apache.spark.sql.types.TimestampNTZType => fld.name
+    }.foldLeft(df)((d, c) =>
+      d.withColumn(c, col(c).cast(org.apache.spark.sql.types.TimestampType)))
+
+  /** The explicit-file-list read of files no manifest records yet (a
+    * commit's staged batch), under logical names. */
+  private def readFileList(tgt: Catalog, absFiles: Seq[String],
+                           schema: Option[org.apache.spark.sql.types.StructType]
+                             = None,
+                           physOf: Map[String, String] = Map.empty): DataFrame = {
     import org.apache.spark.sql.graft.ColumnMapping
     require(physOf.isEmpty || schema.isDefined,
       "a column-mapped read needs the recorded schema (mapped tables " +
         "always record one — a rename/drop commit writes it)")
     tgt.spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val physSch = schema.map(ColumnMapping.physSchema(_, physOf))
-    val df = physSch.fold(tgt.spark.read)(tgt.spark.read.schema)
-      .parquet(absFiles: _*)
-    df.schema.fields.collect {
-      case fld if fld.dataType == org.apache.spark.sql.types.TimestampNTZType => fld.name
-    }.foldLeft(df)((d, c) =>
-      d.withColumn(c, col(c).cast(org.apache.spark.sql.types.TimestampType)))
-  }
-
-  private def readFileList(tgt: Catalog, absFiles: Seq[String],
-                           schema: Option[org.apache.spark.sql.types.StructType]
-                             = None,
-                           physOf: Map[String, String] = Map.empty): DataFrame = {
-    val raw = readFileListRaw(tgt, absFiles, schema, physOf)
-    if (physOf.isEmpty) raw
-    else org.apache.spark.sql.graft.ColumnMapping.toLogicalNames(
-      raw, schema.get.fieldNames.toSeq)
+    val raw = schema.map(ColumnMapping.physSchema(_, physOf))
+      .fold(tgt.spark.read)(tgt.spark.read.schema).parquet(absFiles: _*)
+    ntzToTimestamp(
+      if (physOf.isEmpty) raw
+      else ColumnMapping.toLogicalNames(raw, schema.get.fieldNames.toSeq))
   }
 
   /** ZONE-MAP FILTERED READ of the head version — see the v-taking
@@ -6129,9 +6170,8 @@ object VersionedTable {
     val (keepRel, _) = pruneByStats(man, pred)
     if (keepRel.isEmpty)
       // every file excluded: an empty frame with the version's schema
-      // (one footer read for the schema — no scan tasks at all)
-      readFileList(tgt, Seq(new Path(dataDir(tgt, table),
-        man.files.head).toString), recordedSchema(man), physOfMan(man))
+      // (planned from the manifest — no scan tasks at all)
+      readVersionClean(tgt, table, man, man.files.take(1))
         .where(lit(false)).where(pred)
     else readRelsWithDv(tgt, table, man, keepRel).where(pred)
   }
@@ -6149,41 +6189,21 @@ object VersionedTable {
   /** BUCKET-PRUNED point lookup at version `v`: on a table bucketed by
     * `keys`, read ONLY the files of the bucket the key tuple hashes into
     * — 1/n of the file list chosen on the DRIVER from the manifest (no
-    * scan tasks for the other buckets at all), then the exact key
-    * predicate on that slice. The versioned twin of
-    * [[Loader.bucketLookup]]. Falls back to a full-scan filter on a flat
-    * table (still pushed down to row-group stats). */
+    * job, no scan tasks for the other buckets at all, see
+    * [[bucketsFor]]), then the exact key predicate on that slice. Zone
+    * maps prune further within the bucket (a key outside a file's
+    * recorded range), and they are the only file-level pruning on a flat
+    * table. A key no file can hold plans as an empty frame: zero jobs.
+    * The versioned twin of [[Loader.bucketLookup]]. */
   def lookup(tgt: Catalog, table: String, v: Long,
              key: Map[String, Any]): DataFrame = {
     val man = readManifest(tgt, table, v).getOrElse(
       throw new IllegalArgumentException(s"table '$table' has no version $v"))
-    val base = readVersion(tgt, table, v)
     val pred = key.map { case (c, x) => col(c) === lit(x) }.reduce(_ && _)
-    man.bucket match {
-      // every file must name its bucket (a flat empty-rewrite file or
-      // pre-migration stray has unknown keys — full filter then)
-      case Some((keys, n)) if keys.forall(key.contains) &&
-          man.files.forall(r => bucketOfRel(r).isDefined) =>
-        // the key's bucket id, computed DRIVER-SIDE with the same
-        // expression writers use (one local job over a 1-row frame — no
-        // reimplementation drift possible)
-        val b = tgt.spark.range(1)
-          .select(keys.map(c => lit(key(c)).cast("string").as(c)): _*)
-          .select(Loader.bucketIdExpr(keys, n)).head().getInt(0)
-        // within the bucket, zone maps prune further (e.g. a lookup key
-        // outside a file's recorded id/key range)
-        val tree = org.apache.spark.sql.graft.ColumnExprBridge.predTree(pred)
-        val inBucket = man.files.filter(r => bucketOfRel(r).contains(b))
-          .filter(r => fileAdmits(man, r, tree))
-        if (inBucket.isEmpty) base.limit(0).where(pred)
-        else readRelsWithDv(tgt, table, man, inBucket).where(pred)
-      case _ =>
-        // flat table: zone maps are the only file-level pruning available
-        val (keepRel, skipped) = pruneByStats(man, pred)
-        if (skipped.isEmpty) base.where(pred)
-        else if (keepRel.isEmpty) base.limit(0).where(pred)
-        else readRelsWithDv(tgt, table, man, keepRel).where(pred)
-    }
+    val (keepRel, skipped) = pruneByStats(man, pred)
+    if (skipped.isEmpty) readVersion(tgt, table, v).where(pred)
+    else if (keepRel.isEmpty) readVersion(tgt, table, v).limit(0).where(pred)
+    else readRelsWithDv(tgt, table, man, keepRel).where(pred)
   }
 
   // ------------------------------------------- streaming CDC partition plan
