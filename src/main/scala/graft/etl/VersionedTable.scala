@@ -597,26 +597,20 @@ object VersionedTable {
   def setPartitionSpec(tgt: Catalog, table: String,
                        spec: Seq[PartTransform],
                        clusterBy: Option[Seq[String]] = None): Long = {
-    commitWithRetry(table, "setPartitionSpec") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
+    commitWithRetry(tgt, table, "setPartitionSpec") { a =>
+      val man = a.man
       val schema = org.apache.spark.sql.types.StructType(
-        readVersion(tgt, table, cur).schema
+        readVersion(tgt, table, a.cur).schema
           .fields.filterNot(_.name.equalsIgnoreCase(Loader.IdCol)))
       validatePartSpec(spec, schema)
-      preCommitHook.value()
       // re-pointing the spec also re-points (or clears) the CLUSTER BY
       // marker — the two record ONE declaration and must never disagree
       val base = man.props - PartitionSpecProp - ClusterByProp
-      if (tryCommitManifest(tgt, table, man.copy(version = cur + 1,
-        props = base ++
-          (if (spec.isEmpty) Map.empty[String, String]
-           else Map(PartitionSpecProp -> partSpecJson(spec))) ++
-          clusterBy.filter(_.nonEmpty)
-            .map(cs => ClusterByProp -> cs.mkString(",")).toMap)))
-        Some(cur + 1)
-      else None
+      a.commit(man.copy(props = base ++
+        (if (spec.isEmpty) Map.empty[String, String]
+         else Map(PartitionSpecProp -> partSpecJson(spec))) ++
+        clusterBy.filter(_.nonEmpty)
+          .map(cs => ClusterByProp -> cs.mkString(",")).toMap))
     }
   }
 
@@ -1325,8 +1319,7 @@ object VersionedTable {
     * so property suites can assert pushdowns VOID (rather than answer
     * wrong) when the metadata they reason over is absent. */
   private[graft] def stripFileMeta(tgt: Catalog, table: String): Unit = {
-    val v = currentVersion(tgt, table).getOrElse(
-      throw new IllegalArgumentException(s"versioned table '$table' not found"))
+    val v = headVersion(tgt, table)
     val m = readManifest(tgt, table, v).get
     val f = fs(tgt, metaDir(tgt, table))
     val mp = manifestPath(tgt, table, v)
@@ -1535,7 +1528,7 @@ object VersionedTable {
     * both unanswerable). */
   def versionAt(tgt: Catalog, table: String, tsMillis: Long): Long = {
     val vs = versions(tgt, table)
-    require(vs.nonEmpty, s"versioned table '$table' not found")
+    if (vs.isEmpty) throw tableNotFound(table)
     vs.reverse.find(v => committedAtMillis(tgt, table, v) <= tsMillis)
       .getOrElse(throw new IllegalArgumentException(
         s"table '$table' has no version committed at or before $tsMillis " +
@@ -1601,14 +1594,19 @@ object VersionedTable {
     * other's protocol. */
   val commitProtocol = new ThreadLocalDynamic[ManifestCommit](FsAtomicCommit)
 
-  /** Attempt to commit a manifest — the optimistic-concurrency CAS.
-    * False when ANOTHER writer committed this version first (the caller
-    * re-reads the head and retries its merge). */
-  private[etl] def tryCommitManifest(tgt: Catalog, table: String, m0: Manifest): Boolean = {
-    // stamp the commit wall-clock INTO the manifest (see [[CommitTsProp]]):
-    // one place, so every commit path — load, delete, rollback, compact,
-    // recluster, clone — carries its own time and TIMESTAMP AS OF
-    // survives mtime-scrambling copies. MONOTONE like Delta's in-commit
+  /** THE manifest CAS — the one place every versioned commit lands.
+    * Fires [[preCommitHook]], then stamps the commit's wall clock
+    * ([[CommitTsProp]]) and its operation label `op` ([[OperationProp]],
+    * `DESCRIBE HISTORY`'s operation column) into `m0` and tries to create
+    * version `m0.version`. False when ANOTHER writer committed that
+    * version first: the caller removes what it staged and reports the
+    * loss — None to [[commitWithRetry]], which re-reads the head and
+    * retries. */
+  private[etl] def tryCommitManifest(tgt: Catalog, table: String, m0: Manifest,
+                                     op: String): Boolean = {
+    preCommitHook.value()
+    // the wall clock rides IN the manifest, so TIMESTAMP AS OF survives
+    // mtime-scrambling copies. MONOTONE like Delta's in-commit
     // timestamps: clamped to parent's + 1, so two writers with skewed
     // clocks can never record history out of order (an inversion would
     // make TIMESTAMP AS OF resolve to a state containing later-recorded
@@ -1619,10 +1617,9 @@ object VersionedTable {
       .flatMap(_.props.get(CommitTsProp))
       .flatMap(s => scala.util.Try(s.toLong).toOption)
     val ts = math.max(commitClock.value(), parentTs.fold(Long.MinValue)(_ + 1L))
+    // stamped HERE so carried parent props can never leak a stale label
     val m = m0.copy(props = m0.props + (CommitTsProp -> ts.toString) +
-      // the commit names its own operation (DESCRIBE HISTORY's column);
-      // stamped HERE so carried parent props can never leak a stale label
-      (OperationProp -> commitOp.value))
+      (OperationProp -> op))
     val f = fs(tgt, metaDir(tgt, table))
     f.mkdirs(new Path(metaDir(tgt, table)))
     // O(changed files) commit bytes: a delta vs the parent is the CAS
@@ -1660,38 +1657,63 @@ object VersionedTable {
     won
   }
 
-  /** Test seam: invoked once per commit attempt, after the attempt's merge
-    * is staged and before its manifest CAS — lets a spec interleave a
-    * competing writer deterministically. Same non-inheriting thread-local
-    * scope as [[commitProtocol]]: a spec's hook can never leak into other
-    * suites, survive a failure inside the block, or ride a pool thread
-    * born inside the scope. */
+  /** Test seam: invoked by [[tryCommitManifest]] before every manifest
+    * CAS — lets a spec interleave a competing writer deterministically.
+    * Same non-inheriting thread-local scope as [[commitProtocol]]: a
+    * spec's hook can never leak into other suites, survive a failure
+    * inside the block, or ride a pool thread born inside the scope. */
   private[etl] val preCommitHook =
     new ThreadLocalDynamic[() => Unit](() => ())
 
   private val MaxCommitRetries = 20
 
-  /** The shared optimistic-retry shell: run `attempt` (stage + CAS; None =
-    * lost the race) until it commits or the retry budget is spent — ONE
-    * copy of the loop for load, delete, and rollback. */
-  /** The OPERATION label the in-flight commit stamps into its manifest
-    * ([[OperationProp]] — `DESCRIBE HISTORY`'s operation column):
-    * [[commitWithRetry]] sets it from its own `what` label, so every
-    * commit path names itself for free; the direct-CAS row-op paths set
-    * it explicitly. */
-  private val commitOp = new scala.util.DynamicVariable[String]("write")
+  /** The refusal every head-requiring entry point gives a missing table. */
+  private def tableNotFound(table: String) =
+    new IllegalArgumentException(s"versioned table '$table' not found")
 
-  private def commitWithRetry(table: String, what: String)
-                             (attempt: () => Option[Long]): Long =
-    commitOp.withValue(what) {
-      var i = 0
-      while (i < MaxCommitRetries) {
-        attempt().foreach(v => return v)
-        i += 1
-      }
-      throw new java.io.IOException(
-        s"versioned $what on '$table' lost the commit race $MaxCommitRetries times")
+  /** The head version of an existing table. */
+  private[graft] def headVersion(tgt: Catalog, table: String): Long =
+    currentVersion(tgt, table).getOrElse(throw tableNotFound(table))
+
+  /** One commit attempt's view of the table, handed out by
+    * [[commitWithRetry]]: the head as read at the start of the attempt
+    * (None: the table does not exist yet) and the CAS under the loop's
+    * operation label. */
+  private final class CommitAttempt(tgt: Catalog, table: String,
+                                    val op: String, val head: Option[Manifest]) {
+    /** The head manifest; a missing table refuses here. */
+    def man: Manifest = head.getOrElse(throw tableNotFound(table))
+    def cur: Long = man.version
+    /** The version this attempt commits: one past the head. */
+    def next: Long = head.fold(0L)(_.version) + 1L
+    /** CAS `m` as version [[next]]: Some(next), or None when another
+      * writer committed first. */
+    def commit(m: Manifest): Option[Long] =
+      if (tryCommitManifest(tgt, table, m.copy(version = next), op)) Some(next)
+      else None
+  }
+
+  /** The optimistic-retry loop every library commit runs through. Each
+    * attempt reads the head once and gets it, with the operation label
+    * `op`, as a [[CommitAttempt]]. The attempt stages its work and
+    * commits through [[CommitAttempt.commit]] (or hands `op` to a
+    * row-op path). It returns the committed version (the current one
+    * for a no-op), or None when it lost the race, after removing what it
+    * staged. A lost race retries against the new head; after
+    * [[MaxCommitRetries]] losses the call fails with an IOException. */
+  private def commitWithRetry(tgt: Catalog, table: String, op: String)
+                             (attempt: CommitAttempt => Option[Long]): Long = {
+    var i = 0
+    while (i < MaxCommitRetries) {
+      val head = currentVersion(tgt, table).map(v =>
+        readManifest(tgt, table, v).getOrElse(throw new IllegalArgumentException(
+          s"table '$table' has no version $v")))
+      attempt(new CommitAttempt(tgt, table, op, head)).foreach(v => return v)
+      i += 1
     }
+    throw new java.io.IOException(
+      s"versioned $op on '$table' lost the commit race $MaxCommitRetries times")
+  }
 
   /** Max of the id column across `absFiles`, from parquet FOOTER column
     * statistics — metadata-only (no row I/O), driver cost O(new files per
@@ -2459,8 +2481,8 @@ object VersionedTable {
     // first — discard the staged files (their ids and merge inputs are
     // stale) and re-merge against the NEW head, so both writers' rows
     // survive as consecutive versions.
-    val v = commitWithRetry(table, "load")(() =>
-      loadAttempt(tgt, table, incoming, upsertFields, idOrder, ensure, safe,
+    val v = commitWithRetry(tgt, table, "load")(a =>
+      loadAttempt(tgt, table, a, incoming, upsertFields, idOrder, ensure, safe,
         bucketBy, extraProps, bloomBy, dropProps))
     maybeAutoCompact(tgt, table)
     v
@@ -2470,7 +2492,8 @@ object VersionedTable {
     * ride the committed manifest's props map ATOMICALLY with the data —
     * the hook idempotent writers (the streaming sink's epoch stamp) hang
     * their dedup state on. */
-  private def loadAttempt(tgt: Catalog, table: String, incoming0: DataFrame,
+  private def loadAttempt(tgt: Catalog, table: String, a: CommitAttempt,
+                          incoming0: DataFrame,
                           upsertFields: Seq[String], idOrder: Seq[String],
                           ensure: Boolean, safe: Boolean,
                           bucketBy: Option[(Seq[String], Int)],
@@ -2478,8 +2501,7 @@ object VersionedTable {
                           bloomBy: Seq[String],
                           dropProps: Seq[String] = Nil): Option[Long] = {
     Loader.ensureParquetWriteConf(tgt.spark)
-    val cur = currentVersion(tgt, table)
-    val headMan = cur.flatMap(v => readManifest(tgt, table, v))
+    val headMan = a.head
     // GENERATED / IDENTITY columns materialize on the INCOMING frame
     // before any merge or staging: computed values land in the written
     // bytes, provided mismatches refuse in-flight (GeneratedCols)
@@ -2515,7 +2537,7 @@ object VersionedTable {
         s"bucketBy key(s) absent from incoming: " +
           keys.filterNot(incoming.columns.contains).mkString(", "))
     }
-    val existing = cur.map(v => readVersion(tgt, table, v))
+    val existing = headMan.map(m => readVersion(tgt, table, m.version))
     val order = if (idOrder.nonEmpty) idOrder else incoming.columns.toSeq
     val maxId: Long = existing match {
       case Some(ex) if ex.columns.contains(Loader.IdCol) =>
@@ -2537,7 +2559,7 @@ object VersionedTable {
         headMan.exists(_.props.get(WriteModeProp).contains(MergeOnRead)) &&
         Loader.sameColumnSet(existing.get, incoming) &&
         !(bucket.isDefined && recorded.isEmpty) && bloomBy.isEmpty)
-      return morUpsertAttempt(tgt, table, cur.get, headMan.get, incoming,
+      return morUpsertAttempt(tgt, table, a, incoming,
         upsertFields, order, maxId, extraProps, dropProps)
 
     // bucket-scoped upsert: recorded bucket layout + keys covered by the
@@ -2619,7 +2641,6 @@ object VersionedTable {
       }
     }
     val newRel = newParts.map(_._1)
-    val newV = cur.getOrElse(0L) + 1L
     val newAbs = newRel.map(r => new Path(dataDir(tgt, table), r).toString)
     val fm = manifestMeta(tgt, table, headMan, carryRel, newParts, out.schema)
     // the committed version's max id, from the new files' footer stats
@@ -2630,8 +2651,7 @@ object VersionedTable {
     // by retained older versions; reissuing it would corrupt audit joins)
     val committedMax = newFilesMaxId(tgt, table, fm, newRel)
       .map(m => math.max(m, maxId))
-    preCommitHook.value()
-    if (tryCommitManifest(tgt, table,
+    a.commit(
       { // a keyed load RECORDS its keys ([[UpsertKeysProp]]); appends
         // carry the recorded keys forward untouched, a keyed load with
         // different keys overwrites (latest declaration wins)
@@ -2672,12 +2692,10 @@ object VersionedTable {
         // fully materialized by the rewrite (the read applied it) and
         // must NOT ride forward as live-looking props (it would keep
         // CDC/clone/rename refusing forever over nothing)
-        Manifest(newV, committedMax, bucket, carryRel ++ newRel,
+        Manifest(a.next, committedMax, bucket, carryRel ++ newRel,
           fm.stats, fm.sizes, fm.nulls, fm.rows,
           pruneEqProps(props, carryRel ++ newRel),
-          dvCarry(headMan, carryRel)) }))
-      Some(newV)
-    else {
+          dvCarry(headMan, carryRel)) }).orElse {
       // lost the race: the staged batch references a superseded head —
       // remove it (a crash before this delete leaves unreachable files for
       // vacuum, same as any crashed commit)
@@ -2700,11 +2718,9 @@ object VersionedTable {
     require(newFields.nonEmpty, "widenSchema needs at least one new column")
     require(newFields.map(_.name.toLowerCase).distinct.size == newFields.size,
       "widenSchema: duplicate names among the added columns")
-    commitWithRetry(table, "widenSchema") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
-      val current = readVersion(tgt, table, cur).schema
+    commitWithRetry(tgt, table, "widenSchema") { a =>
+      val man = a.man
+      val current = readVersion(tgt, table, a.cur).schema
       val names = current.fieldNames.map(_.toLowerCase).toSet
       newFields.foreach { f =>
         require(!f.name.equalsIgnoreCase(Loader.IdCol),
@@ -2721,12 +2737,9 @@ object VersionedTable {
       // mapped physical) gets a fresh in-file name — the metadata-only
       // widen must not alias old bytes back to life
       val physOf = extendMapping(Some(man), widened)
-      preCommitHook.value()
-      if (tryCommitManifest(tgt, table, man.copy(version = cur + 1,
-        props = withMappingProps(
-          man.props + (SchemaProp -> schemaJson(widened)),
-          physOf, retiredOf(man))))) Some(cur + 1)
-      else None
+      a.commit(man.copy(props = withMappingProps(
+        man.props + (SchemaProp -> schemaJson(widened)),
+        physOf, retiredOf(man))))
     }
   }
 
@@ -2795,11 +2808,9 @@ object VersionedTable {
   def renameColumn(tgt: Catalog, table: String, from: String,
                    to: String): Long = {
     require(from != to, s"rename to the same name: '$from'")
-    commitWithRetry(table, "renameColumn") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
-      val current = readVersion(tgt, table, cur).schema
+    commitWithRetry(tgt, table, "renameColumn") { a =>
+      val man = a.man
+      val current = readVersion(tgt, table, a.cur).schema
       require(current.fieldNames.exists(_.equalsIgnoreCase(from)),
         s"no column '$from' on '$table'")
       require(!current.fieldNames.exists(_.equalsIgnoreCase(to)),
@@ -2826,13 +2837,11 @@ object VersionedTable {
       def rekey[A](m: Map[String, Map[String, A]]) = m.map { case (rel, cols) =>
         rel -> cols.map { case (c, v) => (if (c == exact) to else c) -> v }
       }
-      preCommitHook.value()
-      if (tryCommitManifest(tgt, table, man.copy(version = cur + 1,
+      a.commit(man.copy(
         stats = rekey(man.stats), nulls = rekey(man.nulls),
         props = withMappingProps(
           man.props + (SchemaProp -> schemaJson(renamed)),
-          physOf, retiredOf(man))))) Some(cur + 1)
-      else None
+          physOf, retiredOf(man))))
     }
   }
 
@@ -2892,12 +2901,10 @@ object VersionedTable {
       .foreach(k => sets.get(k).foreach(s => require(
         scala.util.Try(s.toLong).toOption.exists(_ > 0),
         s"$k must be a positive long, got '$s'")))
-    commitWithRetry(table, "setTableProps") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
+    commitWithRetry(tgt, table, "setTableProps") { a =>
+      val man = a.man
       sets.get(BloomColsProp).foreach { cs =>
-        val have = readVersion(tgt, table, cur).columns.toSet
+        val have = readVersion(tgt, table, a.cur).columns.toSet
         val missing = cs.split(",").map(_.trim).filter(_.nonEmpty)
           .filterNot(have.contains)
         require(missing.isEmpty,
@@ -2909,7 +2916,7 @@ object VersionedTable {
       sets.get(ClusterLayoutProp).foreach { _ =>
         validateClusterLayout(sets, clusterByOf(man.props),
           org.apache.spark.sql.types.StructType(
-            readVersion(tgt, table, cur).schema.fields
+            readVersion(tgt, table, a.cur).schema.fields
               .filterNot(_.name.equalsIgnoreCase(Loader.IdCol))))
       }
       // a NEW or CHANGED check gets the full eager discipline
@@ -2923,14 +2930,11 @@ object VersionedTable {
           // validation runs against the declared schema (no id), so a
           // check referencing the engine column must refuse identically
           // from every entry point
-          val frame = readVersion(tgt, table, cur).drop(Loader.IdCol)
+          val frame = readVersion(tgt, table, a.cur).drop(Loader.IdCol)
           validateCheckSql(tgt.spark, frame.schema, c)
           enforceCheck(frame, c, table)
         }
-      preCommitHook.value()
-      if (tryCommitManifest(tgt, table, man.copy(version = cur + 1,
-        props = (man.props ++ sets) -- unsets))) Some(cur + 1)
-      else None
+      a.commit(man.copy(props = (man.props ++ sets) -- unsets))
     }
   }
 
@@ -2950,24 +2954,18 @@ object VersionedTable {
     require(!name.equalsIgnoreCase("check"),
       "constraint name 'check' is reserved for the legacy TBLPROPERTIES " +
         "check — pick another name (or use SET TBLPROPERTIES('check'=...))")
-    commitWithRetry(table, "addCheckConstraint") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
+    commitWithRetry(tgt, table, "addCheckConstraint") { a =>
+      val man = a.man
       val existing = namedChecks(man.props)
       require(!existing.contains(name),
         s"constraint '$name' already exists on '$table' " +
           s"(${existing(name)}) — DROP it first")
       // same no-surrogate-id discipline as CREATE and SET TBLPROPERTIES
-      val frame = readVersion(tgt, table, cur).drop(Loader.IdCol)
+      val frame = readVersion(tgt, table, a.cur).drop(Loader.IdCol)
       validateCheckSql(tgt.spark, frame.schema, sql)
       enforceCheck(frame, sql, table)
-      preCommitHook.value()
-      if (tryCommitManifest(tgt, table, man.copy(version = cur + 1,
-        props = man.props +
-          (CheckConstraintsProp -> namedChecksJson(existing + (name -> sql))))))
-        Some(cur + 1)
-      else None
+      a.commit(man.copy(props = man.props +
+        (CheckConstraintsProp -> namedChecksJson(existing + (name -> sql)))))
     }
   }
 
@@ -2975,26 +2973,20 @@ object VersionedTable {
     * the named CHECK; unknown names refuse unless `ifExists`. */
   def dropCheckConstraint(tgt: Catalog, table: String, name: String,
                           ifExists: Boolean = false): Long = {
-    commitWithRetry(table, "dropCheckConstraint") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
+    commitWithRetry(tgt, table, "dropCheckConstraint") { a =>
+      val man = a.man
       val existing = namedChecks(man.props)
       if (!existing.contains(name)) {
         if (!ifExists) throw new IllegalArgumentException(
           s"no constraint '$name' on '$table' " +
             s"(have: ${existing.keys.toSeq.sorted.mkString(", ")})")
-        Some(cur) // IF EXISTS no-op: nothing to commit
+        Some(a.cur) // IF EXISTS no-op: nothing to commit
       } else {
         val remaining = existing - name
-        preCommitHook.value()
-        if (tryCommitManifest(tgt, table, man.copy(version = cur + 1,
-          props =
-            if (remaining.isEmpty) man.props - CheckConstraintsProp
-            else man.props +
-              (CheckConstraintsProp -> namedChecksJson(remaining)))))
-          Some(cur + 1)
-        else None
+        a.commit(man.copy(props =
+          if (remaining.isEmpty) man.props - CheckConstraintsProp
+          else man.props +
+            (CheckConstraintsProp -> namedChecksJson(remaining))))
       }
     }
   }
@@ -3007,11 +2999,9 @@ object VersionedTable {
   def setColumnDefault(tgt: Catalog, table: String, name: String,
                        sqlOrNull: String): Long = {
     val normalized = Option(sqlOrNull).map(_.trim).filter(_.nonEmpty).orNull
-    commitWithRetry(table, "setColumnDefault") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
-      val current = readVersion(tgt, table, cur).schema
+    commitWithRetry(tgt, table, "setColumnDefault") { a =>
+      val man = a.man
+      val current = readVersion(tgt, table, a.cur).schema
       require(current.fieldNames.exists(_.equalsIgnoreCase(name)),
         s"no column '$name' on '$table'")
       require(!name.equalsIgnoreCase(Loader.IdCol),
@@ -3024,10 +3014,7 @@ object VersionedTable {
           org.apache.spark.sql.graft.DefaultColumns
             .fieldWithCurrentDefault(f, normalized)
         else f))
-      preCommitHook.value()
-      if (tryCommitManifest(tgt, table, man.copy(version = cur + 1,
-        props = man.props + (SchemaProp -> schemaJson(updated))))) Some(cur + 1)
-      else None
+      a.commit(man.copy(props = man.props + (SchemaProp -> schemaJson(updated))))
     }
   }
 
@@ -3036,20 +3023,15 @@ object VersionedTable {
     * surfaces through DESCRIBE. */
   def setColumnComment(tgt: Catalog, table: String, name: String,
                        comment: String): Long = {
-    commitWithRetry(table, "setColumnComment") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
-      val current = readVersion(tgt, table, cur).schema
+    commitWithRetry(tgt, table, "setColumnComment") { a =>
+      val man = a.man
+      val current = readVersion(tgt, table, a.cur).schema
       require(current.fieldNames.exists(_.equalsIgnoreCase(name)),
         s"no column '$name' on '$table'")
       val exact = current.fieldNames.find(_.equalsIgnoreCase(name)).get
       val updated = org.apache.spark.sql.types.StructType(current.fields.map(f =>
         if (f.name == exact) f.withComment(comment) else f))
-      preCommitHook.value()
-      if (tryCommitManifest(tgt, table, man.copy(version = cur + 1,
-        props = man.props + (SchemaProp -> schemaJson(updated))))) Some(cur + 1)
-      else None
+      a.commit(man.copy(props = man.props + (SchemaProp -> schemaJson(updated))))
     }
   }
 
@@ -3127,16 +3109,14 @@ object VersionedTable {
     * (they would re-interpret committed bytes). */
   def widenColumnType(tgt: Catalog, table: String, name: String,
                       newType: org.apache.spark.sql.types.DataType): Long = {
-    commitWithRetry(table, "widenColumnType") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
-      val current = readVersion(tgt, table, cur).schema
+    commitWithRetry(tgt, table, "widenColumnType") { a =>
+      val man = a.man
+      val current = readVersion(tgt, table, a.cur).schema
       require(current.fieldNames.exists(_.equalsIgnoreCase(name)),
         s"no column '$name' on '$table'")
       val exact = current.fieldNames.find(_.equalsIgnoreCase(name)).get
       val from = current(exact).dataType
-      if (from == newType) Some(cur) // no-op
+      if (from == newType) Some(a.cur) // no-op
       else {
         require(isWidenable(from, newType),
           s"cannot change '$name' from ${from.simpleString} to " +
@@ -3155,12 +3135,8 @@ object VersionedTable {
         val stats =
           if (!crossed) man.stats
           else man.stats.map { case (rel, cols) => rel -> (cols - exact) }
-        preCommitHook.value()
-        if (tryCommitManifest(tgt, table, man.copy(version = cur + 1,
-          stats = stats,
-          props = man.props + (SchemaProp -> schemaJson(updated)))))
-          Some(cur + 1)
-        else None
+        a.commit(man.copy(stats = stats,
+          props = man.props + (SchemaProp -> schemaJson(updated))))
       }
     }
   }
@@ -3183,14 +3159,12 @@ object VersionedTable {
     * leaves the table untouched instead of half-altered. */
   def dropColumns(tgt: Catalog, table: String, names: Seq[String]): Long = {
     require(names.nonEmpty, "dropColumns needs at least one column")
-    commitWithRetry(table, "dropColumn") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
+    commitWithRetry(tgt, table, "dropColumn") { a =>
+      val man = a.man
       // same matrix as the rename: tombstone KEY columns refuse (the
       // anti-join would dangle), VALUE columns drop metadata-only
       val eqKeys = eqTombstonesOf(man.props).flatMap(_.keys).distinct
-      val current = readVersion(tgt, table, cur).schema
+      val current = readVersion(tgt, table, a.cur).schema
       val exacts = names.map { name =>
         require(current.fieldNames.exists(_.equalsIgnoreCase(name)),
           s"no column '$name' on '$table'")
@@ -3216,13 +3190,11 @@ object VersionedTable {
       def strip[A](m: Map[String, Map[String, A]]) = m.map { case (rel, cols) =>
         rel -> (cols -- gone)
       }
-      preCommitHook.value()
-      if (tryCommitManifest(tgt, table, man.copy(version = cur + 1,
+      a.commit(man.copy(
         stats = strip(man.stats), nulls = strip(man.nulls),
         props = withMappingProps(
           man.props + (SchemaProp -> schemaJson(narrowed)),
-          physOf, retired)))) Some(cur + 1)
-      else None
+          physOf, retired)))
     }
   }
 
@@ -3244,9 +3216,8 @@ object VersionedTable {
                                 incoming0: DataFrame,
                                 extraProps: Map[String, String]): Long = {
     Loader.ensureParquetWriteConf(tgt.spark)
-    commitWithRetry(table, "replaceAll") { () =>
-      val cur = currentVersion(tgt, table)
-      val headMan = cur.flatMap(readManifest(tgt, table, _))
+    commitWithRetry(tgt, table, "replaceAll") { a =>
+      val headMan = a.head
       val floor = headMan.flatMap(_.maxId).getOrElse(0L)
       val incoming = if (incoming0.columns.contains(Loader.IdCol))
         incoming0.drop(Loader.IdCol) else incoming0
@@ -3267,13 +3238,9 @@ object VersionedTable {
       val fm = manifestMeta(tgt, table, None, Nil, newParts, out.schema)
       val committedMax = newFilesMaxId(tgt, table, fm, newRel)
         .map(math.max(_, floor)).orElse(headMan.flatMap(_.maxId))
-      preCommitHook.value()
-      if (tryCommitManifest(tgt, table,
-        Manifest(cur.getOrElse(0L) + 1, committedMax, None, newRel,
-          fm.stats, fm.sizes, fm.nulls, fm.rows,
-          extraProps + (SchemaProp -> schemaJson(out.schema)))))
-        Some(cur.getOrElse(0L) + 1)
-      else {
+      a.commit(Manifest(a.next, committedMax, None, newRel,
+        fm.stats, fm.sizes, fm.nulls, fm.rows,
+        extraProps + (SchemaProp -> schemaJson(out.schema)))).orElse {
         fs(tgt, dataDir(tgt, table)).delete(batch, true)
         None
       }
@@ -3293,11 +3260,8 @@ object VersionedTable {
   private[graft] def replaceContents(tgt: Catalog, table: String,
                                      incoming0: DataFrame): Long = {
     Loader.ensureParquetWriteConf(tgt.spark)
-    commitWithRetry(table, "replaceContents") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(
-          s"INSERT OVERWRITE: versioned table '$table' not found"))
-      val headMan = readManifest(tgt, table, cur).get
+    commitWithRetry(tgt, table, "replaceContents") { a =>
+      val headMan = a.man
       val floor = headMan.maxId.getOrElse(0L)
       val incoming = prepareDeclaredColumns(tgt, table, Some(headMan),
         if (incoming0.columns.contains(Loader.IdCol))
@@ -3334,15 +3298,14 @@ object VersionedTable {
         out.schema)
       val committedMax = newFilesMaxId(tgt, table, fm, newRel)
         .map(math.max(_, floor)).orElse(headMan.maxId)
-      preCommitHook.value()
       // the staged files were written under `physOf` — the commit must
       // record that SAME mapping (extendMapping can assign a FRESH
       // physical when the overwrite frame re-adds a retired name via the
       // path-based acceptAnySchema writer); committing headMan.props
       // verbatim would strand such a column's bytes under a name the
       // manifest never learns
-      if (tryCommitManifest(tgt, table,
-        Manifest(cur + 1, committedMax, headMan.bucket, newRel,
+      a.commit(
+        Manifest(a.next, committedMax, headMan.bucket, newRel,
           fm.stats, fm.sizes, fm.nulls, fm.rows,
           // an overwrite replaces EVERY file, so any live equality
           // tombstone becomes inert — prune it (its refusal matrix
@@ -3352,9 +3315,7 @@ object VersionedTable {
           withMappingProps(pruneEqProps(headMan.props - EqLiveUniqueProp,
             newRel) +
             (SchemaProp -> schemaJson(carryFieldMetadata(Some(headMan),
-              out.schema))), physOf, retiredOf(headMan)))))
-        Some(cur + 1)
-      else {
+              out.schema))), physOf, retiredOf(headMan)))).orElse {
         fs(tgt, dataDir(tgt, table)).delete(batch, true)
         None
       }
@@ -3374,15 +3335,14 @@ object VersionedTable {
     *
     * CONFLICTS are refused, not merged: the replacement was derived from
     * `expectedVersion`'s state, so if another writer committed first the
-    * CAS fails and the caller gets a ConcurrentModificationException —
-    * retry the STATEMENT (Delta/Iceberg semantics), because re-merging
-    * rows Spark already materialized would apply a stale condition. */
+    * CAS fails, the staged batch is removed and the result is None — the
+    * SQL caller refuses with [[rowOpConflict]]. The commit is labelled
+    * `op`. */
   private[graft] def replaceScanned(tgt: Catalog, table: String,
-                                    expectedVersion: Long,
+                                    expectedVersion: Long, op: String,
                                     removedAbs: Set[String],
                                     replacement0: DataFrame,
-                                    idOrder: Seq[String]): Long =
-    commitOp.withValue("row-op (copy-on-write)") {
+                                    idOrder: Seq[String]): Option[Long] = {
     Loader.ensureParquetWriteConf(tgt.spark)
     val headMan = readManifest(tgt, table, expectedVersion).getOrElse(
       throw new IllegalArgumentException(
@@ -3428,7 +3388,6 @@ object VersionedTable {
     // `floor` here would reissue the ids just stamped above it
     val committedMax = newFilesMaxId(tgt, table, fm, newRel)
       .map(math.max(_, floor))
-    preCommitHook.value()
     if (tryCommitManifest(tgt, table,
       Manifest(expectedVersion + 1, committedMax, headMan.bucket,
         keepRel ++ newRel, fm.stats, fm.sizes, fm.nulls, fm.rows,
@@ -3438,17 +3397,25 @@ object VersionedTable {
         // live-uniqueness invariant drops ([[EqLiveUniqueProp]])
         pruneEqProps(headMan.props - EqLiveUniqueProp, keepRel) +
           (SchemaProp -> schemaJson(carryFieldMetadata(Some(headMan), out.schema))),
-        dvCarry(Some(headMan), keepRel)))) {
+        dvCarry(Some(headMan), keepRel)), op)) {
       maybeAutoCompact(tgt, table)
-      expectedVersion + 1
+      Some(expectedVersion + 1)
     } else {
       fs(tgt, dataDir(tgt, table)).delete(batch, true)
-      throw new java.util.ConcurrentModificationException(
-        s"row-level operation on '$table' was derived from version " +
-          s"$expectedVersion but another writer committed first — " +
-          "retry the statement against the new head")
+      None
     }
-    }
+  }
+
+  /** The SQL row-level operations' refusal of a lost race
+    * ([[replaceScanned]] / [[applyRowDeltas]] returned None): their rows
+    * were derived from `expectedVersion`'s state, and re-merging rows
+    * Spark already materialized would apply a stale condition — the
+    * STATEMENT retries (Delta/Iceberg semantics). */
+  private[graft] def rowOpConflict(table: String, expectedVersion: Long) =
+    new java.util.ConcurrentModificationException(
+      s"row-level operation on '$table' was derived from version " +
+        s"$expectedVersion but another writer committed first — " +
+        "retry the statement against the new head")
 
   /** MERGE-ON-READ ROW-LEVEL COMMIT — the primitive under SQL
     * UPDATE/MERGE/DELETE on a `merge-on-read` table (Spark's delta-based
@@ -3472,10 +3439,11 @@ object VersionedTable {
     *   - otherwise → one merged DV sidecar, the file carried verbatim.
     * Untouched files always carry verbatim: a 1-row UPDATE on a 100 TB
     * table commits O(row + DV) bytes. Same conflict rule as
-    * [[replaceScanned]]: derived from `expectedVersion`, CAS failure
-    * refuses with ConcurrentModificationException (retry the STATEMENT). */
+    * [[replaceScanned]]: derived from `expectedVersion`, a lost CAS
+    * removes everything staged and returns None. The commit is labelled
+    * `op` (the SQL label, or the library caller's own). */
   private[graft] def applyRowDeltas(tgt: Catalog, table: String,
-                                    expectedVersion: Long,
+                                    expectedVersion: Long, op: String,
                                     deletes: Map[String, Seq[String]],
                                     stagedFiles: Seq[String],
                                     idOrder: Seq[String],
@@ -3489,13 +3457,7 @@ object VersionedTable {
                                     // manifest's props (upsert-key
                                     // recording etc.)
                                     propsDelta: Map[String, String] = Map.empty,
-                                    dropProps: Seq[String] = Nil): Long =
-    // label the commit when reached DIRECTLY from the SQL delta ops;
-    // library paths (delete/deleteKeys/load) arrive under their own
-    // commitWithRetry label and keep it
-    commitOp.withValue(
-      if (commitOp.value == "write") "row-op (merge-on-read)"
-      else commitOp.value) {
+                                    dropProps: Seq[String] = Nil): Option[Long] = {
     Loader.ensureParquetWriteConf(tgt.spark)
     val headMan = readManifest(tgt, table, expectedVersion).getOrElse(
       throw new IllegalArgumentException(
@@ -3694,7 +3656,6 @@ object VersionedTable {
       if (stagedRel.isEmpty) floor0
       else newFilesMaxId(tgt, table, fm, stagedRel)
         .map(m => math.max(m, floor0.getOrElse(0L))).orElse(floor0)
-    preCommitHook.value()
     // [[EqLiveUniqueProp]]: inserted/modified rows (MOR upsert merges,
     // MERGE inserts, UPDATE rewrites) may introduce duplicate keys —
     // the uniqueness invariant drops; a pure delete (DV-only) only
@@ -3709,20 +3670,18 @@ object VersionedTable {
       Manifest(expectedVersion + 1, committedMax, headMan.bucket,
         keepSafe ++ newRel, fm.stats, fm.sizes, fm.nulls, fm.rows,
         pruneEqProps(propsAfter, keepSafe ++ newRel),
-        (dvCarry(Some(headMan), keepSafe) ++ newDvs) -- goneSafe -- newRel))) {
+        (dvCarry(Some(headMan), keepSafe) ++ newDvs) -- goneSafe -- newRel),
+      op)) {
       // rewritten files' merged sidecars were commit-transient: nothing
       // references them now (best-effort — vacuum sweeps leftovers)
       cleanupSidecars(rewriteDvs.values.map(_._1))
       maybeAutoCompact(tgt, table)
-      expectedVersion + 1
+      Some(expectedVersion + 1)
     } else {
       cleanupAll()
-      throw new java.util.ConcurrentModificationException(
-        s"row-level operation on '$table' was derived from version " +
-          s"$expectedVersion but another writer committed first — " +
-          "retry the statement against the new head")
+      None
     }
-    }
+  }
 
   // ------------------------------------------------------------------ delete
 
@@ -3756,21 +3715,16 @@ object VersionedTable {
   def delete(tgt: Catalog, table: String, cond: org.apache.spark.sql.Column): Long = {
     Loader.ensureParquetWriteConf(tgt.spark)
     if (isMergeOnRead(tgt, table))
-      return commitWithRetry(table, "delete") { () =>
-        // head state re-read each attempt (stale after a lost race)
-        val cur = currentVersion(tgt, table).getOrElse(
-          throw new IllegalArgumentException(s"versioned table '$table' not found"))
-        val man = readManifest(tgt, table, cur).get
+      return commitWithRetry(tgt, table, "delete") { a =>
+        val man = a.man
         val tree = org.apache.spark.sql.graft.ColumnExprBridge.predTree(cond)
         val (candRel0, _) = pruneByStats(man, cond)
         val dropped = candRel0.filter(r => fileCovered(man, r, tree)).toSet
-        deleteMorAttempt(tgt, table, cur, man, _.where(cond),
+        deleteMorAttempt(tgt, table, a, _.where(cond),
           candRel0.filterNot(dropped), dropped)
       }
-    val committed = commitWithRetry(table, "delete") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
+    val committed = commitWithRetry(tgt, table, "delete") { a =>
+      val man = a.man
       def absOf(rel: String) = new Path(dataDir(tgt, table), rel).toUri.getPath
       val tree = org.apache.spark.sql.graft.ColumnExprBridge.predTree(cond)
       // three-way split, all driver-side metadata: files provably ALL
@@ -3795,24 +3749,18 @@ object VersionedTable {
           .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
       val (hitRel, keepRel) = man.files.filterNot(dropped)
         .partition(r => hit.contains(absOf(r)))
-      preCommitHook.value()
-      val newV = cur + 1L
-      if (hitRel.isEmpty && dropped.isEmpty) {
+      if (hitRel.isEmpty && dropped.isEmpty)
         // nothing matches: the delete is recorded without touching a byte
-        if (tryCommitManifest(tgt, table,
-          man.copy(version = newV))) Some(newV)
-        else None
-      } else if (hitRel.isEmpty && keepRel.nonEmpty) {
+        a.commit(man)
+      else if (hitRel.isEmpty && keepRel.nonEmpty) {
         // METADATA-ONLY delete: every matching file was fully covered —
         // commit the survivors' manifest without reading a byte
-        if (tryCommitManifest(tgt, table,
-          { val fm = manifestMeta(tgt, table, Some(man), keepRel, Nil,
-              org.apache.spark.sql.types.StructType(Nil))
-            Manifest(newV, man.maxId, man.bucket, keepRel,
-              fm.stats, fm.sizes, fm.nulls, fm.rows,
-              pruneEqProps(man.props, keepRel),
-              dvCarry(Some(man), keepRel)) })) Some(newV)
-        else None
+        val fm = manifestMeta(tgt, table, Some(man), keepRel, Nil,
+          org.apache.spark.sql.types.StructType(Nil))
+        a.commit(Manifest(a.next, man.maxId, man.bucket, keepRel,
+          fm.stats, fm.sizes, fm.nulls, fm.rows,
+          pruneEqProps(man.props, keepRel),
+          dvCarry(Some(man), keepRel)))
       } else {
         // partial rewrite; when EVERYTHING matched (hitRel empty AND
         // keepRel empty) the empty-survivors write keeps the schema alive
@@ -3831,14 +3779,12 @@ object VersionedTable {
         val keepAbs = (keepRel ++ newRel).map(r =>
           new Path(dataDir(tgt, table), r).toString)
         val maxId = man.maxId.orElse(footerMaxId(tgt, keepAbs))
-        if (tryCommitManifest(tgt, table,
-          { val fm = manifestMeta(tgt, table, Some(man), keepRel, newParts,
-              survivors.schema)
-            Manifest(newV, maxId, man.bucket, keepRel ++ newRel,
-              fm.stats, fm.sizes, fm.nulls, fm.rows,
-              pruneEqProps(man.props, keepRel ++ newRel),
-              dvCarry(Some(man), keepRel)) })) Some(newV)
-        else {
+        val fm = manifestMeta(tgt, table, Some(man), keepRel, newParts,
+          survivors.schema)
+        a.commit(Manifest(a.next, maxId, man.bucket, keepRel ++ newRel,
+          fm.stats, fm.sizes, fm.nulls, fm.rows,
+          pruneEqProps(man.props, keepRel ++ newRel),
+          dvCarry(Some(man), keepRel))).orElse {
           fs(tgt, dataDir(tgt, table)).delete(batch, true)
           None
         }
@@ -3886,16 +3832,14 @@ object VersionedTable {
       }.toOption // empty frame / un-lit-able key type: no pruning
     }
     try {
-      val committed = commitWithRetry(table, "deleteKeys") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
+      val committed = commitWithRetry(tgt, table, "deleteKeys") { a =>
+      val man = a.man
       def absOf(rel: String) = new Path(dataDir(tgt, table), rel).toUri.getPath
       val candRel = envelope.map(p => pruneByStats(man, p)._1).getOrElse(man.files)
       if (man.props.get(WriteModeProp).contains(MergeOnRead))
         // merge-on-read: victims become DV positions (fragments written
         // executor-side); no file rewrites below dv_max_fraction
-        deleteMorAttempt(tgt, table, cur, man,
+        deleteMorAttempt(tgt, table, a,
           _.join(kr, keys, "left_semi"), candRel, Set.empty)
       else {
       // input_file_name() must bind on the SCAN side — above a join it is
@@ -3912,13 +3856,8 @@ object VersionedTable {
           .select(col("__f")).distinct()
           .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
       val (hitRel, keepRel) = man.files.partition(r => hit.contains(absOf(r)))
-      preCommitHook.value()
-      val newV = cur + 1L
-      if (hitRel.isEmpty) {
-        if (tryCommitManifest(tgt, table,
-          man.copy(version = newV))) Some(newV)
-        else None
-      } else {
+      if (hitRel.isEmpty) a.commit(man)
+      else {
         val survivors = readRelsWithDv(tgt, table, man, hitRel)
           .join(kr, keys, "left_anti")
         val (batch, newParts) = writeBatch(tgt, table, survivors, man.bucket,
@@ -3928,14 +3867,12 @@ object VersionedTable {
         val keepAbs = (keepRel ++ newRel).map(r =>
           new Path(dataDir(tgt, table), r).toString)
         val maxId = man.maxId.orElse(footerMaxId(tgt, keepAbs))
-        if (tryCommitManifest(tgt, table,
-          { val fm = manifestMeta(tgt, table, Some(man), keepRel, newParts,
-              survivors.schema)
-            Manifest(newV, maxId, man.bucket, keepRel ++ newRel,
-              fm.stats, fm.sizes, fm.nulls, fm.rows,
-              pruneEqProps(man.props, keepRel ++ newRel),
-              dvCarry(Some(man), keepRel)) })) Some(newV)
-        else {
+        val fm = manifestMeta(tgt, table, Some(man), keepRel, newParts,
+          survivors.schema)
+        a.commit(Manifest(a.next, maxId, man.bucket, keepRel ++ newRel,
+          fm.stats, fm.sizes, fm.nulls, fm.rows,
+          pruneEqProps(man.props, keepRel ++ newRel),
+          dvCarry(Some(man), keepRel))).orElse {
           fs(tgt, dataDir(tgt, table)).delete(batch, true)
           None
         }
@@ -3960,11 +3897,11 @@ object VersionedTable {
     * fallback). `dropWhole` carries the zone-map-proven fully-covered
     * files, dropped metadata-only without being scanned. None on a lost
     * CAS race — the caller's retry loop recomputes against the new head. */
-  private def deleteMorAttempt(tgt: Catalog, table: String,
-                               cur: Long, man: Manifest,
+  private def deleteMorAttempt(tgt: Catalog, table: String, a: CommitAttempt,
                                matchedOf: DataFrame => DataFrame,
                                candRel: Seq[String],
                                dropWhole: Set[String]): Option[Long] = {
+    val man = a.man
     val stage = s"${tgt.dirPath(table)}.__vstage/mor-del-${java.util.UUID.randomUUID()}"
     val f = fs(tgt, dataDir(tgt, table))
     try {
@@ -3980,16 +3917,10 @@ object VersionedTable {
             matchedOf(probe).select(col("__graft_fp"), col("__graft_ri")),
             stage)
         }
-      if (frags.isEmpty && dropWhole.isEmpty) {
+      if (frags.isEmpty && dropWhole.isEmpty)
         // nothing matched: the delete is recorded without touching a byte
-        preCommitHook.value()
-        if (tryCommitManifest(tgt, table, man.copy(version = cur + 1L)))
-          Some(cur + 1L)
-        else None
-      } else {
-        try Some(applyRowDeltas(tgt, table, cur, frags, Nil, Nil, dropWhole))
-        catch { case _: java.util.ConcurrentModificationException => None }
-      }
+        a.commit(man)
+      else applyRowDeltas(tgt, table, a.cur, a.op, frags, Nil, Nil, dropWhole)
     } finally {
       try { val p = new Path(stage); if (f.exists(p)) f.delete(p, true) }
       catch { case _: java.io.IOException => () }
@@ -4062,13 +3993,13 @@ object VersionedTable {
     * commit is O(matched + incoming + DV) regardless of table size.
     * Requires an unchanged column set (schema evolution falls back to
     * the copy-on-write path in [[loadAttempt]]). None = lost the CAS. */
-  private def morUpsertAttempt(tgt: Catalog, table: String,
-                               cur: Long, man: Manifest,
+  private def morUpsertAttempt(tgt: Catalog, table: String, a: CommitAttempt,
                                incoming: DataFrame, keys: Seq[String],
                                order: Seq[String], floor: Long,
                                extraProps: Map[String, String],
                                dropProps: Seq[String]): Option[Long] = {
     val spark = tgt.spark
+    val man = a.man
     val stage = s"${tgt.dirPath(table)}.__vstage/mor-ups-${java.util.UUID.randomUUID()}"
     val f = fs(tgt, dataDir(tgt, table))
     val one = Loader.collapseLastPerKey(incoming, keys, order)
@@ -4131,23 +4062,14 @@ object VersionedTable {
             // carrying extraProps/keys ATOMICALLY like the CoW path (an
             // idempotent writer's epoch stamp must land even on an
             // empty batch, or a replay re-applies it)
-            preCommitHook.value()
-            if (tryCommitManifest(tgt, table, man.copy(
-              version = cur + 1L,
-              props = (man.props ++ extraProps +
-                (UpsertKeysProp -> keys.mkString(","))) -- dropProps)))
-              Some(cur + 1L)
-            else None
-          } else {
-            try Some(applyRowDeltas(tgt, table, cur, frags, Nil, order,
+            a.commit(man.copy(props = (man.props ++ extraProps +
+              (UpsertKeysProp -> keys.mkString(","))) -- dropProps))
+          } else
+            applyRowDeltas(tgt, table, a.cur, a.op, frags, Nil, order,
               stagedWithIds = Seq(stagedDir),
               propsDelta = extraProps +
                 (UpsertKeysProp -> keys.mkString(",")),
-              dropProps = dropProps))
-            catch {
-              case _: java.util.ConcurrentModificationException => None
-            }
-          }
+              dropProps = dropProps)
         } finally joined.unpersist()
       } finally exLive.unpersist()
     } finally {
@@ -4237,10 +4159,8 @@ object VersionedTable {
               where: Option[org.apache.spark.sql.Column]): Long = {
     Loader.ensureParquetWriteConf(tgt.spark)
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    commitWithRetry(table, "compact") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
+    commitWithRetry(tgt, table, "compact") { a =>
+      val man = a.man
       val f = fs(tgt, dataDir(tgt, table))
       // manifest-recorded sizes first (zero RPCs); status call only for
       // files committed by a pre-sizes writer
@@ -4315,13 +4235,8 @@ object VersionedTable {
       if (small.size < 2 && !small.exists(s => man.dvs.contains(s._1)) &&
           !small.exists(s => tombstoned(s._1))) {
         val pruned = pruneEqProps(man.props, man.files)
-        if (pruned == man.props) Some(cur)
-        else {
-          preCommitHook.value()
-          if (tryCommitManifest(tgt, table,
-            man.copy(version = cur + 1, props = pruned))) Some(cur + 1)
-          else None
-        }
+        if (pruned == man.props) Some(a.cur)
+        else a.commit(man.copy(props = pruned))
       } else {
         // DV-aware + explicit schema: compacting must drop deleted
         // positions and null-fill pre-widening files, never resurrect
@@ -4372,7 +4287,6 @@ object VersionedTable {
                 (pSpec.map(transformExpr) ++ pSpec.map(t => col(t.col))): _*)
           case (None, None) => rows.coalesce(parts)
         }
-        preCommitHook.value()
         // bound the parquet row group at a quarter of the file target so
         // every at-target compacted file carries ≥4 independently
         // readable row groups — a single-row-group file is one scan task
@@ -4382,20 +4296,16 @@ object VersionedTable {
           extraOpts = Map("parquet.block.size" -> math.max(1L << 20,
             math.min(128L << 20, targetFileBytes / 4)).toString))
         val newRel = newParts.map(_._1)
-        val newV = cur + 1L
-        if (tryCommitManifest(tgt, table,
-          { val fm = manifestMeta(tgt, table, Some(man), keep.map(_._1),
-              newParts, rows.schema)
-            // equality tombstones: rewritten files are born PAST every
-            // tombstone (unstamped); carried files keep their stamps, and
-            // a tombstone no surviving file is stamped below drops — the
-            // materialization step of the write-without-read upsert
-            Manifest(newV, man.maxId, man.bucket, keep.map(_._1) ++ newRel,
-              fm.stats, fm.sizes, fm.nulls, fm.rows,
-              pruneEqProps(man.props, keep.map(_._1)),
-              dvCarry(Some(man), keep.map(_._1))) }))
-          Some(newV)
-        else {
+        val fm = manifestMeta(tgt, table, Some(man), keep.map(_._1),
+          newParts, rows.schema)
+        // equality tombstones: rewritten files are born PAST every
+        // tombstone (unstamped); carried files keep their stamps, and a
+        // tombstone no surviving file is stamped below drops — the
+        // materialization step of the write-without-read upsert
+        a.commit(Manifest(a.next, man.maxId, man.bucket,
+          keep.map(_._1) ++ newRel, fm.stats, fm.sizes, fm.nulls, fm.rows,
+          pruneEqProps(man.props, keep.map(_._1)),
+          dvCarry(Some(man), keep.map(_._1)))).orElse {
           fs(tgt, dataDir(tgt, table)).delete(batch, true)
           None
         }
@@ -4426,10 +4336,8 @@ object VersionedTable {
     Loader.ensureParquetWriteConf(tgt.spark)
     require(clusterBy.nonEmpty, "recluster needs at least one column")
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    commitWithRetry(table, "recluster") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
-      val man = readManifest(tgt, table, cur).get
+    commitWithRetry(tgt, table, "recluster") { a =>
+      val man = a.man
       require(man.bucket.isEmpty,
         s"table '$table' is hash-bucketed; recluster applies to flat tables " +
           "(bucket locality and z-order locality are competing layouts)")
@@ -4439,28 +4347,22 @@ object VersionedTable {
           f.getFileStatus(new Path(dataDir(tgt, table), r)).getLen)).sum
       val parts = math.max(1L,
         (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val rows = readVersion(tgt, table, cur)
+      val rows = readVersion(tgt, table, a.cur)
       val sortKey =
         if (clusterBy.size == 1) col(clusterBy.head)
         else graft.operators.ZOrder.zValue(rows, clusterBy)
       val out = rows.repartitionByRange(parts, sortKey)
         .sortWithinPartitions(sortKey)
-      preCommitHook.value()
       val (batch, newParts) = writeBatch(tgt, table, out, None,
         bloomColsOf(man), physOfMan(man))
       val newRel = newParts.map(_._1)
-      val newV = cur + 1L
-      if (tryCommitManifest(tgt, table,
-        // parent = Some(man): the rewritten files carry PHYSICAL names,
-        // so the footer-stat request must translate through the table's
-        // column mapping (a renamed column's zone maps would otherwise
-        // vanish from the reclustered manifest — or worse, mis-key)
-        { val fm = manifestMeta(tgt, table, Some(man), Nil, newParts,
-            rows.schema)
-          Manifest(newV, man.maxId, None, newRel,
-            fm.stats, fm.sizes, fm.nulls, fm.rows, man.props) }))
-        Some(newV)
-      else {
+      // parent = Some(man): the rewritten files carry PHYSICAL names, so
+      // the footer-stat request must translate through the table's
+      // column mapping (a renamed column's zone maps would otherwise
+      // vanish from the reclustered manifest — or worse, mis-key)
+      val fm = manifestMeta(tgt, table, Some(man), Nil, newParts, rows.schema)
+      a.commit(Manifest(a.next, man.maxId, None, newRel,
+        fm.stats, fm.sizes, fm.nulls, fm.rows, man.props)).orElse {
         fs(tgt, dataDir(tgt, table)).delete(batch, true)
         None
       }
@@ -4482,9 +4384,8 @@ object VersionedTable {
     * [[load]]. Returns the new head version.
     */
   def rollback(tgt: Catalog, table: String, v: Long): Long =
-    commitWithRetry(table, "rollback") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(s"versioned table '$table' not found"))
+    commitWithRetry(tgt, table, "rollback") { a =>
+      val cur = a.cur
       require(versions(tgt, table).contains(v),
         s"table '$table' has no version $v to roll back to")
       if (v == cur) Some(cur) // already there: nothing to commit
@@ -4494,10 +4395,7 @@ object VersionedTable {
           .flatMap(w => readManifest(tgt, table, w).flatMap(_.maxId))
         val maxId = floors.maxOption.orElse(
           footerMaxId(tgt, manifestFiles(tgt, table, v)))
-        preCommitHook.value()
-        if (tryCommitManifest(tgt, table,
-          man.copy(version = cur + 1, maxId = maxId))) Some(cur + 1)
-        else None
+        a.commit(man.copy(maxId = maxId))
       }
     }
 
@@ -4534,12 +4432,10 @@ object VersionedTable {
         s"table '$srcTable' has no version $v to clone"))
     val relToAbs = man.files.map(r =>
       r -> new Path(dataDir(src, srcTable), r).toString).toMap
-    val committed = commitWithRetry(dstTable, "clone") { () =>
-      require(currentVersion(dst, dstTable).isEmpty,
-        s"clone target '$dstTable' already exists")
-      preCommitHook.value()
-      if (tryCommitManifest(dst, dstTable,
-        Manifest(1L, man.maxId, man.bucket, man.files.map(relToAbs),
+    val committed = commitWithRetry(dst, dstTable, "clone") { a =>
+      require(a.head.isEmpty, s"clone target '$dstTable' already exists")
+      a.commit(
+        Manifest(a.next, man.maxId, man.bucket, man.files.map(relToAbs),
           man.stats.map { case (r, st) => relToAbs(r) -> st },
           man.sizes.map { case (r, len) => relToAbs(r) -> len },
           man.nulls.map { case (r, n) => relToAbs(r) -> n },
@@ -4559,9 +4455,7 @@ object VersionedTable {
           // the clone reads the same live rows the source version did
           man.dvs.map { case (r, (p, n)) =>
             relToAbs(r) -> ((new Path(dataDir(src, srcTable), p).toString, n))
-          })))
-        Some(1L)
-      else None
+          }))
     }
     // register with the source so ITS vacuum protects the shared files;
     // written after the clone commit (a crashed clone leaves no marker —
@@ -4632,20 +4526,17 @@ object VersionedTable {
         "publishes a branch made with clone(source, branch, version)")
     def abs(rel: String): String =
       new Path(dataDir(branchCat, branchTable), rel).toString
-    val committed = commitWithRetry(table, "fastForward") { () =>
-      val cur = currentVersion(tgt, table).getOrElse(
-        throw new IllegalArgumentException(
-          s"versioned table '$table' not found"))
+    val committed = commitWithRetry(tgt, table, "fastForward") { a =>
+      val cur = a.cur
       require(cur == srcV.get,
         s"cannot fast-forward '$table': it advanced to v$cur since the " +
           s"branch was cloned at v${srcV.get} — the branch's changes were " +
           "derived from a superseded state; re-clone and re-apply")
       // the target's id floor — monotone across the publish (the branch
       // grew above the shared clone-point floor, but take the max anyway)
-      val floor = readManifest(tgt, table, cur).flatMap(_.maxId)
-      preCommitHook.value()
-      if (tryCommitManifest(tgt, table,
-        Manifest(cur + 1,
+      val floor = a.man.maxId
+      a.commit(
+        Manifest(a.next,
           (bman.maxId.toSeq ++ floor.toSeq).maxOption,
           bman.bucket,
           bman.files.map(abs),
@@ -4662,9 +4553,7 @@ object VersionedTable {
           rebaseEqProps(bman.props, dataDir(branchCat, branchTable))
             - "clone_src_dir" - "clone_src_table"
             - "clone_src_version",
-          bman.dvs.map { case (r, (p, n)) => abs(r) -> ((abs(p), n)) })))
-        Some(cur + 1)
-      else None
+          bman.dvs.map { case (r, (p, n)) => abs(r) -> ((abs(p), n)) }))
     }
     // the TARGET now references the branch's files — register it as a
     // live clone of the branch (the cloneTable marker, reverse
@@ -4947,8 +4836,7 @@ object VersionedTable {
     require(tagVersion(tgt, table, name).isEmpty,
       s"'$name' is already a tag on '$table' — tags and branches share " +
         "the ref namespace")
-    val v = currentVersion(tgt, table).getOrElse(
-      throw new IllegalArgumentException(s"versioned table '$table' not found"))
+    val v = headVersion(tgt, table)
     val bt = branchTableName(table, name)
     val f = fs(tgt, metaDir(tgt, table))
     val p = branchPath(tgt, table, name)
@@ -5063,8 +4951,7 @@ object VersionedTable {
 
   /** Read the latest version. */
   def read(tgt: Catalog, table: String): DataFrame =
-    readVersion(tgt, table, currentVersion(tgt, table).getOrElse(
-      throw new IllegalArgumentException(s"versioned table '$table' not found")))
+    readVersion(tgt, table, headVersion(tgt, table))
 
   /** Time travel: materialize exactly the files version `v` committed.
     * (Bucket dirs are physical layout — an explicit-file-list read never
@@ -5651,8 +5538,8 @@ object VersionedTable {
     deleteKeyRows.foreach(d => keys.foreach(k => require(
       d.columns.exists(_.equalsIgnoreCase(k)),
       s"equality-delete key '$k' absent from the delete-key frame")))
-    val v = commitWithRetry(table, "eq-upsert")(() =>
-      eqUpsertAttempt(tgt, table, incoming, keys, idOrder, extraProps,
+    val v = commitWithRetry(tgt, table, "eq-upsert")(a =>
+      eqUpsertAttempt(tgt, table, a, incoming, keys, idOrder, extraProps,
         dropProps, deleteKeyRows, requireDistinctKeys))
     maybeAutoCompact(tgt, table)
     v
@@ -5681,22 +5568,19 @@ object VersionedTable {
     keys.foreach(k => require(
       keyRows.columns.exists(_.equalsIgnoreCase(k)),
       s"equality-delete key '$k' absent from the key frame"))
-    val v = commitWithRetry(table, "eq-delete")(() =>
-      eqDeleteAttempt(tgt, table, keyRows, keys, extraProps, dropProps))
+    val v = commitWithRetry(tgt, table, "eq-delete")(a =>
+      eqDeleteAttempt(tgt, table, a, keyRows, keys, extraProps, dropProps))
     maybeAutoCompact(tgt, table)
     v
   }
 
-  private def eqDeleteAttempt(tgt: Catalog, table: String,
+  private def eqDeleteAttempt(tgt: Catalog, table: String, a: CommitAttempt,
                               keyRows: DataFrame, keys: Seq[String],
                               extraProps: Map[String, String],
                               dropProps: Seq[String]): Option[Long] = {
     Loader.ensureParquetWriteConf(tgt.spark)
-    val cur = currentVersion(tgt, table).getOrElse(
-      throw new IllegalArgumentException(
-        s"versioned table '$table' not found"))
-    val headMan = readManifest(tgt, table, cur)
-    val man = headMan.get
+    val man = a.man
+    val cur = a.cur
     val recorded = recordedSchema(man).getOrElse(
       throw new IllegalArgumentException(
         s"'$table' records no schema — equality delete needs a " +
@@ -5708,7 +5592,7 @@ object VersionedTable {
     // (committing one would only tax every future read)
     val parentHasRows = man.files.exists(r => man.liveRows(r).forall(_ > 0))
     if (!parentHasRows) return Some(cur)
-    val newV = cur + 1L
+    val newV = a.next
     val f = fs(tgt, dataDir(tgt, table))
     val kdf = alignEqKeys(keyRows, recorded, keys, table)
       .distinct().repartition(1)
@@ -5726,15 +5610,11 @@ object VersionedTable {
     val oldStamps = eqSeqsOf(man.props)
     val stamps = man.files.map(r => r -> oldStamps.getOrElse(r, newV - 1)).toMap
     val eq = eqTombstonesOf(man.props) :+ tomb
-    preCommitHook.value()
     val props = ((man.props ++ extraProps) -- dropProps) +
       (EqDelProp -> renderEqTombstones(eq)) ++
       (if (stamps.isEmpty) Map.empty[String, String]
        else Map(EqSeqProp -> renderEqSeqs(stamps)))
-    if (tryCommitManifest(tgt, table, man.copy(version = newV,
-      props = props)))
-      Some(newV)
-    else { cleanup(); None }
+    a.commit(man.copy(props = props)).orElse { cleanup(); None }
   }
 
   /** Project `d` to the recorded KEY columns, coercing each to its
@@ -5804,7 +5684,7 @@ object VersionedTable {
     (rels, nKeys, nBytes)
   }
 
-  private def eqUpsertAttempt(tgt: Catalog, table: String,
+  private def eqUpsertAttempt(tgt: Catalog, table: String, a: CommitAttempt,
                               incoming0: DataFrame, keys: Seq[String],
                               idOrder: Seq[String],
                               extraProps: Map[String, String],
@@ -5813,16 +5693,15 @@ object VersionedTable {
                               requireDistinctKeys: Boolean = false)
       : Option[Long] = {
     Loader.ensureParquetWriteConf(tgt.spark)
-    val cur = currentVersion(tgt, table)
-    if (cur.isEmpty)
+    if (a.head.isEmpty)
       // first load: nothing to tombstone — the plain keyed load records
       // the keys, lays the table out, and (as every keyed first load
       // does) starts the uniqueness induction ([[EqLiveUniqueProp]])
       // from a verified base
-      return loadAttempt(tgt, table, incoming0, keys, idOrder,
+      return loadAttempt(tgt, table, a, incoming0, keys, idOrder,
         ensure = true, safe = false, None, extraProps, Nil, dropProps)
-    val headMan = readManifest(tgt, table, cur.get)
-    val man = headMan.get
+    val headMan = a.head
+    val man = a.man
     val recorded = recordedSchema(man).getOrElse(
       throw new IllegalArgumentException(
         s"'$table' records no schema — equality upsert needs a " +
@@ -5885,7 +5764,7 @@ object VersionedTable {
         extra.map(f => col(f.name))): _*)
     val order = if (idOrder.nonEmpty) idOrder else incoming.columns.toSeq
     val maxId = man.maxId.getOrElse {
-      val r = readVersion(tgt, table, cur.get)
+      val r = readVersion(tgt, table, a.cur)
         .agg(max(col(Loader.IdCol))).head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
@@ -5905,7 +5784,7 @@ object VersionedTable {
         new Path(dataDir(tgt, table), p._1).toString), physOf, c, table)
       catch { case e: Throwable => abort(e) }
     }
-    val newV = cur.get + 1L
+    val newV = a.next
     val newRel = newParts.map(_._1)
     val stagedAbs = newRel.map(r => new Path(dataDir(tgt, table), r).toString)
     // routed-MERGE cardinality contract ([[graft.sources.RouteEqualityMerge]]):
@@ -5967,7 +5846,6 @@ object VersionedTable {
     val fm = manifestMeta(tgt, table, headMan, man.files, newParts, out.schema)
     val committedMax = newFilesMaxId(tgt, table, fm, newRel)
       .map(m => math.max(m, maxId)).orElse(Some(maxId))
-    preCommitHook.value()
     // UNIQUENESS INDUCTION for the truncation pad ([[EqTombstone.uniq]]):
     // the staged batch is key-distinct iff its row total equals the
     // tombstone's recorded key count — both already-computed metadata
@@ -6034,12 +5912,9 @@ object VersionedTable {
         (if (stamps.isEmpty) Map.empty[String, String]
          else Map(EqSeqProp -> renderEqSeqs(stamps))),
       physOf, retiredOf(man))
-    if (tryCommitManifest(tgt, table,
-      Manifest(newV, committedMax, man.bucket, man.files ++ newRel,
-        fm.stats, fm.sizes, fm.nulls, fm.rows, props,
-        dvCarry(headMan, man.files))))
-      Some(newV)
-    else {
+    a.commit(Manifest(newV, committedMax, man.bucket, man.files ++ newRel,
+      fm.stats, fm.sizes, fm.nulls, fm.rows, props,
+      dvCarry(headMan, man.files))).orElse {
       val f = fs(tgt, dataDir(tgt, table))
       f.delete(batch, true)
       tombEntry.foreach(t => t.files.headOption.foreach(r =>
@@ -6143,9 +6018,7 @@ object VersionedTable {
     * overload. */
   def readWhere(tgt: Catalog, table: String,
                 pred: org.apache.spark.sql.Column): DataFrame =
-    readWhere(tgt, table, currentVersion(tgt, table).getOrElse(
-      throw new IllegalArgumentException(s"versioned table '$table' not found")),
-      pred)
+    readWhere(tgt, table, headVersion(tgt, table), pred)
 
   /** ZONE-MAP FILTERED READ: apply `pred` to version `v`, first skipping
     * every file whose manifest-recorded `[min, max]` column ranges prove
@@ -6425,7 +6298,7 @@ object VersionedTable {
     * starts at the next future commit). */
   def versionAtOrAfter(tgt: Catalog, table: String, tsMillis: Long): Option[Long] = {
     val vs = versions(tgt, table)
-    require(vs.nonEmpty, s"versioned table '$table' not found")
+    if (vs.isEmpty) throw tableNotFound(table)
     vs.find(v => committedAtMillis(tgt, table, v) >= tsMillis)
   }
 
@@ -6440,8 +6313,7 @@ object VersionedTable {
                                  limitRows: Option[Long] = None,
                                  topN: Option[(String, Boolean, Long)] = None)
       : Seq[(String, Long, Option[String])] = {
-    val ver = v.orElse(currentVersion(tgt, table)).getOrElse(
-      throw new IllegalArgumentException(s"versioned table '$table' not found"))
+    val ver = v.getOrElse(headVersion(tgt, table))
     val man = readManifest(tgt, table, ver).getOrElse(
       throw new IllegalArgumentException(s"table '$table' has no version $ver"))
     lazy val f = fs(tgt, dataDir(tgt, table))
@@ -6611,8 +6483,7 @@ object VersionedTable {
   private[graft] def batchPlanStats(tgt: Catalog, table: String, v: Option[Long],
                                     pred: org.apache.spark.sql.graft.ZonePred.P)
       : (Long, Option[Long], Map[String, (Option[(Any, Any)], Option[Long])]) = {
-    val ver = v.orElse(currentVersion(tgt, table)).getOrElse(
-      throw new IllegalArgumentException(s"versioned table '$table' not found"))
+    val ver = v.getOrElse(headVersion(tgt, table))
     val man = readManifest(tgt, table, ver).getOrElse(
       throw new IllegalArgumentException(s"table '$table' has no version $ver"))
     lazy val f = fs(tgt, dataDir(tgt, table))
@@ -6718,8 +6589,12 @@ object VersionedTable {
     * Soundness requires each snapshot to carry at most one row per key
     * tuple (the loader upsert invariant): a duplicate key split across a
     * shared and a non-shared file would make the pruned diff see only half
-    * its rows. Cost: one aggregate over two file-pruned scans — the audit
-    * never replays load history.
+    * its rows. Nothing checks the invariant: when `keys` does not identify
+    * rows, each side's rows for one non-NULL key tuple collapse SILENTLY
+    * into one arbitrary row (`any_value`), so the feed emits at most one
+    * row per key tuple and which duplicate it shows is unspecified.
+    * Cost: one aggregate over two file-pruned scans — the audit never
+    * replays load history.
     */
   def changes(tgt: Catalog, table: String, fromV: Long, toV: Long,
               keys: Seq[String]): DataFrame =
@@ -6929,7 +6804,7 @@ object VersionedTable {
                         olderThanMs: Long =
                           System.currentTimeMillis() - 24L * 3600 * 1000): Int = {
     val n = versions(tgt, table).size
-    require(n > 0, s"versioned table '$table' not found")
+    if (n == 0) throw tableNotFound(table)
     vacuum(tgt, table, n, dryRun = dryRun, sweepOlderThan = Some(olderThanMs))
   }
 

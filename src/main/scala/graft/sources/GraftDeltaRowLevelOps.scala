@@ -74,9 +74,7 @@ private[sources] final class GraftDeltaRowLevelOperation(
     val v = pinned.get()
     if (v >= 0L) v
     else {
-      val head = VersionedTable.currentVersion(cat, table).getOrElse(
-        throw new IllegalArgumentException(
-          s"versioned table '$table' not found"))
+      val head = VersionedTable.headVersion(cat, table)
       if (pinned.compareAndSet(-1L, head)) head else pinned.get()
     }
   }
@@ -258,9 +256,13 @@ private[sources] final class GraftDeltaRowWrite(
       cleanup(spark)
       return
     }
-    try VersionedTable.applyRowDeltas(cat, table, versionOf(cat), deletes,
-      staged.toSeq, GraftTableProvider.csvOpt(options, "idOrder"))
-    finally cleanup(spark)
+    try {
+      val version = versionOf(cat)
+      VersionedTable.applyRowDeltas(cat, table, version,
+        "row-op (merge-on-read)", deletes, staged.toSeq,
+        GraftTableProvider.csvOpt(options, "idOrder"))
+        .getOrElse(throw VersionedTable.rowOpConflict(table, version))
+    } finally cleanup(spark)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

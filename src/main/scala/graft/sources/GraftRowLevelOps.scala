@@ -73,9 +73,7 @@ private[sources] final class GraftRowLevelOperation(
     val v = pinned.get()
     if (v >= 0L) v
     else {
-      val head = VersionedTable.currentVersion(cat, table).getOrElse(
-        throw new IllegalArgumentException(
-          s"versioned table '$table' not found"))
+      val head = VersionedTable.headVersion(cat, table)
       if (pinned.compareAndSet(-1L, head)) head else pinned.get()
     }
   }
@@ -279,8 +277,10 @@ private[sources] final class GraftReplaceWrite(
       if (files.nonEmpty) spark.read.schema(schema).parquet(files.toSeq: _*)
       else spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    try VersionedTable.replaceScanned(cat, table, version, removed,
-      replacement, GraftTableProvider.csvOpt(options, "idOrder"))
+    try VersionedTable.replaceScanned(cat, table, version,
+      "row-op (copy-on-write)", removed, replacement,
+      GraftTableProvider.csvOpt(options, "idOrder"))
+      .getOrElse(throw VersionedTable.rowOpConflict(table, version))
     finally cleanup(spark)
   }
 

@@ -409,7 +409,7 @@ class EqualityDeleteSpec extends SparkSpec {
     val inert = """[{"files":["gone/gone.eqdel"],"seq":1,"keys":["k"]}]"""
     assert(VersionedTable.tryCommitManifest(lib, "in",
       man.copy(version = cur + 1,
-        props = man.props + ("eq_tombstones" -> inert))))
+        props = man.props + ("eq_tombstones" -> inert)), "write"))
     // renaming the tombstone KEY column refuses and advertises
     // "compact first" — that remediation must work below even when the
     // tombstone is INERT; a value rename never gates on tombstones

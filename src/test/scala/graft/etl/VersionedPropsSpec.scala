@@ -10,7 +10,9 @@ import scala.util.Random
   * per-bucket compaction, pruned deletes) must be indistinguishable from
   * the FLAT versioned table in every observable — head state, every
   * version's time-travel state, ids, and the change feed. The layout is
-  * an optimization, never a semantic.
+  * an optimization, never a semantic. The histories include a NULL-keyed
+  * append and a duplicated key, the two key hazards the change feed's
+  * contract names.
   */
 class VersionedPropsSpec extends SparkSpec {
   import spark.implicits._
@@ -31,10 +33,12 @@ class VersionedPropsSpec extends SparkSpec {
 
       def snap(c: Catalog, v: Long) =
         VersionedTable.readVersion(c, "t", v).select("id", "k", "v")
-          .as[(Long, Long, Long)].collect().toSet
+          .as[(Long, Option[Long], Long)].collect().toSet
 
-      for (round <- 1 to 5) {
-        rnd.nextInt(4) match {
+      // rounds 6 and 7 plant the key hazards; the random rounds after
+      // them run upserts, deletes and appends over the planted rows
+      for (round <- 1 to 10) {
+        (round match { case 6 => 4; case 7 => 5; case _ => rnd.nextInt(4) }) match {
           case 0 => // append of FRESH keys (preserves one-row-per-key)
             val rows = (1L to (3 + rnd.nextInt(5)).toLong)
               .map(j => (1000L * round + j, rnd.nextInt(500).toLong))
@@ -57,6 +61,21 @@ class VersionedPropsSpec extends SparkSpec {
             val (a, b) = both(c =>
               VersionedTable.deleteKeys(c, "t", ks.toDF("k"), Seq("k")))
             assert(a == b)
+          case 4 => // NULL-keyed append: such rows never pair with any key
+            val v0 = rnd.nextInt(500).toLong
+            val rows = Seq((Option.empty[Long], v0), (Option.empty[Long], v0 + 1))
+            val (a, b) = both(c => VersionedTable.load(c, "t",
+              rows.toDF("k", "v"), idOrder = Seq("k", "v")))
+            assert(a == b)
+          case 5 => // duplicate-key append: a live key gains a second row
+            val live = snap(ft, VersionedTable.currentVersion(ft, "t").get)
+              .flatMap(_._2).toSeq.sorted
+            val k = live(rnd.nextInt(live.size))
+            val rows = Seq((Option(k), rnd.nextInt(500).toLong))
+            val (a, b) = both(c => VersionedTable.load(c, "t",
+              rows.toDF("k", "v"), idOrder = Seq("k")))
+            assert(a == b)
+            assert(snap(ft, a).count(_._2.contains(k)) == 2)
         }
         val head = VersionedTable.currentVersion(bt, "t").get
         assert(snap(bt, head) == snap(ft, head),
@@ -67,9 +86,9 @@ class VersionedPropsSpec extends SparkSpec {
         val pred = col("k") >= lo && col("k") < lo + 7
         Seq(bt, ft).foreach { c =>
           val a = VersionedTable.readWhere(c, "t", head, pred)
-            .select("id", "k", "v").as[(Long, Long, Long)].collect().toSet
+            .select("id", "k", "v").as[(Long, Option[Long], Long)].collect().toSet
           val b = VersionedTable.readVersion(c, "t", head).where(pred)
-            .select("id", "k", "v").as[(Long, Long, Long)].collect().toSet
+            .select("id", "k", "v").as[(Long, Option[Long], Long)].collect().toSet
           assert(a == b, s"readWhere diverged in round $round (seed=$seed)")
         }
       }
@@ -89,7 +108,7 @@ class VersionedPropsSpec extends SparkSpec {
       val ct = new Catalog(spark, tmpDir("vprops-c"))
       VersionedTable.cloneTable(ft, "t", ct, "c", ftHead)
       assert(VersionedTable.read(ct, "c").select("id", "k", "v")
-        .as[(Long, Long, Long)].collect().toSet == snap(ft, ftHead))
+        .as[(Long, Option[Long], Long)].collect().toSet == snap(ft, ftHead))
       VersionedTable.deleteKeys(ct, "c",
         Seq(3L, 7L).toDF("k"), Seq("k"))
       assert(snap(ft, ftHead) == snap(bt, preRecluster),
@@ -108,14 +127,30 @@ class VersionedPropsSpec extends SparkSpec {
         assert(snap(bt, v) == snap(ft, v), s"version $v diverged (seed=$seed)")
       }
 
-      // and the full-history change feed matches across layouts
-      val fb = VersionedTable.changes(bt, "t", 1L, preCompact, Seq("k"))
-        .select("op", "k", "id", "v").as[(String, Long, Long, Long)]
+      // and the full-history change feed matches across layouts. A key
+      // duplicated at either end collapses to ONE arbitrary row per side
+      // (see changes' doc), so the layouts may show different rows for
+      // it: pin the collapse, compare every other key exactly
+      type Feed = Set[(String, Option[Long], Long, Long)]
+      val dups = Seq(1L, preCompact).flatMap(v => snap(ft, v).toSeq
+        .flatMap(_._2).groupBy(identity).collect {
+          case (k, ks) if ks.size > 1 => k
+        }).toSet
+      def exact(f: Feed): Feed = f.filterNot(_._2.exists(dups))
+      def assertCollapsed(f: Feed): Unit = dups.foreach(k =>
+        assert(f.count(_._2.contains(k)) <= 1,
+          s"duplicated key $k surfaced more than once (seed=$seed)"))
+      val fb: Feed = VersionedTable.changes(bt, "t", 1L, preCompact, Seq("k"))
+        .select("op", "k", "id", "v").as[(String, Option[Long], Long, Long)]
         .collect().toSet
-      val ff = VersionedTable.changes(ft, "t", 1L, preCompact, Seq("k"))
-        .select("op", "k", "id", "v").as[(String, Long, Long, Long)]
+      val ff: Feed = VersionedTable.changes(ft, "t", 1L, preCompact, Seq("k"))
+        .select("op", "k", "id", "v").as[(String, Option[Long], Long, Long)]
         .collect().toSet
-      assert(fb == ff, s"change feed diverged across layouts (seed=$seed)")
+      Seq(fb, ff).foreach(assertCollapsed)
+      assert(exact(fb) == exact(ff), s"change feed diverged across layouts (seed=$seed)")
+      // NULL-keyed rows never pair: each one surfaces on its own
+      assert(ff.count(_._2.isEmpty) == snap(ft, preCompact).count(_._2.isEmpty),
+        s"NULL-keyed rows must each surface as an insert (seed=$seed)")
 
       // the DataSource-V2 surfaces are just views over the same state:
       // the `graft` format equals readVersion at head AND at a time
@@ -127,7 +162,7 @@ class VersionedPropsSpec extends SparkSpec {
           val r = spark.read.format("graft")
             .option("dir", c.dir).option("table", "t")
           v.fold(r)(x => r.option("versionAsOf", x.toString)).load()
-            .select("id", "k", "v").as[(Long, Long, Long)].collect().toSet
+            .select("id", "k", "v").as[(Long, Option[Long], Long)].collect().toSet
         }
         assert(fmt(None) == snap(c, h), s"graft format head diverged (seed=$seed)")
         assert(fmt(Some(2L)) == snap(c, 2L),
@@ -136,9 +171,11 @@ class VersionedPropsSpec extends SparkSpec {
           .option("dir", c.dir).option("table", "t").option("keys", "k")
           .option("startingVersion", "1")
           .option("endingVersion", preCompact.toString).load()
-          .select("op", "k", "id", "v").as[(String, Long, Long, Long)]
+          .select("op", "k", "id", "v").as[(String, Option[Long], Long, Long)]
           .collect().toSet
-        assert(batchFeed == fb,
+        // graft-cdc pairs rows in its own reader, whose duplicate-key
+        // output is not pinned: compare the keys that identify rows
+        assert(exact(batchFeed) == exact(fb),
           s"graft-cdc batch feed diverged from changes() (seed=$seed)")
       }
     }

@@ -61,6 +61,36 @@ class VersionedTableSpec extends SparkSpec {
     assert(ch == Seq(("delete", 1L, "a"), ("update", 2L, "B2"), ("insert", 4L, "d")))
   }
 
+  test("changes with keys that do not identify rows keeps one arbitrary row per key") {
+    // pinned contract (see changes' doc): each side's rows for one key
+    // tuple collapse into a single arbitrary row — no error, no extra rows
+    val tgt = freshCat()
+    VersionedTable.load(tgt, "t",
+      Seq((1L, "x", 10L), (1L, "y", 20L), (2L, "x", 30L)).toDF("k", "g", "v"),
+      idOrder = Seq("k", "g"))
+    VersionedTable.load(tgt, "t", Seq((1L, "y", 21L)).toDF("k", "g", "v"),
+      upsertFields = Seq("k", "g"), idOrder = Seq("k", "g"))
+    VersionedTable.load(tgt, "t",
+      Seq((3L, "x", 1L), (3L, "y", 2L)).toDF("k", "g", "v"), idOrder = Seq("k", "g"))
+    def feed(from: Long, to: Long, keys: Seq[String]) =
+      VersionedTable.changes(tgt, "t", from, to, keys).select("op", "k", "g", "v")
+        .as[(String, Long, String, Long)].collect().toSeq
+    // keys that identify rows: the one real update, the two real inserts
+    assert(feed(1L, 2L, Seq("k", "g")) == Seq(("update", 1L, "y", 21L)))
+    assert(feed(2L, 3L, Seq("k", "g")).sortBy(_._3) ==
+      Seq(("insert", 3L, "x", 1L), ("insert", 3L, "y", 2L)))
+    // `k` alone: both sides hold two k=1 rows, each side keeps one of
+    // them, so the update shows either k=1 row or vanishes
+    val loose = feed(1L, 2L, Seq("k"))
+    assert(loose.size <= 1, loose.toString)
+    loose.foreach(r => assert(r._1 == "update" && r._2 == 1L &&
+      Set(("x", 10L), ("y", 21L)).contains((r._3, r._4)), loose.toString))
+    // the two new k=3 rows surface as ONE insert of either row
+    val ins = feed(2L, 3L, Seq("k"))
+    assert(ins.size == 1 && ins.head._1 == "insert" && ins.head._2 == 3L &&
+      Set(("x", 1L), ("y", 2L)).contains((ins.head._3, ins.head._4)), ins.toString)
+  }
+
   test("vacuum drops old manifests and unreferenced files; current version survives") {
     val tgt = freshCat()
     VersionedTable.load(tgt, "t", Seq((1L, "a"), (2L, "b")).toDF("k", "s"),
