@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.PortableHash
 import graft.functions.PortableHash.P
@@ -172,7 +172,7 @@ object Dedup {
     * no keying scheme can avoid.
     */
   def exact(df: DataFrame, keyCols: Seq[String], tieBreak: String): DataFrame = {
-    val h = PortableHash.h60(concat_ws(" ", keyCols.map(col): _*))
+    val h = PortableHash.h60(concat_ws("\u0000", keyCols.map(col): _*))
     val w = Window.partitionBy((col("__kh") +: keyCols.map(col)): _*)
       .orderBy(col(tieBreak).asc)
     df.withColumn("__kh", h)
@@ -416,59 +416,12 @@ object Dedup {
 
   // ---- dedup as an action: components + drop ------------------------------
 
-  /** Connected components over near-dup pairs by iterative min-label
-    * propagation: every id starts as its own component; each round, a node
-    * adopts the minimum label among itself and its neighbors; stop at
-    * fixpoint. Rounds needed = graph diameter — for dedup graphs (small
-    * clusters of copies) that's 1–3; `maxIters` bounds pathological chains.
-    * All DataFrame joins/aggregations — no driver-side graph.
-    * Returns (id, component) with component = min id of the cluster.
-    */
-  def connectedComponents(ids: DataFrame, idCol: String,
-                          pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .cache()
-    var labels = ids.select(col(idCol).as("id"), col(idCol).as("comp"))
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
-      val neighborMin = edges
-        .join(labels.select(col("id").as("src"), col("comp").as("ncomp")), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(min("ncomp").as("nmin"))
-      val updated = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-        .cache()
-      // one action per round: the change-detection count also populates
-      // updated's cache, so later rounds never recompute the chain
-      val changes = updated
-        .join(labels.withColumnRenamed("comp", "old"), Seq("id"))
-        .where(col("comp") =!= col("old")).count()
-      labels.unpersist() // previous round's cache (no-op on the uncached seed)
-      labels = updated
-      done = changes == 0
-      iter += 1
-    }
-    edges.unpersist()
-    // Non-convergence must fail loudly: returning partial labels would let
-    // dropNearDuplicates silently KEEP duplicates past maxIters-diameter
-    // chains.
-    if (!done) {
-      labels.unpersist()
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters iterations " +
-          "(cluster diameter exceeds maxIters); raise maxIters")
-    }
-    labels // cached; caller consumes immediately
-  }
-
   /** Connected components by the alternating large-star / small-star
     * algorithm (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", 2014): edge rewriting that converges in O(log n) rounds
-    * where min-label propagation ([[connectedComponents]]) needs
-    * O(diameter) — the difference between 4 rounds and 10,000 on a
-    * pathological chain of re-crawled near-identical pages. Each round:
+    * where min-label propagation needs O(diameter) — the difference
+    * between 4 rounds and 10,000 on a pathological chain of re-crawled
+    * near-identical pages. Each round:
     *
     *   - large-star: every node's strictly-LARGER neighbors re-attach to
     *     the minimum of its closed neighborhood (breaks up high-degree
@@ -477,43 +430,83 @@ object Dedup {
     *     minimum neighbor (collapses toward the root).
     *
     * The fixpoint is a star forest rooted at each component's MINIMUM id —
-    * the same labeling convention as the propagation variant, so the two
-    * are drop-in interchangeable. All shuffles are edge-set-sized (the
-    * corpus itself never enters the loop), and the edge set only shrinks
-    * toward one edge per non-root node.
+    * the labeling convention of the driver union-find behind
+    * [[connectedComponentsAuto]], so the two are drop-in interchangeable.
+    * Returns (id, comp) per row of `ids`, comp = the minimum id of its
+    * component under the id type's own ordering. All shuffles are
+    * edge-set-sized (the corpus itself never enters the loop), and the edge
+    * set only shrinks toward one edge per non-root node.
+    *
+    * The rounds run over Long ids ([[starForest]]). Any other id type is
+    * ranked first: the distinct non-null edge endpoints get a dense,
+    * order-preserving Long rank, so a component's minimum rank is the rank
+    * of its minimum id, and the forest maps back through that edge-sized
+    * table. Nodes without an edge need no rank: they keep their own id.
     */
   def connectedComponentsStar(ids: DataFrame, idCol: String,
                               pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    // Long-typed ids (every at-scale caller: near-dup edges are id pairs)
-    // run the loop as plain pair-RDD rounds: the round body is identical
-    // algebra, but each round costs three tiny co-partitioned shuffles and
-    // ONE action — no Catalyst analysis/optimization, no AQE re-planning,
-    // no codegen compilation per round, which profiling showed dominated
-    // the DataFrame loop's wall clock (driver stacks parked in
-    // Optimizer/QueryPlan between every round's jobs; the loop data is
-    // edge-sized KB while each DataFrame round re-optimized an 8-window
-    // plan). Non-long ids (possible via dropByPairs over arbitrary key
-    // types) keep the DataFrame loop — same fixpoint, same labels.
+    val spark = ids.sparkSession
+    import spark.implicits._
     val longIds = pairs.schema("id_a").dataType == LongType &&
       pairs.schema("id_b").dataType == LongType
-    if (longIds) connectedComponentsStarRdd(ids, idCol, pairs, maxIters)
-    else connectedComponentsStarDf(ids, idCol, pairs, maxIters)
+    // (x = id, r = rank); persisted: the ranked pairs and the map-back
+    // both read it
+    val ranks = if (longIds) None else {
+      val ends = pairs.select(col("id_a").as("x"))
+        .union(pairs.select(col("id_b").as("x")))
+        .where(col("x").isNotNull).distinct().orderBy("x")
+      Some(spark.createDataFrame(
+          ends.rdd.zipWithIndex().map { case (r, i) => Row(r.get(0), i) },
+          StructType(Seq(ends.schema("x"), StructField("r", LongType, nullable = false))))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
+    try {
+      val longPairs = ranks.fold(pairs) { rk =>
+        pairs.join(rk.select(col("x").as("id_a"), col("r").as("ra")), "id_a")
+          .join(rk.select(col("x").as("id_b"), col("r").as("rb")), "id_b")
+          .select(col("ra").as("id_a"), col("rb").as("id_b"))
+      }
+      val (forest, edgeCount) = starForest(longPairs, maxIters)
+      val eOut = ranks.fold(forest.toDF("id", "comp")) { rk =>
+        forest.toDF("__r", "__rc")
+          .join(rk.select(col("r").as("__r"), col("x").as("id")), "__r")
+          .join(rk.select(col("r").as("__rc"), col("x").as("comp")), "__rc")
+          .select("id", "comp")
+      }
+      // label join: ≤ one edge per non-root node, and `edgeCount` bounds
+      // it from above — under the broadcast comfort zone (1M edges ≈ 16 MB
+      // raw) the corpus-side ids NEVER shuffle (scan + broadcast hash
+      // join, the same discipline as the driver-edge drop path); bigger
+      // edge sets keep the shuffle join
+      val labels = ids.select(col(idCol).as("id"))
+        .join(if (edgeCount <= 1000000L) broadcast(eOut) else eOut,
+          Seq("id"), "left")
+        .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+        .cache()
+      labels.count() // materialize before releasing the edge blocks
+      forest.unpersist(false)
+      labels
+    } finally ranks.foreach(_.unpersist())
   }
 
-  /** RDD formulation of the star rounds (Long ids). One sweep:
-    * large-star (strictly larger neighbors re-attach to the min of the
-    * closed neighborhood) then small-star (node + smaller neighbors attach
-    * to the min neighbor) — term-for-term the window algebra of
-    * [[connectedComponentsStarDf]], pinned equal by StarComponentsSpec's
-    * seeded-random-vs-union-find cases and the shared q_dedup_drop oracle.
+  /** The star rounds over Long (id_a, id_b) pairs, as plain pair-RDD
+    * shuffles: each round costs three tiny co-partitioned shuffles and ONE
+    * action — no Catalyst analysis/optimization, no AQE re-planning, no
+    * codegen per round, which dominated the wall clock of a DataFrame
+    * formulation of the same rounds (the loop data is edge-sized KB).
+    * One sweep: large-star (strictly larger neighbors re-attach to the min
+    * of the closed neighborhood) then small-star (node + smaller neighbors
+    * attach to the min neighbor); labels pinned against driver union-find
+    * by StarComponentsSpec's seeded random graphs and the shared
+    * q_dedup_drop oracle. Returns the converged star forest as persisted
+    * (child, root) edges, which the caller unpersists, and the distinct
+    * input edge count.
     */
-  private def connectedComponentsStarRdd(ids: DataFrame, idCol: String,
-                                         pairs: DataFrame,
-                                         maxIters: Int): DataFrame = {
+  private[operators] def starForest(pairs: DataFrame,
+                                    maxIters: Int): (org.apache.spark.rdd.RDD[(Long, Long)], Long) = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
-    val spark = ids.sparkSession
     var e: RDD[(Long, Long)] = pairs
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
@@ -549,9 +542,11 @@ object Dedup {
     while (!done && iter < maxIters) {
       // TWO sweeps per round (typical near-dup graphs converge within the
       // first), then one distinct; the star-forest probe below is the
-      // round's single action and materializes the persisted result
-      val small = sweep(sweep(e)).distinct(part.numPartitions)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      // round's single action. localCheckpoint keeps the blocks (at the
+      // MEMORY_AND_DISK level a persist would use) and cuts the lineage
+      // once the probe has materialized them, so a round's RDD never
+      // chains the shuffles of every earlier round — no extra job
+      val small = sweep(sweep(e)).distinct(part.numPartitions).localCheckpoint()
       // fixpoint = the edge set IS a star forest: no child with two
       // parents, no parent that is itself a child — one aggregation
       val (multiParent, chained) = small
@@ -578,143 +573,7 @@ object Dedup {
           s"connectedComponentsStar did not converge in $maxIters rounds")
       }
     }
-    val implicits = spark.implicits
-    import implicits._
-    val eOut = e.toDF("id", "comp")
-    // label join: ≤ one edge per non-root node — broadcast under the same
-    // comfort zone as the DataFrame loop so the corpus ids never shuffle
-    val labels = ids.select(col(idCol).as("id"))
-      .join(if (edgeCount <= 1000000L) broadcast(eOut) else eOut,
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      .cache()
-    labels.count() // materialize before releasing the edge blocks
-    e.unpersist(false)
-    labels
-  }
-
-  private def connectedComponentsStarDf(ids: DataFrame, idCol: String,
-                                        pairs: DataFrame,
-                                        maxIters: Int): DataFrame = {
-    // Every round MUST truncate lineage (localCheckpoint): each
-    // iteration's plan references the previous one several times (sym
-    // union, two joins), so an un-truncated loop grows the logical plan
-    // exponentially and OOMs the DRIVER on plan trees long before any
-    // data pressure. (On a fault-tolerant cluster run, a reliable
-    // checkpoint dir is the durable variant of the same truncation.)
-    // NON-eager: the round's fixpoint probe is the action that
-    // materializes the checkpoint — one job per round where an eager
-    // checkpoint plus a probe paid two.
-    // canonical directed form (u > v); self/null edges dropped
-    var e = pairs
-      .select(greatest(col("id_a"), col("id_b")).as("u"),
-        least(col("id_a"), col("id_b")).as("v"))
-      .where(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct().localCheckpoint(false)
-    // RIGHT-SIZE the loop's parallelism to the edge volume: near-dup edge
-    // sets are tiny relative to the corpus, and each round below runs
-    // several shuffles whose map side inherits e's partitioning — 32
-    // partitions carrying a few thousand edges is pure task-scheduling
-    // overhead, multiplied by O(log n) rounds. One count (which also
-    // materializes the checkpoint blocks the first round would have paid
-    // for anyway) lets us coalesce to ~1M edges per partition; above the
-    // threshold the ambient parallelism stands.
-    val edgeCount = e.count()
-    val targetParts = math.max(1L, edgeCount / 1000000L).toInt
-    if (targetParts < e.rdd.getNumPartitions) e = e.coalesce(targetParts)
-    var iter = 0
-    // no isEmpty pre-probe: an empty edge set converges on round 1 (all
-    // probes over empty data), and the probe job it would save is exactly
-    // the job it costs — while the non-empty common case paid it for
-    // nothing every call.
-    var done = false
-    // each star step needs "every row of group u sees the group's min" —
-    // a WINDOW aggregate: ONE exchange per step where the groupBy+join
-    // formulation paid two (the per-key mins shuffle AND a re-shuffle of
-    // the edges to meet them). Same key distribution, half the exchanges,
-    // no join planning — the dominant cost of a round on any edge volume.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("u")
-    // one large-star + small-star sweep, as PURE projections/windows (no
-    // action): duplicate pairs from shared parents ride through (bounded
-    // by the edge count) and collapse in the round's single distinct
-    def starSweep(edges: DataFrame): DataFrame = {
-      // large-star over the symmetric neighborhood: every strictly-larger
-      // neighbor re-attaches to the min of u's closed neighborhood
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val large = sym
-        .withColumn("m", least(min(col("v")).over(w), col("u")))
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-      // small-star on the (big → small) edges large-star emits
-      val l2 = large.withColumn("m", min(col("v")).over(w))
-      l2.select(col("v").as("u"), col("m").as("v"))
-        .union(l2.select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v"))
-    }
-    while (!done && iter < maxIters) {
-      // TWO sweeps per job: near-dup edge sets converge in a handful of
-      // sweeps whose cost is dominated by fixed job/commit overhead, not
-      // data — batching halves the job count (log₂ rounds still, half
-      // the scheduling) while the per-job shuffle volume stays edge-sized
-      // (each sweep's intermediates are ≤4× the edge count before the
-      // round's single distinct). A third sweep per job was measured
-      // SLOWER at fixture scale: the typical graph converges within the
-      // first job either way, so the extra sweep's four window exchanges
-      // are pure overhead.
-      val small = starSweep(starSweep(e))
-        .distinct().localCheckpoint(false) // materialized by the probe below
-      // fixpoint = the edge set IS a star forest: every child (u) has
-      // exactly one parent AND no parent (v) is itself a child. ONE
-      // aggregation job answers both: explode each edge into per-node
-      // (appears-as-child, appears-as-parent) markers, per-node sums, then
-      // a scalar reduce — versus the previous two driver probes (a
-      // count-per-child job plus a semi-join job) per round. Detecting the
-      // property the round it holds (vs edge-set-equality against last
-      // round) still saves the confirmation round that would double the
-      // loop on typical post-round-1 star graphs.
-      val probe = small.select(explode(array(
-          struct(col("u").as("n"), lit(1).as("c"), lit(0).as("p")),
-          struct(col("v").as("n"), lit(0).as("c"), lit(1).as("p")))).as("x"))
-        .groupBy(col("x.n").as("n"))
-        .agg(sum(col("x.c")).as("childCnt"), max(col("x.p")).as("isParent"))
-        .agg(
-          max(when(col("childCnt") > 1, 1).otherwise(0)).as("multiParent"),
-          max(when(col("childCnt") >= 1 && col("isParent") === 1, 1).otherwise(0))
-            .as("chained"))
-        .head()
-      e.unpersist()
-      e = small
-      done = probe.isNullAt(0) || // empty edge set: trivially a star forest
-        (probe.getInt(0) == 0 && probe.getInt(1) == 0)
-      iter += 1
-    }
-    if (!done) {
-      // before declaring non-convergence, give the degenerate case its
-      // answer: an empty edge set is trivially a star forest (reachable
-      // only when the loop never ran, i.e. maxIters == 0)
-      if (e.isEmpty) done = true
-      else {
-        e.unpersist()
-        throw new IllegalStateException(
-          s"connectedComponentsStar did not converge in $maxIters rounds")
-      }
-    }
-    // label join: the converged star forest has ≤ one edge per non-root
-    // node, and `edgeCount` bounds it from above — under the broadcast
-    // comfort zone (1M edges ≈ 16 MB raw; the built hash relation stays
-    // well inside default driver/executor memory) the corpus-side ids
-    // NEVER shuffle (scan + broadcast hash join, the same discipline as
-    // the driver-edge drop path); bigger edge sets keep the shuffle join
-    val eOut = e.select(col("u").as("id"), col("v").as("comp"))
-    val labels = ids.select(col(idCol).as("id"))
-      .join(if (edgeCount <= 1000000L) broadcast(eOut) else eOut,
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      .cache()
-    labels.count() // materialize before releasing the edge blocks
-    e.unpersist()
-    labels
+    (e, edgeCount)
   }
 
   /** Components with automatic strategy on edge volume. Near-dup edge sets
@@ -798,7 +657,8 @@ object Dedup {
     * every MinHash near-dup cluster. The end-to-end dedup ACTION a corpus
     * pipeline runs — pairs → components → filter. Components via
     * [[connectedComponentsAuto]]: driver union-find on the (small) edge
-    * list, distributed label propagation above the size guard.
+    * list, the distributed large-star/small-star rounds above the size
+    * guard.
     */
   def dropNearDuplicates(df: DataFrame, idCol: String, textCol: String,
                          n: Int, numPerms: Int, bands: Int,
@@ -838,15 +698,10 @@ object Dedup {
           col(idCol) === col("__drop_id"), "left_anti")
       case None =>
         // Distributed fallback: components via the large-star/small-star
-        // RDD rounds, NOT the min-label propagation loop — propagation
-        // needs O(diameter) rounds, and each DataFrame round re-plans a
-        // multi-join query through Catalyst (measured ~7 s of the 11 s
-        // q_dedup_drop_star wall clock against edge data measured in KB;
-        // the star rounds are plain co-partitioned pair-RDD shuffles with
-        // one action per round). Labels are identical by construction —
-        // comp = minimum id of the component — pinned star-vs-union-find
-        // by StarComponentsSpec and by the q_dedup_drop/q_dedup_drop_star
-        // shared oracle.
+        // RDD rounds (log-rounds, one action per round). Labels are
+        // identical by construction — comp = minimum id of the component
+        // — pinned star-vs-union-find by StarComponentsSpec and by the
+        // q_dedup_drop/q_dedup_drop_star shared oracle.
         val comps = connectedComponentsStar(df.select(col(idCol)), idCol, pairs)
         // keep-set = component roots; materialize it and RELEASE the
         // corpus-sized labels cache (previously leaked until session end)

@@ -748,9 +748,9 @@ object VectorSimilarity {
     *
     * Scale shape: pairs as above; components via
     * [[Dedup.connectedComponentsAuto]] (driver union-find under
-    * `maxDriverEdges`, distributed min-label propagation past it); the
-    * final keep is one window over (component) on the component members
-    * only — the corpus never shuffles on the fast path.
+    * `maxDriverEdges`, the distributed large-star/small-star rounds past
+    * it); the final keep is one window over (component) on the component
+    * members only — the corpus never shuffles on the fast path.
     */
   def semDeDup(df: DataFrame, idCol: String, vecCol: String,
                centroids: DataFrame, cIdCol: String, cVecCol: String,

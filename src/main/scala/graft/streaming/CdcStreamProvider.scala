@@ -222,26 +222,8 @@ private[streaming] final class CdcScan(
       if (sv >= ev) return Array.empty
       val admit = resolveAdmission(spark, cat, table)
         .map(_.zonePred).getOrElse(org.apache.spark.sql.graft.ZonePred.And(Nil))
-      // per-SIDE live tombstone specs: the diff reader resolves each
-      // version's own tombstones before diffing, so the feed sees
-      // through write-without-read upserts without a compact
-      val ds = StructType(fullSchema.fields.drop(1))
-      val eqOld = if (sv <= 0L) Nil
-        else org.apache.spark.sql.graft.PlainBatchRead.eqSpecs(spark, ds, ds,
-          VersionedTable.eqDeleteState(cat, table, sv)._1)
-      val eqNew = org.apache.spark.sql.graft.PlainBatchRead.eqSpecs(spark, ds, ds,
-        VersionedTable.eqDeleteState(cat, table, ev)._1)
-      VersionedTable.cdcSlices(cat, table, sv, ev, admit).map { case (old, fresh) =>
-        org.apache.spark.sql.graft.CdcMicroBatch.CdcInputPartition(
-          old.map { case (p, l, dv, sq) =>
-            org.apache.spark.sql.graft.CdcMicroBatch.FileSlice(p, l, dv,
-              eqSeq = sq) },
-          fresh.map { case (p, l, dv, sq) =>
-            org.apache.spark.sql.graft.CdcMicroBatch.FileSlice(p, l, dv,
-              eqSeq = sq) },
-          eqOld, eqNew)
-          : InputPartition
-      }.toArray
+      CdcStreamProvider.cdcPartitions(spark, cat, table, sv, ev,
+        StructType(fullSchema.fields.drop(1)), admit)
     }
 
     override def createReaderFactory(): PartitionReaderFactory =
@@ -278,6 +260,28 @@ private[streaming] final class CdcScan(
 }
 
 private[graft] object CdcStreamProvider {
+
+  /** The diff partitions of (sv, ev] for the bounded batch and the stream:
+    * one per (old, new) slice pair the manifests plan, each carrying its
+    * SIDE's live equality-tombstone specs — the diff reader resolves each
+    * version's own tombstones before diffing, so the feed sees through
+    * write-without-read upserts without a compact. */
+  private[streaming] def cdcPartitions(
+      spark: SparkSession, cat: Catalog, table: String, sv: Long, ev: Long,
+      dataSchema: StructType,
+      admit: org.apache.spark.sql.graft.ZonePred.P): Array[InputPartition] = {
+    import org.apache.spark.sql.graft.{CdcMicroBatch, PlainBatchRead}
+    def eqSpecs(v: Long) = PlainBatchRead.eqSpecs(spark, dataSchema, dataSchema,
+      VersionedTable.eqDeleteState(cat, table, v)._1)
+    val eqOld = if (sv <= 0L) Nil else eqSpecs(sv)
+    val eqNew = eqSpecs(ev)
+    def slices(side: Seq[(String, Long, Option[String], Long)]) =
+      side.map { case (p, l, dv, sq) => CdcMicroBatch.FileSlice(p, l, dv, eqSeq = sq) }
+    VersionedTable.cdcSlices(cat, table, sv, ev, admit).map { case (old, fresh) =>
+      CdcMicroBatch.CdcInputPartition(slices(old), slices(fresh), eqOld, eqNew)
+        : InputPartition
+    }.toArray
+  }
 
   /** COLUMN-MAPPING STABILITY GUARD for long-running streams: the stream
     * captured (dataSchema, physOf) at start; physical names are
@@ -581,24 +585,7 @@ private[streaming] final class CdcMicroBatchStream(
     if (sv >= ev) return Array.empty
     CdcStreamProvider.requireMappingStable(cat, table, ev, dataSchema,
       capturedPhysOf)
-    // per-SIDE live tombstone specs (see the bounded batch): each diff
-    // side reads its version's RESOLVED state
-    val eqOld = if (sv <= 0L) Nil
-      else org.apache.spark.sql.graft.PlainBatchRead.eqSpecs(spark,
-        dataSchema, dataSchema,
-        VersionedTable.eqDeleteState(cat, table, sv)._1)
-    val eqNew = org.apache.spark.sql.graft.PlainBatchRead.eqSpecs(spark,
-      dataSchema, dataSchema,
-      VersionedTable.eqDeleteState(cat, table, ev)._1)
-    VersionedTable.cdcSlices(cat, table, sv, ev, admit).map { case (old, fresh) =>
-      org.apache.spark.sql.graft.CdcMicroBatch.CdcInputPartition(
-        old.map { case (p, l, dv, sq) =>
-          org.apache.spark.sql.graft.CdcMicroBatch.FileSlice(p, l, dv, eqSeq = sq) },
-        fresh.map { case (p, l, dv, sq) =>
-          org.apache.spark.sql.graft.CdcMicroBatch.FileSlice(p, l, dv, eqSeq = sq) },
-        eqOld, eqNew)
-        : InputPartition
-    }.toArray
+    CdcStreamProvider.cdcPartitions(spark, cat, table, sv, ev, dataSchema, admit)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

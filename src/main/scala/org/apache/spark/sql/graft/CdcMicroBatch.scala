@@ -674,34 +674,41 @@ final class CdcPartitionReader(
     g
   }
 
+  // a key with a NULL part never pairs (NULL = NULL is unknown, as in
+  // VersionedTable.changes): such a row stays out of the map, so an old
+  // one is a delete and a new one an insert
+  private def nullKey(row: InternalRow): Boolean = keyOrdinals.exists(row.isNullAt)
+
   // old side materialized ONCE per partition (bucket-bounded, see object
-  // doc); rows must be copied — the parquet reader reuses its row buffer
-  private lazy val oldByKey: java.util.HashMap[Seq[Any], InternalRow] = {
+  // doc); rows must be copied — the parquet reader reuses its row buffer.
+  // NULL-keyed old rows go straight to the leftover deletes.
+  private lazy val (oldByKey, oldNullKeyed) = {
     val m = new java.util.HashMap[Seq[Any], InternalRow]()
+    val unpaired = new java.util.ArrayList[InternalRow]()
     rows(part.oldFiles, part.eqOld).foreach { r =>
       val c = r.copy()
-      m.put(keyOf(c), c)
+      if (nullKey(c)) unpaired.add(c) else m.put(keyOf(c), c)
     }
-    m
+    (m, unpaired)
   }
 
   private lazy val newIter = rows(part.newFiles, part.eqNew)
-  private var leftoverIter: java.util.Iterator[InternalRow] = _
+  private var leftoverIter: Iterator[InternalRow] = _
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     current = null
     while (current == null && newIter.hasNext) {
       val r = newIter.next()
-      val k = keyOf(r)
-      val old = oldByKey.remove(k)
+      val old = if (nullKey(r)) null else oldByKey.remove(keyOf(r))
       if (old == null) current = out("insert", r)
       else if (!valueOrdinals.forall(i => sameValue(i, old, r)))
         current = out("update", r)
       // else unchanged (a rewritten file carries untouched rows): skip
     }
     if (current == null) {
-      if (leftoverIter == null) leftoverIter = oldByKey.values().iterator()
+      if (leftoverIter == null)
+        leftoverIter = oldNullKeyed.iterator().asScala ++ oldByKey.values().iterator().asScala
       if (leftoverIter.hasNext)
         current = out("delete", leftoverIter.next())
     }

@@ -135,18 +135,7 @@ class OperatorsSpec extends SparkSpec {
     assert(fps(1L) != fps(2L))
   }
 
-  test("connectedComponents converges on a chain (multi-iteration) and isolates singletons") {
-    // chain 9-7-5-3-1 (descending propagation needs several rounds) + isolated 8
-    val ids = spark.createDataFrame(Seq(1L, 3L, 5L, 7L, 9L, 8L).map(Tuple1(_))).toDF("id")
-    val pairs = spark.createDataFrame(
-      Seq((7L, 9L), (5L, 7L), (3L, 5L), (1L, 3L))).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(ids, "id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Seq(1L, 3L, 5L, 7L, 9L).forall(comps(_) == 1L), s"chain not merged: $comps")
-    assert(comps(8L) == 8L)
-  }
-
-  test("connectedComponentsAuto: union-find fast path equals iterative propagation") {
+  test("connectedComponentsAuto: union-find fast path equals the distributed star rounds") {
     val ids = spark.createDataFrame(Seq(1L, 3L, 5L, 7L, 9L, 8L).map(Tuple1(_))).toDF("id")
     val pairs = spark.createDataFrame(
       Seq((7L, 9L), (5L, 7L), (3L, 5L), (1L, 3L))).toDF("id_a", "id_b")

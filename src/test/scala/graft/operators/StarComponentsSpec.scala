@@ -1,45 +1,54 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JobLedger
 
 class StarComponentsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def labelsOf(ids: Seq[Long], pairs: Seq[(Long, Long)]) =
+  private def labelsOf[T: Encoder](ids: Seq[T], pairs: Seq[(T, T)]): Map[T, T] =
     Dedup.connectedComponentsStar(
-      ids.toDF("id"), "id", pairs.toDF("id_a", "id_b"))
-      .as[(Long, Long)].collect().toMap
+      spark.createDataset(ids).toDF("id"), "id",
+      spark.createDataset(pairs)(Encoders.tuple(implicitly[Encoder[T]],
+        implicitly[Encoder[T]])).toDF("id_a", "id_b"))
+      .collect().map(r => r.getAs[T](0) -> r.getAs[T](1)).toMap
 
-  /** Reference labeling via plain driver union-find. */
-  private def expected(ids: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
+  /** Reference labeling via plain driver union-find: every node maps to
+    * the minimum of its component under `Ordering[T]`. */
+  private def expected[T](ids: Seq[T], pairs: Seq[(T, T)])(
+      implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map[T, T]()
+    def find(x: T): T = {
       val p = parent.getOrElse(x, x)
       if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
     pairs.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
     }
     ids.map(i => i -> find(i)).toMap
   }
 
+  private def chainPairs(n: Long) = (0L until n - 1).map(i => (i, i + 1))
+
   test("long chain (diameter ≫ rounds) converges to the minimum label") {
     val n = 300L
-    val ids = (0L until n)
-    val chain = (0L until n - 1).map(i => (i, i + 1))
-    val got = labelsOf(ids, chain)
+    val got = labelsOf(0L until n, chainPairs(n))
     assert(got.size == n)
     assert(got.values.forall(_ == 0L), "every chain node must label to the minimum")
   }
 
-  test("min-label propagation throws on the same chain when diameter exceeds its rounds") {
-    val ids = (0L until 50L).toDF("id")
-    val chain = (0L until 49L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(ids, "id", chain, maxIters = 5).collect()
+  test("the star rounds refuse to return labels they did not converge to") {
+    // the chain above converges under the default budget in more than one
+    // round (the job-count test below counts them); one round leaves it
+    // unfinished
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponentsStar((0L until 300L).toDF("id"), "id",
+        chainPairs(300L).toDF("id_a", "id_b"), maxIters = 1).collect()
     }
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
   }
 
   test("seeded random graphs match driver union-find exactly") {
@@ -50,6 +59,14 @@ class StarComponentsSpec extends SparkSpec {
       val pairs = Seq.fill(80)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
       assert(labelsOf(ids, pairs) == expected(ids, pairs))
+      // the same graphs with non-Long ids run through the dense rank
+      val intIds = ids.map(_.toInt)
+      val intPairs = pairs.map { case (a, b) => (a.toInt, b.toInt) }
+      assert(labelsOf(intIds, intPairs) == expected(intIds, intPairs))
+      def pad(i: Long) = f"n$i%04d"
+      val strIds = ids.map(pad)
+      val strPairs = pairs.map { case (a, b) => (pad(a), pad(b)) }
+      assert(labelsOf(strIds, strPairs) == expected(strIds, strPairs))
     }
   }
 
@@ -69,5 +86,47 @@ class StarComponentsSpec extends SparkSpec {
         Seq.empty[(Long, Long)].toDF("id_a", "id_b"), maxIters = 0)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(5L -> 5L, 7L -> 7L))
+  }
+
+  test("the star rounds start the parent's jobs and keep a flat lineage") {
+    // job counts recorded at the commit before the rounds truncated their
+    // lineage: cutting it must not cost a job
+    val docs = spark.createDataFrame(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "quick brown fox jumps over the lazy dog"),
+      (3L, "completely different words entirely here now"),
+      (4L, "the quick brown fox jumps over the lazy dog")
+    )).toDF("doc_id", "text")
+    val (kept, dropJobs) = JobLedger(spark) {
+      Dedup.dropNearDuplicates(docs, "doc_id", "text", n = 3, numPerms = 16,
+        bands = 4, threshold = 0.5, maxDriverEdges = 0)
+        .select("doc_id").as[Long].collect().sorted.toSeq
+    }
+    assert(kept == Seq(1L, 3L))
+    assert(dropJobs.size == 23, s"forced-distributed drop jobs: ${dropJobs.size}")
+    def run(n: Long) = JobLedger(spark) {
+      val labels = Dedup.connectedComponentsStar((0L until n).toDF("id"), "id",
+        chainPairs(n).toDF("id_a", "id_b"))
+      labels.collect()
+      labels
+    }
+    val (oneRound, oneJobs) = run(2L)
+    val (manyRounds, manyJobs) = run(300L)
+    assert(manyJobs.size == 12, s"300-node chain jobs: ${manyJobs.size}")
+    // one probe job per round: the chain takes at least 3 rounds
+    assert(manyJobs.size - oneJobs.size >= 2)
+    def lines(s: String) = s.linesIterator.size
+    assert(lines(oneRound.rdd.toDebugString) == lines(manyRounds.rdd.toDebugString))
+    // the labels reach the forest through a broadcast, so its rounds are
+    // not in their lineage; the forest's own lineage is the one a round
+    // would extend. An 8-node chain takes 3 rounds (one probe job more
+    // per node doubling); kept small because an untruncated lineage
+    // prints exponentially in the round count
+    def forestLines(n: Long) = {
+      val (forest, _) = Dedup.starForest(chainPairs(n).toDF("id_a", "id_b"), maxIters = 50)
+      try lines(forest.toDebugString) finally forest.unpersist(false)
+    }
+    assert(run(8L)._2.size - oneJobs.size == 2)
+    assert(forestLines(2L) == forestLines(8L))
   }
 }

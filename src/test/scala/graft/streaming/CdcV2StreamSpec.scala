@@ -261,6 +261,29 @@ class CdcV2StreamSpec extends SparkSpec {
     assert(snap.length == 29 && snap.forall(_._1 == "insert"))
   }
 
+  test("the batch feed keeps NULL-keyed rows unpaired, as changes() does") {
+    // no upsertFields, so NULL keys load; the copy-on-write delete of one
+    // NULL-keyed row rewrites the file, and the surviving NULL-keyed row
+    // must not absorb the vanished one (NULL = NULL is unknown)
+    val src = new Catalog(spark, tmpDir("v2nullkey"))
+    VersionedTable.load(src, "t",
+      Seq((Some(1L), 1.0), ((None: Option[Long]), 2.0),
+        ((None: Option[Long]), 3.0)).toDF("k", "v"),
+      idOrder = Seq("v"))
+    val v1 = VersionedTable.currentVersion(src, "t").get
+    VersionedTable.delete(src, "t", col("v") === 3.0)
+    val v2 = VersionedTable.currentVersion(src, "t").get
+    def rows(df: DataFrame) = df.select("op", "k", "id", "v").collect()
+      .map(_.mkString("[", ",", "]")).sorted.mkString(";")
+    val want = rows(VersionedTable.changes(src, "t", v1, v2, Seq("k")))
+    assert(want == "[delete,null,2,2.0];[delete,null,3,3.0];[insert,null,2,2.0]")
+    val got = rows(spark.read.format("graft-cdc")
+      .option("dir", src.dir).option("table", "t").option("keys", "k")
+      .option("startingVersion", v1.toString)
+      .option("endingVersion", v2.toString).load())
+    assert(got == want, "batch feed must equal the library change feed")
+  }
+
   test("the CDC stream replays a DV-delete batch exactly across a compaction") {
     val src = new Catalog(spark, tmpDir("v2morsrc"))
     val dst = new Catalog(spark, tmpDir("v2mordst"))
