@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.graft.CdcMicroBatch.FileSlice
 
 /** Manifest-based versioned tables: time travel, O(1) snapshots, and a
   * change-data-feed — the mini table-format layer the big systems (Delta,
@@ -6081,29 +6082,29 @@ object VersionedTable {
 
   // ------------------------------------------- streaming CDC partition plan
 
-  /** (absolute path, byte length, DV sidecar, tombstone stamp) of
-    * version `v`'s files — lengths from the manifest (status-RPC
-    * fallback for pre-sizes manifests). The stamp is the file's
-    * equality-tombstone sequence ([[EqSeqProp]]; MaxValue = newer than
-    * every tombstone), so streaming readers can apply key anti-filters
-    * exactly like the batch scan. */
-  private def fileSlices(tgt: Catalog, table: String, man: Manifest)
-      : Seq[(String, Long, Option[String], Long)] = {
+  /** The streaming readers' slices (absolute path, byte length, DV
+    * sidecar, tombstone stamp) of the manifest's files `rels` — lengths
+    * from the manifest (status-RPC fallback for pre-sizes manifests).
+    * The stamp is the file's equality-tombstone sequence ([[EqSeqProp]];
+    * MaxValue = newer than every tombstone), so streaming readers can
+    * apply key anti-filters exactly like the batch scan. */
+  private def fileSlices(tgt: Catalog, table: String, man: Manifest,
+                         rels: Seq[String]): Seq[FileSlice] = {
     lazy val f = fs(tgt, dataDir(tgt, table))
     val stamps = eqSeqsOf(man.props)
-    man.files.map { rel =>
+    rels.map { rel =>
       val abs = new Path(dataDir(tgt, table), rel).toString
-      (abs, man.sizes.getOrElse(rel, f.getFileStatus(new Path(abs)).getLen),
+      FileSlice(abs, man.sizes.getOrElse(rel, f.getFileStatus(new Path(abs)).getLen),
         man.dvs.get(rel).map { case (p, _) =>
           new Path(dataDir(tgt, table), p).toString
         },
-        stamps.getOrElse(rel, Long.MaxValue))
+        eqSeq = stamps.getOrElse(rel, Long.MaxValue))
     }
   }
 
   /** Partition plan for a streaming CDC batch `(fromV, toV]`: pairs of
-    * (old files, new files) from the two manifests' UNSHARED file sets,
-    * each pair diffable PARTITION-LOCALLY:
+    * (old files, new files) from the version pair's [[diffFiles]], each
+    * pair diffable PARTITION-LOCALLY:
     *
     *   - `fromV == 0` (bootstrap) or an append pair (no replaced files):
     *     one partition PER NEW FILE, no old side — full parallelism,
@@ -6123,8 +6124,7 @@ object VersionedTable {
                                toV: Long,
                                admit: org.apache.spark.sql.graft.ZonePred.P =
                                  org.apache.spark.sql.graft.ZonePred.And(Nil))
-      : Seq[(Seq[(String, Long, Option[String], Long)],
-             Seq[(String, Long, Option[String], Long)])] = {
+      : Seq[(Seq[FileSlice], Seq[FileSlice])] = {
     val manB = readManifest(tgt, table, toV).getOrElse(
       throw new IllegalArgumentException(s"table '$table' has no version $toV"))
     // ADMISSION-TIME pruning (the `admissionFilter` option): drop files
@@ -6135,61 +6135,56 @@ object VersionedTable {
     def admitted(man: Manifest, rels: Seq[String]): Seq[String] =
       rels.filter(r => fileAdmits(man, r, admit))
     if (fromV <= 0L)
-      return fileSlices(tgt, table,
-        manB.copy(files = admitted(manB, manB.files))).map(s => (Nil, Seq(s)))
+      return fileSlices(tgt, table, manB, admitted(manB, manB.files))
+        .map(s => (Nil, Seq(s)))
     val manA = readManifest(tgt, table, fromV).getOrElse(throw new IllegalStateException(
       s"CDC start version v$fromV of '$table' was vacuumed away — a diff " +
         "from an older version could resurrect keys deleted inside the gap; " +
         "retain more versions or reset the stream checkpoint to re-bootstrap"))
-    val (setA, setB) = (manA.files.toSet, manB.files.toSet)
-    // a file SHARED by both versions but with a different deletion
-    // vector changed rows: it enters BOTH sides (each with its own DV),
-    // and the partition-local diff emits exactly the newly-deleted keys
-    val dvChanged = manA.files.filter(r =>
-      setB(r) && manA.dvs.get(r) != manB.dvs.get(r))
-    // LIVE EQUALITY TOMBSTONES: shared files whose applicable tombstone
-    // sets differ enter both sides too — each side's reader applies its
-    // own key anti-filters ([[CdcMicroBatch]] ships per-side specs), so
-    // an eq-upsert's implied deletes surface as feed rows instead of
-    // refusing the stream (zone-pruned by the delta tombstones' key
-    // envelopes, [[eqChangedShared]])
-    val eqChanged = eqChangedShared(tgt, table, manA, manB,
-      manA.files.filter(r => setB(r)).filterNot(dvChanged.toSet))
-    val onlyA = admitted(manA,
-      manA.files.filterNot(setB) ++ dvChanged ++ eqChanged)
-    val onlyB = admitted(manB,
-      manB.files.filterNot(setA) ++ dvChanged ++ eqChanged)
-    def slices(man: Manifest, rels: Seq[String])
-        : Seq[(String, String, Long, Option[String], Long)] = {
-      lazy val f = fs(tgt, dataDir(tgt, table))
-      val stamps = eqSeqsOf(man.props)
-      rels.map { rel =>
-        val abs = new Path(dataDir(tgt, table), rel).toString
-        (rel, abs, man.sizes.getOrElse(rel, f.getFileStatus(new Path(abs)).getLen),
-          man.dvs.get(rel).map { case (p, _) =>
-            new Path(dataDir(tgt, table), p).toString
-          },
-          stamps.getOrElse(rel, Long.MaxValue))
-      }
-    }
-    val a = slices(manA, onlyA)
-    val b = slices(manB, onlyB)
-    if (a.isEmpty) b.map { case (_, abs, len, dv, sq) =>
-      (Nil, Seq((abs, len, dv, sq))) }
+    // each side's reader applies its own DVs and key anti-filters
+    // ([[CdcMicroBatch]] ships per-side tombstone specs)
+    val (diffA, diffB) = diffFiles(tgt, table, manA, manB)
+    val onlyA = admitted(manA, diffA)
+    val onlyB = admitted(manB, diffB)
+    val a = onlyA.zip(fileSlices(tgt, table, manA, onlyA))
+    val b = onlyB.zip(fileSlices(tgt, table, manB, onlyB))
+    if (a.isEmpty) b.map { case (_, s) => (Nil, Seq(s)) }
     else if ((onlyA ++ onlyB).forall(r => bucketOfRel(r).isDefined)) {
       val byBucket = (a.map((_, true)) ++ b.map((_, false)))
-        .groupBy { case ((rel, _, _, _, _), _) => bucketOfRel(rel).get }
+        .groupBy { case ((rel, _), _) => bucketOfRel(rel).get }
       byBucket.toSeq.sortBy(_._1).map { case (_, members) =>
-        (members.collect { case ((_, abs, len, dv, sq), true) => (abs, len, dv, sq) },
-         members.collect { case ((_, abs, len, dv, sq), false) => (abs, len, dv, sq) })
+        (members.collect { case ((_, s), true) => s },
+         members.collect { case ((_, s), false) => s })
       }
     } else
-      Seq((a.map(t => (t._2, t._3, t._4, t._5)), b.map(t => (t._2, t._3, t._4, t._5))))
+      Seq((a.map(_._2), b.map(_._2)))
+  }
+
+  /** The files a diff of the version pair (manA, manB) must read, per
+    * side: the unshared files, plus every SHARED file whose rows differ
+    * between the versions — a changed deletion vector, or a different
+    * set of applicable equality tombstones (an eq-upsert deleted rows
+    * from files it never touched; [[eqChangedShared]] zone-prunes those
+    * candidates by the delta tombstones' key envelopes). A changed
+    * shared file enters BOTH sides, each read under its own version's
+    * DV and tombstones, so its vanished keys surface as deletes exactly
+    * like a rewrite's. The one rule behind [[changes]], [[cdcSlices]]
+    * and [[cdcStepBytes]]. */
+  private def diffFiles(tgt: Catalog, table: String,
+                        manA: Manifest, manB: Manifest)
+      : (Seq[String], Seq[String]) = {
+    val (setA, setB) = (manA.files.toSet, manB.files.toSet)
+    val dvChanged = manA.files.filter(r =>
+      setB(r) && manA.dvs.get(r) != manB.dvs.get(r))
+    val eqChanged = eqChangedShared(tgt, table, manA, manB,
+      manA.files.filter(r => setB(r)).filterNot(dvChanged.toSet))
+    (manA.files.filterNot(setB) ++ dvChanged ++ eqChanged,
+      manB.files.filterNot(setA) ++ dvChanged ++ eqChanged)
   }
 
   /** Append-tail plan for the `graft` STREAMING read `(fromV, toV]`:
-    * the data files ADDED across the range, as (absolute path, byte
-    * length) — manifest-only. `fromV <= 0` is the bootstrap (the end
+    * the data files ADDED across the range, as [[fileSlices]] —
+    * manifest-only. `fromV <= 0` is the bootstrap (the end
     * version's full snapshot). The walk is per consecutive version pair
     * so a commit that REMOVES files (upsert rewrite, delete, compact)
     * is detected exactly: refused with a pointer at `graft-cdc` (whose
@@ -6203,7 +6198,7 @@ object VersionedTable {
                                   snapshotBootstrap: Boolean = true,
                                   admit: org.apache.spark.sql.graft.ZonePred.P =
                                     org.apache.spark.sql.graft.ZonePred.And(Nil))
-      : Seq[(String, Long, Option[String], Long)] = {
+      : Seq[FileSlice] = {
     // ADMISSION-TIME pruning (the `admissionFilter` option): a file whose
     // zone maps prove no matching row never enters a batch — the
     // streaming twin of the batch format's pushed-filter file pruning
@@ -6217,7 +6212,7 @@ object VersionedTable {
       // would replay intermediate rewrites the snapshot already folded)
       val man = readManifest(tgt, table, toV).getOrElse(
         throw new IllegalArgumentException(s"table '$table' has no version $toV"))
-      return fileSlices(tgt, table, man.copy(files = admitted(man, man.files)))
+      return fileSlices(tgt, table, man, admitted(man, man.files))
     }
     // per-version WALK — also for `startingVersion=1` (fromV 0 with the
     // snapshot disabled): v1's prior state is empty, so its "appends" are
@@ -6257,8 +6252,7 @@ object VersionedTable {
             "'graft-cdc' for update/delete semantics, or option " +
             "skipChangeCommits=true to skip change commits")
         Nil
-      } else fileSlices(tgt, table,
-        b.copy(files = admitted(b, b.files.filterNot(setA))))
+      } else fileSlices(tgt, table, b, admitted(b, b.files.filterNot(setA)))
     }
   }
 
@@ -6275,19 +6269,22 @@ object VersionedTable {
     b.files.filterNot(prior).map(r => b.sizes.getOrElse(r, 0L)).sum
   }
 
-  /** Bytes a CDC step `(v-1, v]` reads: the two manifests' UNSHARED files
-    * on both sides (exactly what [[cdcSlices]] plans) — the byte-pacing
-    * unit for the `graft-cdc` stream. Manifest-only. */
+  /** Bytes a CDC step `(v-1, v]` reads: the recorded sizes of both
+    * sides' [[diffFiles]], so a file whose deletion vector or tombstones
+    * changed counts once per side, as [[cdcSlices]] reads it — the
+    * byte-pacing unit for the `graft-cdc` stream. Manifest metadata
+    * only (plus tombstone key-file footers when tombstones are live). */
   private[graft] def cdcStepBytes(tgt: Catalog, table: String, v: Long): Long = {
     val bOpt = readManifest(tgt, table, v)
     if (bOpt.isEmpty) return 0L
     val b = bOpt.get
+    def bytes(man: Manifest, rels: Seq[String]) =
+      rels.map(r => man.sizes.getOrElse(r, 0L)).sum
     readManifest(tgt, table, v - 1) match {
-      case None => b.files.map(r => b.sizes.getOrElse(r, 0L)).sum
+      case None => bytes(b, b.files)
       case Some(a) =>
-        val (sa, sb) = (a.files.toSet, b.files.toSet)
-        a.files.filterNot(sb).map(r => a.sizes.getOrElse(r, 0L)).sum +
-          b.files.filterNot(sa).map(r => b.sizes.getOrElse(r, 0L)).sum
+        val (onlyA, onlyB) = diffFiles(tgt, table, a, b)
+        bytes(a, onlyA) + bytes(b, onlyB)
     }
   }
 
@@ -6615,26 +6612,12 @@ object VersionedTable {
         s"table '$table' has no version $fromV"))
     val manB = readManifest(tgt, table, toV).getOrElse(
       throw new IllegalArgumentException(s"table '$table' has no version $toV"))
-    val (setA, setB) = (manA.files.toSet, manB.files.toSet)
-    // a shared file whose deletion vector differs changed rows — it
-    // enters both sides (each side applies its OWN DV), so newly-DV'd
-    // keys surface as deletes exactly like a rewrite's vanished rows
-    val dvChanged = manA.files.filter(r =>
-      setB(r) && manA.dvs.get(r) != manB.dvs.get(r))
-    // LIVE EQUALITY TOMBSTONES resolve AT READ instead of refusing: a
-    // shared file contributes identical rows to both sides only when
-    // the same tombstones apply to it under both manifests, so shared
-    // files whose applicable sets differ enter BOTH sides — each side's
-    // read resolves its own tombstones (readRelsWithDv routes through
-    // readRelsEq). An eq-upsert's delete side is then (tombstone keys ∩
-    // parent live rows) and its insert side the batch files: the
-    // last-writer-wins diff, computed distributed, nothing
-    // materialized. [[eqChangedShared]] zone-prunes the candidates by
-    // the delta tombstones' key envelopes.
-    val eqChanged = eqChangedShared(tgt, table, manA, manB,
-      manA.files.filter(r => setB(r)).filterNot(dvChanged.toSet))
-    val onlyA = manA.files.filterNot(setB) ++ dvChanged ++ eqChanged
-    val onlyB = manB.files.filterNot(setA) ++ dvChanged ++ eqChanged
+    // each side's read applies its own DVs and resolves its own live
+    // equality tombstones (readRelsWithDv routes through readRelsEq): an
+    // eq-upsert's delete side is then (tombstone keys ∩ parent live
+    // rows) and its insert side the batch files — the last-writer-wins
+    // diff, computed distributed, nothing materialized
+    val (onlyA, onlyB) = diffFiles(tgt, table, manA, manB)
     // a side with no unshared files contributes no candidate rows; an
     // empty LOCAL relation with the side's schema (one footer read, zero
     // data I/O — a limit(0) parquet scan would still mount the file)

@@ -113,34 +113,49 @@ object CdcSource {
     * consumer's lag, or reset the checkpoint to re-bootstrap. */
   def mirrorOnce(src: Catalog, table: String, keys: Seq[String],
                  dst: Catalog, mirror: String, checkpointDir: String,
-                 bucketBy: Option[(Seq[String], Int)] = None): Seq[Long] = {
-    val vs = VersionedTable.versions(src, table)
-    if (vs.isEmpty) return Nil
-    var wm = watermark(dst, checkpointDir)
-    val applied = Seq.newBuilder[Long]
-    if (wm == 0L) {
+                 bucketBy: Option[(Seq[String], Int)] = None): Seq[Long] =
+    drain(src, table, dst, checkpointDir,
+      vacuumed = wm =>
+        s"CDC watermark v$wm of '$table' was vacuumed away — a diff from an " +
+          "older version could resurrect keys deleted inside the gap; retain " +
+          "more versions or reset the checkpoint to re-bootstrap the mirror",
       // bootstrap: the oldest retained version, as one upserting load
       // (idempotent under replay)
-      val v0 = vs.head
-      VersionedTable.load(dst, mirror,
+      bootstrap = v0 => VersionedTable.load(dst, mirror,
         VersionedTable.readVersion(src, table, v0).drop(Loader.IdCol),
-        upsertFields = keys, idOrder = keys, bucketBy = bucketBy)
-      advanceWatermark(dst, checkpointDir, v0)
-      applied += v0
-      wm = v0
-    }
-    require(vs.contains(wm) || vs.forall(_ <= wm),
-      s"CDC watermark v$wm of '$table' was vacuumed away — a diff from an " +
-        "older version could resurrect keys deleted inside the gap; retain " +
-        "more versions or reset the checkpoint to re-bootstrap the mirror")
-    vs.filter(_ > wm).foldLeft(wm) { (prev, v) =>
-      val feed = VersionedTable.changes(src, table, prev, v, keys)
-      applyFeed(dst, mirror, feed, keys, bucketBy)
-      advanceWatermark(dst, checkpointDir, v)
-      applied += v
+        upsertFields = keys, idOrder = keys, bucketBy = bucketBy),
+      step = (prev, v) => applyFeed(dst, mirror,
+        VersionedTable.changes(src, table, prev, v, keys), keys, bucketBy))
+
+  /** The drain skeleton of [[mirrorOnce]] and [[maintainView]]: when the
+    * watermark in `checkpointDir` (kept under `wmTgt`) is 0, `bootstrap`
+    * the oldest retained version; refuse a vacuumed-away watermark with
+    * `vacuumed(wm)`; then apply `step(prev, v)` to every unseen version in
+    * commit order, advancing the watermark after each. Returns the
+    * versions applied (empty = already caught up). */
+  private def drain(src: Catalog, table: String, wmTgt: Catalog,
+                    checkpointDir: String, vacuumed: Long => String,
+                    bootstrap: Long => Unit,
+                    step: (Long, Long) => Unit): Seq[Long] = {
+    val vs = VersionedTable.versions(src, table)
+    if (vs.isEmpty) return Nil
+    val wm0 = watermark(wmTgt, checkpointDir)
+    val booted =
+      if (wm0 != 0L) Nil
+      else {
+        bootstrap(vs.head)
+        advanceWatermark(wmTgt, checkpointDir, vs.head)
+        Seq(vs.head)
+      }
+    val wm = booted.headOption.getOrElse(wm0)
+    require(vs.contains(wm) || vs.forall(_ <= wm), vacuumed(wm))
+    val pending = vs.filter(_ > wm)
+    pending.foldLeft(wm) { (prev, v) =>
+      step(prev, v)
+      advanceWatermark(wmTgt, checkpointDir, v)
       v
     }
-    applied.result()
+    booted ++ pending
   }
 
   /** Drain the change feed into an incrementally-MAINTAINED AGGREGATE VIEW
@@ -175,64 +190,53 @@ object CdcSource {
                    groupBy: Seq[String], aggs: Seq[MaterializedAgg.AggCol],
                    checkpointDir: String,
                    project: DataFrame => DataFrame = identity): Seq[Long] = {
-    val vs = VersionedTable.versions(src, table)
-    if (vs.isEmpty) return Nil
-    var wm = watermark(viewTgt, checkpointDir)
-    val applied = Seq.newBuilder[Long]
     val retractableOnly =
       aggs.forall(a => Set("sum", "count", "avg")(a.func))
-    if (wm == 0L) {
-      val v0 = vs.head
-      // RE-BASE GUARD: watermark 0 with an already-populated view means
-      // the watermark file was lost (or the checkpoint moved). The
-      // per-group stamps make a replay of versions >= v0 a no-op, but a
-      // group stamped BEFORE v0 (its later versions vacuumed away) would
-      // have the v0 snapshot additively folded ON TOP of state that
-      // already counts part of it — double-counting sums. Detect that
-      // shape (any stamp < v0, or an unstamped legacy view) and REBUILD
-      // from the snapshot instead: the snapshot at the earliest retained
-      // version is the table's full state, so view := agg(snapshot) then
-      // replaying the retained feeds reconverges exactly.
-      val needsRebase = viewTgt.resolve(view).isDefined && {
-        val cur = viewTgt.table(view)
-        !cur.columns.contains(MaterializedAgg.StampCol) || {
-          val r = cur.agg(min(col(MaterializedAgg.StampCol))).head()
-          r.isNullAt(0) || r.getLong(0) < v0
+    drain(src, table, viewTgt, checkpointDir,
+      vacuumed = wm =>
+        s"view watermark v$wm of '$table' was vacuumed away — retain more " +
+          "versions or rebuild the view from a fresh snapshot",
+      bootstrap = { v0 =>
+        // RE-BASE GUARD: watermark 0 with an already-populated view means
+        // the watermark file was lost (or the checkpoint moved). The
+        // per-group stamps make a replay of versions >= v0 a no-op, but a
+        // group stamped BEFORE v0 (its later versions vacuumed away) would
+        // have the v0 snapshot additively folded ON TOP of state that
+        // already counts part of it — double-counting sums. Detect that
+        // shape (any stamp < v0, or an unstamped legacy view) and REBUILD
+        // from the snapshot instead: the snapshot at the earliest retained
+        // version is the table's full state, so view := agg(snapshot) then
+        // replaying the retained feeds reconverges exactly.
+        val needsRebase = viewTgt.resolve(view).isDefined && {
+          val cur = viewTgt.table(view)
+          !cur.columns.contains(MaterializedAgg.StampCol) || {
+            val r = cur.agg(min(col(MaterializedAgg.StampCol))).head()
+            r.isNullAt(0) || r.getLong(0) < v0
+          }
         }
-      }
-      if (needsRebase) {
-        graft.GraftLog.warn(
-          s"view '$view': watermark lost with pre-v$v0 state in the " +
-            "view — rebuilding from the earliest retained snapshot to avoid " +
-            "double-counting")
-        val vp = new Path(viewTgt.dirPath(view))
-        vp.getFileSystem(viewTgt.spark.sparkContext.hadoopConfiguration)
-          .delete(vp, true)
-      }
-      MaterializedAgg.refresh(viewTgt, view,
-        project(VersionedTable.readVersion(src, table, v0)), groupBy, aggs,
-        sourceVersion = Some(v0))
-      advanceWatermark(viewTgt, checkpointDir, v0)
-      applied += v0
-      wm = v0
-    }
-    require(vs.contains(wm) || vs.forall(_ <= wm),
-      s"view watermark v$wm of '$table' was vacuumed away — retain more " +
-        "versions or rebuild the view from a fresh snapshot")
-    vs.filter(_ > wm).foldLeft(wm) { (prev, v) =>
-      val feed = project(
-        VersionedTable.changes(src, table, prev, v, keys, includeOld = true))
-      if (retractableOnly)
-        MaterializedAgg.applyChanges(viewTgt, view, feed, groupBy, aggs,
-          sourceVersion = Some(v))
-      else
-        MaterializedAgg.applyChanges(viewTgt, view, feed,
-          project(VersionedTable.readVersion(src, table, v)), groupBy, aggs,
-          sourceVersion = Some(v))
-      advanceWatermark(viewTgt, checkpointDir, v)
-      applied += v
-      v
-    }
-    applied.result()
+        if (needsRebase) {
+          graft.GraftLog.warn(
+            s"view '$view': watermark lost with pre-v$v0 state in the " +
+              "view — rebuilding from the earliest retained snapshot to avoid " +
+              "double-counting")
+          val vp = new Path(viewTgt.dirPath(view))
+          vp.getFileSystem(viewTgt.spark.sparkContext.hadoopConfiguration)
+            .delete(vp, true)
+        }
+        MaterializedAgg.refresh(viewTgt, view,
+          project(VersionedTable.readVersion(src, table, v0)), groupBy, aggs,
+          sourceVersion = Some(v0))
+      },
+      step = { (prev, v) =>
+        val feed = project(
+          VersionedTable.changes(src, table, prev, v, keys, includeOld = true))
+        if (retractableOnly)
+          MaterializedAgg.applyChanges(viewTgt, view, feed, groupBy, aggs,
+            sourceVersion = Some(v))
+        else
+          MaterializedAgg.applyChanges(viewTgt, view, feed,
+            project(VersionedTable.readVersion(src, table, v)), groupBy, aggs,
+            sourceVersion = Some(v))
+      })
   }
 }

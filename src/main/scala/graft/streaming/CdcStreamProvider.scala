@@ -31,9 +31,11 @@ import graft.etl.{Catalog, VersionedTable}
   * (start, end] = the exact state diff between the two retained
   * manifests, start 0 = bootstrap (the end version's full snapshot as
   * inserts). Batches are planned from manifests alone (no file listing,
-  * no status RPCs for sized manifests) and read ONLY the versions'
-  * unshared files — an append's batch costs O(appended files) against a
-  * table of any size. Engine-managed checkpoints give exactly-once:
+  * no status RPCs for sized manifests) and read ONLY the version pair's
+  * diff files — the unshared files, plus shared files whose deletion
+  * vector or live tombstones changed, read on both sides — so an
+  * append's batch costs O(appended files) against a table of any size.
+  * Engine-managed checkpoints give exactly-once:
   * offsets are committed to the checkpoint's WAL, a restart replans the
   * SAME (start, end] range, and manifests are immutable, so the replayed
   * batch is bit-identical — with an idempotent or transactional sink
@@ -43,7 +45,8 @@ import graft.etl.{Catalog, VersionedTable}
   * vs [[CdcSource.mirrorOnce]]: that drain-loop stays for schedulers
   * that want a library call; this source gets engine triggers
   * (`AvailableNow`, processing-time), rate control by versions
-  * (`maxVersionsPerTrigger`), progress reporting, and checkpoint interop
+  * (`maxVersionsPerTrigger`) and by diff bytes (`maxBytesPerTrigger`,
+  * [[VersionPacedStream]]), progress reporting, and checkpoint interop
   * for free.
   *
   * BATCH reads work too (the `table_changes(...)` shape):
@@ -61,7 +64,11 @@ import graft.etl.{Catalog, VersionedTable}
   * reset-the-checkpoint message instead of resurrecting ghost rows.
   * Flat-table rewrites diff in one partition; bucket the table to
   * stream updates at scale (class doc of
-  * [[org.apache.spark.sql.graft.CdcMicroBatch]]).
+  * [[org.apache.spark.sql.graft.CdcMicroBatch]]). A partition with an
+  * old side emits at most one row per non-NULL key tuple, as `changes`
+  * does; an append-only partition (one per new file) streams its rows
+  * as inserts, so a key duplicated across appended files surfaces once
+  * per row.
   *
   * (Reference anchor: the polling incremental extract,
   * /root/reference/easy_etl/__init__.py:77-87, is the batch ancestor of
@@ -275,11 +282,8 @@ private[graft] object CdcStreamProvider {
       VersionedTable.eqDeleteState(cat, table, v)._1)
     val eqOld = if (sv <= 0L) Nil else eqSpecs(sv)
     val eqNew = eqSpecs(ev)
-    def slices(side: Seq[(String, Long, Option[String], Long)]) =
-      side.map { case (p, l, dv, sq) => CdcMicroBatch.FileSlice(p, l, dv, eqSeq = sq) }
     VersionedTable.cdcSlices(cat, table, sv, ev, admit).map { case (old, fresh) =>
-      CdcMicroBatch.CdcInputPartition(slices(old), slices(fresh), eqOld, eqNew)
-        : InputPartition
+      CdcMicroBatch.CdcInputPartition(old, fresh, eqOld, eqNew): InputPartition
     }.toArray
   }
 
@@ -476,26 +480,49 @@ private[streaming] final case class CdcOffset(version: Long) extends Offset {
   override def json(): String = s"""{"version":$version}"""
 }
 
-private[streaming] final class CdcMicroBatchStream(
+/** A micro-batch stream over a versioned table's commits — the offset,
+  * pacing and AvailableNow machinery shared by the `graft-cdc` change
+  * feed ([[CdcMicroBatchStream]]) and the `graft` append tail
+  * ([[GraftAppendStream]]). Offset = table version; batch (start, end]
+  * spans the commits after `start` up to `end`; start 0 is the snapshot
+  * bootstrap unless `startingVersion` was given.
+  *
+  * RATE CONTROL by commits (`maxVersionsPerTrigger`) and/or bytes
+  * (`maxBytesPerTrigger`, over the subclass's per-version
+  * [[versionBytes]], read from manifests: zero data I/O). A batch always admits at least
+  * one version (a single commit bigger than the byte budget must still
+  * flow — same rule as every file-source maxBytes option), and the
+  * bootstrap snapshot admits whole (it is one atomic state). Without caps
+  * a trigger drains to the head in one batch.
+  *
+  * Subclasses supply only the byte measure, the partition plan and the
+  * reader factory. */
+private[streaming] abstract class VersionPacedStream(
     spark: SparkSession, dir: String, table: String,
-    keys: Seq[String], dataSchema: StructType,
-    maxVersionsPerTrigger: Option[Long] = None,
-    maxBytesPerTrigger: Option[Long] = None,
-    startingVersion: Option[Long] = None,
-    admit: org.apache.spark.sql.graft.ZonePred.P =
-      org.apache.spark.sql.graft.ZonePred.And(Nil))
+    dataSchema: StructType,
+    maxVersionsPerTrigger: Option[Long],
+    maxBytesPerTrigger: Option[Long],
+    startingVersion: Option[Long],
+    sourceName: String)
   extends MicroBatchStream with SupportsAdmissionControl
   with SupportsTriggerAvailableNow {
 
-  private val cat = new Catalog(spark, dir)
+  protected val cat = new Catalog(spark, dir)
 
   // COLUMN MAPPING captured at stream start — era-paired with
   // `dataSchema` (physical names are immutable, so the pair stays valid
   // for the stream's lifetime); a later RENAME that re-points one of
   // OUR logical names fails the per-batch stability guard loudly
   // (restart the stream) instead of silently reading another column
-  private val capturedPhysOf =
+  protected val capturedPhysOf: Map[String, String] =
     VersionedTable.columnMapping(cat, table)
+
+  /** Bytes the step (v-1, v] reads — the `maxBytesPerTrigger` unit. */
+  protected def versionBytes(v: Long): Long
+
+  /** The input partitions of the batch (sv, ev], sv < ev, after the
+    * column-mapping guard passed. */
+  protected def plan(sv: Long, ev: Long): Array[InputPartition]
 
   // Trigger.AvailableNow contract: pin the drain target ONCE at query
   // start, so commits racing the drain don't extend it — without this
@@ -516,15 +543,6 @@ private[streaming] final class CdcMicroBatchStream(
 
   override def latestOffset(): Offset = CdcOffset(head())
 
-  // RATE CONTROL by versions (`maxVersionsPerTrigger` caps how many
-  // commits one micro-batch spans) and/or bytes (`maxBytesPerTrigger`
-  // over the manifests' unshared-file sizes — what the diff actually
-  // reads). The bootstrap batch counts its end version's snapshot and
-  // admits whole; at least one version always admits. Without caps a
-  // trigger drains to the head in one exact state diff — cheaper in
-  // total I/O (intermediate versions of a key collapse), but one big
-  // transaction; with them, progress lands in paced commits, the
-  // mirrorOnce cadence.
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
@@ -539,24 +557,19 @@ private[streaming] final class CdcMicroBatchStream(
     // snapshot IS the table's full state). An EXPLICIT startingVersion
     // is the user's position: if vacuumed, the planner fails loudly
     // rather than silently jumping forward.
+    val bootstrap = sv == 0L && startingVersion.isEmpty
     val first =
-      if (sv == 0L && startingVersion.isEmpty) math.max(sv + 1,
-        VersionedTable.versions(cat, table).headOption.getOrElse(sv + 1))
+      if (bootstrap) VersionedTable.versions(cat, table).headOption.getOrElse(1L)
       else sv + 1
     var end = math.min(first, h)
-    var bytes =
-      if (sv == 0L && startingVersion.isEmpty) 0L // snapshot admits whole
-      else stepBytes(end)
-    var next = end + 1
-    while (next <= h &&
-      maxVersionsPerTrigger.forall(n => next - sv <= n) && {
-        maxBytesPerTrigger match {
-          case None => true
-          case Some(cap) =>
-            val b = stepBytes(next)
-            if (bytes + b <= cap) { bytes += b; true } else false
+    var bytes = if (bootstrap) 0L else stepBytes(end) // snapshot admits whole
+    def admits(v: Long): Boolean =
+      maxVersionsPerTrigger.forall(v - sv <= _) &&
+        maxBytesPerTrigger.forall { cap =>
+          val b = stepBytes(v)
+          if (bytes + b <= cap) { bytes += b; true } else false
         }
-      }) { end = next; next += 1 }
+    while (end < h && admits(end + 1)) end += 1
     CdcOffset(end)
   }
 
@@ -568,33 +581,57 @@ private[streaming] final class CdcMicroBatchStream(
   private val stepBytesMemo =
     new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]()
   private def stepBytes(v: Long): Long =
-    stepBytesMemo.computeIfAbsent(v, _ =>
-      VersionedTable.cdcStepBytes(cat, table, v))
+    stepBytesMemo.computeIfAbsent(v, _ => versionBytes(v))
 
   override def deserializeOffset(json: String): Offset = {
     // sign-aware: an offset of -1 must restore as -1 after a crash, not 1
     // ("\\d+" alone drops the minus and silently skips the re-snapshot)
     val m = java.util.regex.Pattern.compile("-?\\d+").matcher(json)
-    require(m.find(), s"malformed graft-cdc offset: $json")
+    require(m.find(), s"malformed $sourceName offset: $json")
     CdcOffset(m.group().toLong)
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+  final override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (sv, ev) = (start.asInstanceOf[CdcOffset].version,
       end.asInstanceOf[CdcOffset].version)
     if (sv >= ev) return Array.empty
     CdcStreamProvider.requireMappingStable(cat, table, ev, dataSchema,
       capturedPhysOf)
-    CdcStreamProvider.cdcPartitions(spark, cat, table, sv, ev, dataSchema, admit)
+    plan(sv, ev)
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    org.apache.spark.sql.graft.CdcMicroBatch.readerFactory(spark, dataSchema,
-      keys, capturedPhysOf)
 
   override def commit(end: Offset): Unit = () // checkpoint WAL owns progress
 
   override def stop(): Unit = ()
+}
+
+/** The `graft-cdc` stream: each batch is the exact state diff of its
+  * version range ([[CdcStreamProvider.cdcPartitions]]), byte-paced by
+  * the diff files each step reads ([[VersionedTable.cdcStepBytes]]).
+  * Without caps a trigger drains to the head in one exact state diff —
+  * cheaper in total I/O (intermediate versions of a key collapse), but
+  * one big transaction; with them, progress lands in paced commits, the
+  * mirrorOnce cadence. */
+private[streaming] final class CdcMicroBatchStream(
+    spark: SparkSession, dir: String, table: String,
+    keys: Seq[String], dataSchema: StructType,
+    maxVersionsPerTrigger: Option[Long] = None,
+    maxBytesPerTrigger: Option[Long] = None,
+    startingVersion: Option[Long] = None,
+    admit: org.apache.spark.sql.graft.ZonePred.P =
+      org.apache.spark.sql.graft.ZonePred.And(Nil))
+  extends VersionPacedStream(spark, dir, table, dataSchema,
+    maxVersionsPerTrigger, maxBytesPerTrigger, startingVersion, "graft-cdc") {
+
+  override protected def versionBytes(v: Long): Long =
+    VersionedTable.cdcStepBytes(cat, table, v)
+
+  override protected def plan(sv: Long, ev: Long): Array[InputPartition] =
+    CdcStreamProvider.cdcPartitions(spark, cat, table, sv, ev, dataSchema, admit)
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    org.apache.spark.sql.graft.CdcMicroBatch.readerFactory(spark, dataSchema,
+      keys, capturedPhysOf)
 }
 
 /** APPEND-TAIL streaming read for the plain `graft` format — the
@@ -609,10 +646,9 @@ private[streaming] final class CdcMicroBatchStream(
   *     `skipChangeCommits=true` skips those commits wholesale;
   *   - `startingVersion` starts the tail at that version's appends with
   *     NO snapshot (the backfill-already-done shape);
-  *   - `maxVersionsPerTrigger` paces by commits and `maxBytesPerTrigger`
-  *     by manifest-recorded appended bytes (zero data I/O to plan; at
-  *     least one version always admits, the bootstrap snapshot whole),
-  *     both with the earliest-retained bootstrap clamp of the CDC source.
+  *   - `maxVersionsPerTrigger` and `maxBytesPerTrigger` pace it as in
+  *     [[VersionPacedStream]], the bytes being each commit's
+  *     manifest-recorded appended bytes.
   *
   * The scan machinery is [[PlainBatchRead]] (columnar-capable), but note
   * Spark applies NO filter/column pushdown to DSv2 streaming scans —
@@ -632,10 +668,9 @@ private[graft] final class GraftAppendStream(
     skipChangeCommits: Boolean,
     startingVersion: Option[Long],
     admissionFilter: Option[String] = None)
-  extends MicroBatchStream with SupportsAdmissionControl
-  with SupportsTriggerAvailableNow {
-
-  private val cat = new Catalog(spark, dir)
+  extends VersionPacedStream(spark, dir, table, dataSchema,
+    maxVersionsPerTrigger, maxBytesPerTrigger, startingVersion,
+    "graft stream") {
 
   /** The `admissionFilter` option, resolved once at stream start:
     * per-batch file planning skips every file whose zone maps prove no
@@ -646,91 +681,10 @@ private[graft] final class GraftAppendStream(
   private val admission =
     admissionFilter.map(CdcStreamProvider.admission(spark, dataSchema, _))
 
-  // column mapping captured at stream start, era-paired with dataSchema;
-  // a mid-stream RENAME of one of our columns fails the per-batch guard
-  // loudly — see [[CdcStreamProvider.requireMappingStable]]
-  private val capturedPhysOf =
-    VersionedTable.columnMapping(cat, table)
+  override protected def versionBytes(v: Long): Long =
+    VersionedTable.appendedBytes(cat, table, v)
 
-  @volatile private var availableTarget: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableTarget = Some(VersionedTable.currentVersion(cat, table).getOrElse(0L))
-
-  private def head(): Long = {
-    val h = VersionedTable.currentVersion(cat, table).getOrElse(0L)
-    availableTarget.fold(h)(math.min(h, _))
-  }
-
-  override def initialOffset(): Offset =
-    CdcOffset(startingVersion.map(_ - 1L).getOrElse(0L))
-
-  override def latestOffset(): Offset = CdcOffset(head())
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  /** Admission control by COMMITS (`maxVersionsPerTrigger`) and/or BYTES
-    * (`maxBytesPerTrigger`, summed from the manifests' recorded appended
-    * sizes — zero data I/O, zero status RPCs). The batch always admits
-    * at least one version (a single commit bigger than the byte budget
-    * must still flow — same rule as every file-source maxBytes option),
-    * and the bootstrap snapshot is admitted whole (it is one atomic
-    * state, clamped to the earliest retained version). */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val h = head()
-    val sv = start.asInstanceOf[CdcOffset].version
-    if (h <= sv || (maxVersionsPerTrigger.isEmpty && maxBytesPerTrigger.isEmpty))
-      return CdcOffset(h)
-    // first admitted version: the snapshot bootstrap clamps to the
-    // earliest retained (vacuum must not strand a fresh stream) — but an
-    // EXPLICIT startingVersion is the user's position: if it was
-    // vacuumed, the planner fails loudly rather than silently jumping
-    val first =
-      if (sv == 0L && startingVersion.isEmpty) math.max(sv + 1,
-        VersionedTable.versions(cat, table).headOption.getOrElse(sv + 1))
-      else sv + 1
-    var end = math.min(first, h)
-    var bytes =
-      if (sv == 0L && startingVersion.isEmpty) 0L // snapshot admits whole
-      else appendBytes(end)
-    var next = end + 1
-    while (next <= h &&
-      maxVersionsPerTrigger.forall(n => next - sv <= n) && {
-        maxBytesPerTrigger match {
-          case None => true
-          case Some(cap) =>
-            val b = appendBytes(next)
-            if (bytes + b <= cap) { bytes += b; true } else false
-        }
-      }) { end = next; next += 1 }
-    CdcOffset(end)
-  }
-
-  override def reportLatestOffset(): Offset = CdcOffset(head())
-
-  // per-version appended bytes memoized for the query lifetime —
-  // manifests are immutable, so pacing parses each pair once, not once
-  // per trigger probe
-  private val appendBytesMemo =
-    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]()
-  private def appendBytes(v: Long): Long =
-    appendBytesMemo.computeIfAbsent(v, _ =>
-      VersionedTable.appendedBytes(cat, table, v))
-
-  override def deserializeOffset(json: String): Offset = {
-    // sign-aware: an offset of -1 must restore as -1 after a crash, not 1
-    // ("\\d+" alone drops the minus and silently skips the re-snapshot)
-    val m = java.util.regex.Pattern.compile("-?\\d+").matcher(json)
-    require(m.find(), s"malformed graft stream offset: $json")
-    CdcOffset(m.group().toLong)
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (sv, ev) = (start.asInstanceOf[CdcOffset].version,
-      end.asInstanceOf[CdcOffset].version)
-    if (sv >= ev) return Array.empty
-    CdcStreamProvider.requireMappingStable(cat, table, ev, dataSchema,
-      capturedPhysOf)
+  override protected def plan(sv: Long, ev: Long): Array[InputPartition] = {
     // with startingVersion the walk is per-version from the very first
     // batch (startingVersion=1 means v1's APPENDS, not a head snapshot —
     // and change commits inside the range are detected, not folded away)
@@ -739,7 +693,7 @@ private[graft] final class GraftAppendStream(
       snapshotBootstrap = startingVersion.isEmpty,
       admit = admission.map(_.zonePred)
         .getOrElse(org.apache.spark.sql.graft.ZonePred.And(Nil)))
-    plannedHasDv = slices.exists(_._3.nonEmpty)
+    plannedHasDv = slices.exists(_.dv.nonEmpty)
     // live tombstones at the planned END version (only the bootstrap
     // snapshot can carry them: any LATER eq-upsert is detected as a
     // change commit by the walk) — the readers resolve them in-task,
@@ -747,11 +701,7 @@ private[graft] final class GraftAppendStream(
     plannedEq = VersionedTable.eqDeleteState(cat, table, ev)._1
     // split + pack like the batch format: a bootstrap over big compacted
     // files fans out, a burst of tiny appends shares tasks
-    org.apache.spark.sql.graft.PlainBatchRead.planPartitions(spark,
-      slices.map { case (p, l, dv, sq) =>
-        org.apache.spark.sql.graft.CdcMicroBatch.FileSlice(p, l, dv,
-          eqSeq = sq)
-      })
+    org.apache.spark.sql.graft.PlainBatchRead.planPartitions(spark, slices)
   }
 
   /** Whether the last-PLANNED batch carries deletion vectors — only the
@@ -772,8 +722,4 @@ private[graft] final class GraftAppendStream(
       mayHaveDv = plannedHasDv,
       physOf = capturedPhysOf,
       eqDeletes = plannedEq)
-
-  override def commit(end: Offset): Unit = ()
-
-  override def stop(): Unit = ()
 }

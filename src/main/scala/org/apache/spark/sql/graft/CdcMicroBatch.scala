@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Executor-side machinery of the `graft-cdc` streaming source: each
   * input partition carries an (old files, new files) pair from the two
-  * manifests' UNSHARED file sets, and its reader computes the change feed
+  * manifests' diff files, and its reader computes the change feed
   * PARTITION-LOCALLY — old side into a hash map, new side streamed
   * against it, leftovers emitted as deletes. Rows come out in the
   * change-feed shape (`op` + the table's columns; delete rows carry the
@@ -30,12 +30,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * partition (documented on the provider): bucket the table to stream
   * its updates at scale.
   *
-  * Parquet decoding reuses Spark's own reader stack
-  * ([[ParquetFileFormat.buildReaderWithPartitionValues]] — predicate-free,
-  * row-returning), built once on the driver and shipped to executors the
-  * same way FileSourceScanExec ships it; no hand-rolled parquet-to-row
-  * conversion to drift out of sync. Hence this file's home in the
-  * `org.apache.spark.sql` package tree with the other internal-API seams.
+  * Both diff sides read through the `graft` format's row-mode slice
+  * reader ([[PlainReaderFactory]]: Spark's own parquet reader closures,
+  * deletion vectors by parquet row index, equality tombstones probed
+  * in-task, column mapping), so the feed decodes files exactly as a
+  * table scan does. Hence this file's home in the `org.apache.spark.sql`
+  * package tree with the other internal-API seams.
   */
 object CdcMicroBatch {
 
@@ -68,34 +68,21 @@ object CdcMicroBatch {
                                      eqNew: Seq[PlainBatchRead.EqDeleteSpec] = Nil)
     extends InputPartition
 
-  /** Build the factory on the DRIVER (needs the session for the reader
-    * closure + broadcast hadoop conf). `dataSchema` is the table schema
-    * the stream was started with; `keys` name the CDC key columns. */
+  /** Build the factory on the DRIVER: both diff sides read through one
+    * row-mode [[PlainBatchRead.readerFactory]] over the stream's
+    * `dataSchema`; `keys` name the CDC key columns. */
   def readerFactory(spark: SparkSession, dataSchema: StructType,
                     keys: Seq[String],
                     physOf: Map[String, String] = Map.empty): CdcReaderFactory = {
     keys.foreach(k => require(dataSchema.fieldNames.contains(k),
       s"CDC key column '$k' not in table schema ${dataSchema.fieldNames.mkString(",")}"))
-    val fmt = new ParquetFileFormat
-    // column mapping: files carry PHYSICAL names on both diff sides
-    // (physical names are stable across renames); the diff itself is
-    // ordinal-based so only the parquet resolution translates
-    val physSchema = ColumnMapping.physSchema(dataSchema, physOf)
-    val readFunc = fmt.buildReaderWithPartitionValues(
-      spark,
-      dataSchema = physSchema,
-      partitionSchema = StructType(Nil),
-      requiredSchema = physSchema,
-      filters = Nil,
-      // row-returning, never ColumnarBatch (the diff is row-at-a-time)
-      options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      hadoopConf = spark.sessionState.newHadoopConf())
     val keyOrdinals = keys.map(dataSchema.fieldIndex)
     val valueOrdinals = dataSchema.fieldNames.indices
       .filterNot(keyOrdinals.contains)
-    new CdcReaderFactory(readFunc, dataSchema, keyOrdinals, valueOrdinals,
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
+    new CdcReaderFactory(
+      PlainBatchRead.readerFactory(spark, dataSchema, dataSchema, Nil,
+        allowColumnar = false, physOf = physOf),
+      dataSchema, keyOrdinals, valueOrdinals)
   }
 }
 
@@ -214,7 +201,7 @@ object PlainBatchRead {
                     // matches; zero driver state, so a 100M-key CDC
                     // batch can never OOM the driver at plan time
                     eqDeletes: Seq[(Seq[String], Long, Seq[String])] = Nil)
-      : PartitionReaderFactory = {
+      : PlainReaderFactory = {
     // the admission row predicate is BOUND against the full dataSchema
     // ordinals — sound only while the reader's output IS dataSchema.
     // Spark applies no pruning to DSv2 streaming scans today; if that
@@ -446,8 +433,10 @@ final class PlainReaderFactory(
       slicesOf(partition).forall(f => f.dv.isEmpty || colIdxFunc != null)
 
   /** One slice's PROJECTED row iterator — built lazily per slice so a
-    * packed partition opens one file at a time. */
-  private def sliceRows(f: CdcMicroBatch.FileSlice): Iterator[InternalRow] = {
+    * packed partition opens one file at a time. `eq` defaults to the
+    * factory's tombstones; the CDC diff passes each side's own. */
+  private[graft] def sliceRows(f: CdcMicroBatch.FileSlice,
+      eq: Seq[PlainBatchRead.EqDeleteSpec] = eqDeletes): Iterator[InternalRow] = {
     // constant per slice: the file path `_file` surfaces
     val pathValue = UTF8String.fromString(f.path)
     // row index needed when `_pos` projects OR a deletion vector must
@@ -481,7 +470,7 @@ final class PlainReaderFactory(
     // equality tombstones STRICTLY NEWER than this slice's stamp drop
     // matching keys — the read-side half of the write-without-read
     // upsert (key sets loaded once per executor from the key files)
-    val eqApplicable = eqDeletes.filter(_.seq > f.eqSeq)
+    val eqApplicable = eq.filter(_.seq > f.eqSeq)
     val it =
       if (eqApplicable.isEmpty) it0
       else {
@@ -528,7 +517,7 @@ final class PlainReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val slices = slicesOf(partition)
     new PartitionReader[InternalRow] {
-      private val it = slices.iterator.flatMap(sliceRows)
+      private val it = slices.iterator.flatMap(sliceRows(_))
       private var cur: InternalRow = _
       override def next(): Boolean = {
         if (it.hasNext) { cur = it.next(); true } else false
@@ -581,18 +570,16 @@ final class PlainReaderFactory(
 }
 
 final class CdcReaderFactory(
-    readFunc: PartitionedFile => Iterator[InternalRow],
+    sides: PlainReaderFactory,
     dataSchema: StructType,
     keyOrdinals: Seq[Int],
-    valueOrdinals: Seq[Int],
-    conf: org.apache.spark.util.SerializableConfiguration = null)
+    valueOrdinals: Seq[Int])
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case p: CdcMicroBatch.CdcInputPartition =>
-        new CdcPartitionReader(p, readFunc, dataSchema, keyOrdinals,
-          valueOrdinals, conf)
+        new CdcPartitionReader(p, sides, dataSchema, keyOrdinals, valueOrdinals)
       case other => throw new IllegalArgumentException(
         s"unexpected partition type: ${other.getClass}")
     }
@@ -600,54 +587,20 @@ final class CdcReaderFactory(
 
 final class CdcPartitionReader(
     part: CdcMicroBatch.CdcInputPartition,
-    readFunc: PartitionedFile => Iterator[InternalRow],
+    sides: PlainReaderFactory,
     dataSchema: StructType,
     keyOrdinals: Seq[Int],
-    valueOrdinals: Seq[Int],
-    conf: org.apache.spark.util.SerializableConfiguration = null)
+    valueOrdinals: Seq[Int])
   extends PartitionReader[InternalRow] {
 
   private val fieldTypes = dataSchema.fields.map(_.dataType)
   private val nFields = fieldTypes.length
 
+  // each side reads its own version's resolved state: its files' DVs and
+  // that version's live equality tombstones
   private def rows(files: Seq[CdcMicroBatch.FileSlice],
                    eq: Seq[PlainBatchRead.EqDeleteSpec]): Iterator[InternalRow] =
-    files.iterator.flatMap { f =>
-      val pf = PartitionedFile(InternalRow.empty,
-        SparkPath.fromPathString(f.path), 0L, f.length,
-        Array.empty[String], 0L, f.length, Map.empty)
-      // defensive unwrap: with OPTION_RETURNING_BATCH=false the reader
-      // yields rows, but the FileFormat contract allows batches
-      val base = readFunc(pf).asInstanceOf[Iterator[Any]].flatMap {
-        case b: ColumnarBatch => b.rowIterator().asScala
-        case r: InternalRow => Iterator.single(r)
-      }
-      val dvFiltered = f.dv match {
-        case None => base
-        case Some(dvPath) =>
-          // deletion vector: this read is predicate-free and full-file,
-          // so the running count IS the row's file position
-          val dv = DeletionVectors.readCached(conf.value, dvPath)
-          var pos = -1L
-          base.filter { _ => pos += 1; !DeletionVectors.contains(dv, pos) }
-      }
-      // the side's equality tombstones STRICTLY NEWER than this file's
-      // stamp drop matching keys — each diff side reads its own
-      // version's RESOLVED state (same in-task probe as the batch scan)
-      val applicable = eq.filter(_.seq > f.eqSeq)
-      if (applicable.isEmpty) dvFiltered
-      else {
-        val probes = applicable.map { spec =>
-          val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-            .create(spec.types.zip(spec.ords).map { case (t, o) =>
-              org.apache.spark.sql.catalyst.expressions.BoundReference(o, t,
-                nullable = true) }.toIndexedSeq)
-          (proj, PlainBatchRead.eqDeleteSet(spec, conf.value))
-        }
-        dvFiltered.filter(r =>
-          !probes.exists { case (p, set) => set.contains(p(r)) })
-      }
-    }
+    files.iterator.flatMap(sides.sliceRows(_, eq))
 
   private def keyOf(row: InternalRow): Seq[Any] =
     keyOrdinals.map(i => if (row.isNullAt(i)) null else row.get(i, fieldTypes(i)))
@@ -696,15 +649,29 @@ final class CdcPartitionReader(
   private var leftoverIter: Iterator[InternalRow] = _
   private var current: InternalRow = _
 
+  // with an old side, a partition emits at most one row per non-NULL key
+  // tuple, as VersionedTable.changes does: a key's first new row pairs or
+  // inserts, its later new rows (a duplicated key) drop. Bounded like
+  // oldByKey, by the bucket. A partition without an old side streams with
+  // O(1) memory, so a key duplicated across new files surfaces once per
+  // row there.
+  private val seenKeys =
+    if (part.oldFiles.isEmpty) null else new java.util.HashSet[Seq[Any]]()
+
   override def next(): Boolean = {
     current = null
     while (current == null && newIter.hasNext) {
       val r = newIter.next()
-      val old = if (nullKey(r)) null else oldByKey.remove(keyOf(r))
-      if (old == null) current = out("insert", r)
-      else if (!valueOrdinals.forall(i => sameValue(i, old, r)))
-        current = out("update", r)
-      // else unchanged (a rewritten file carries untouched rows): skip
+      val key = if (nullKey(r)) null else keyOf(r)
+      // the row buffer is reused: the remembered key takes copied values
+      if (key == null || seenKeys == null ||
+          seenKeys.add(key.map(InternalRow.copyValue))) {
+        val old = if (key == null) null else oldByKey.remove(key)
+        if (old == null) current = out("insert", r)
+        else if (!valueOrdinals.forall(i => sameValue(i, old, r)))
+          current = out("update", r)
+        // else unchanged (a rewritten file carries untouched rows): skip
+      }
     }
     if (current == null) {
       if (leftoverIter == null)

@@ -8,6 +8,7 @@ import graft.SparkSpec
 import graft.etl.{Catalog, VersionedTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JobLedger
 import org.apache.spark.sql.streaming.Trigger
 
 /** The `graft-cdc` DataSource-V2 streaming source: a real
@@ -426,10 +427,11 @@ class CdcV2StreamSpec extends SparkSpec {
     // startingVersion=2: the first batch is v2's state diff (the upsert),
     // NOT a snapshot — v1-only rows never flow; 1-byte budget paces one
     // version per trigger
-    val q = spark.readStream.format("graft-cdc")
+    val ckpt = tmpDir("v2stvck")
+    def drainPaced(): Unit = spark.readStream.format("graft-cdc")
       .option("dir", src.dir).option("table", "t")
       .option("startingVersion", "2").option("maxBytesPerTrigger", "1").load()
-      .writeStream.option("checkpointLocation", tmpDir("v2stvck"))
+      .writeStream.option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (df: DataFrame, _: Long) =>
         val cached = df.persist()
@@ -441,8 +443,8 @@ class CdcV2StreamSpec extends SparkSpec {
             CdcSource.applyFeed(dst, "m", cached, Seq("k"))
           }
         } finally cached.unpersist()
-      }.start()
-    q.awaitTermination()
+      }.start().awaitTermination()
+    drainPaced()
     val batches = log.asScala.toSeq
     // v2's diff = 10 rows rewritten (flat upsert rewrite: 1 update, 9
     // unchanged skipped → 1 feed row), v3's diff = 1 insert
@@ -450,6 +452,47 @@ class CdcV2StreamSpec extends SparkSpec {
       s"per-version byte pacing from startingVersion, got $batches")
     assert(batches.head._3 == Map("update" -> 1L),
       s"the first batch is v2's DIFF, not a snapshot: ${batches.head._3}")
+    // two consecutive merge-on-read deletes change rows only through
+    // deletion vectors: each step reads its DV'd file on both sides, so
+    // each one exceeds the 1-byte budget and arrives as its own batch
+    VersionedTable.setTableProps(src, "t",
+      Map(VersionedTable.WriteModeProp -> VersionedTable.MergeOnRead), Nil)
+    VersionedTable.delete(src, "t", col("k") === 1L)
+    VersionedTable.delete(src, "t", col("k") === 2L)
+    log.clear()
+    drainPaced()
+    assert(log.asScala.toSeq.map(_._3) ==
+      Seq(Map("delete" -> 1L), Map("delete" -> 1L)),
+      s"each DV delete must pace as its own batch: ${log.asScala.toSeq}")
+  }
+
+  test("a bounded graft-cdc read starts a fixed number of jobs") {
+    // one bucketed upsert of two keys, and one merge-on-read delete
+    val up = new Catalog(spark, tmpDir("v2jobup"))
+    VersionedTable.load(up, "t", (1L to 64L).map(i => (i, s"v$i")).toDF("k", "s"),
+      idOrder = Seq("k"), bucketBy = Some((Seq("k"), 8)))
+    VersionedTable.load(up, "t", Seq((7L, "UP"), (9L, "UP")).toDF("k", "s"),
+      upsertFields = Seq("k"), idOrder = Seq("k"))
+    val dv = new Catalog(spark, tmpDir("v2jobdv"))
+    VersionedTable.load(dv, "t",
+      (1L to 30L).map(i => (i, s"v$i")).toDF("k", "s"), idOrder = Seq("k"),
+      extraProps = Map(VersionedTable.WriteModeProp -> VersionedTable.MergeOnRead))
+    VersionedTable.delete(dv, "t", col("k") > 27L)
+    def feedCount(c: Catalog) = JobLedger(spark) {
+      spark.read.format("graft-cdc")
+        .option("dir", c.dir).option("table", "t").option("keys", "k")
+        .option("startingVersion", "1").option("endingVersion", "2").load()
+        .count()
+    }
+    // two jobs each, as measured when the diff sides still had a parquet
+    // reader of their own: reading them through the table's slice reader
+    // must add no footer, status or tombstone-probe job
+    val (upRows, upJobs) = feedCount(up)
+    assert(upRows == 2L)
+    assert(upJobs.size == 2, s"bucketed upsert feed: $upJobs")
+    val (dvRows, dvJobs) = feedCount(dv)
+    assert(dvRows == 3L)
+    assert(dvJobs.size == 2, s"DV delete feed: $dvJobs")
   }
 
   test("rate-limited bootstrap clamps to the earliest retained version") {
