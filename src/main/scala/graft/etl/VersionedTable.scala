@@ -269,10 +269,10 @@ object VersionedTable {
   }
 
   /** Manifest prop carrying the commit wall-clock (epoch millis), stamped
-    * at CAS time — `TIMESTAMP AS OF` resolves against THIS, not file
-    * mtime, so a backup/restore or directory copy (which scrambles
-    * mtimes) cannot silently re-time history. Mtime remains the fallback
-    * for manifests committed by older writers. */
+    * at CAS time ([[tryCommitManifest]], so on every manifest) —
+    * `TIMESTAMP AS OF` resolves against THIS, not file mtime, so a
+    * backup/restore or directory copy (which scrambles mtimes) cannot
+    * silently re-time history. */
   private[graft] val CommitTsProp = "commit_ts_ms"
 
   /** The commit's self-declared operation label (`load`, `delete`,
@@ -1497,31 +1497,25 @@ object VersionedTable {
   def currentVersion(tgt: Catalog, table: String): Option[Long] =
     versions(tgt, table).lastOption
 
-  /** When version `v`'s manifest was committed: the manifest-recorded
-    * wall clock ([[CommitTsProp]] — survives backup/restore and dir
-    * copies), falling back to file mtime for manifests from older
-    * writers. */
-  /** Mtime of version `v`'s COMMIT artifact — the delta when present (a
-    * checkpoint may be (re)written long after the commit, e.g. by vacuum),
-    * the full manifest for legacy/root versions. Fallback only: every
-    * writer since CommitTsProp stamps the wall clock into the manifest. */
-  private def artifactMtime(tgt: Catalog, table: String, v: Long): Long = {
-    val f = fs(tgt, metaDir(tgt, table))
-    val dp = deltaPath(tgt, table, v)
-    f.getFileStatus(if (f.exists(dp)) dp else manifestPath(tgt, table, v))
-      .getModificationTime
-  }
+  /** When `man` was committed: its recorded wall clock ([[CommitTsProp]]
+    * — survives backup/restore and dir copies). A manifest without one
+    * was not written by this engine's commit path; it fails, naming the
+    * version. */
+  private def committedAt(table: String, man: Manifest): Long =
+    man.props.get(CommitTsProp)
+      .flatMap(s => scala.util.Try(s.toLong).toOption)
+      .getOrElse(throw new IllegalStateException(
+        s"version ${man.version} of '$table' records no commit time " +
+          s"($CommitTsProp)"))
 
   private def committedAtMillis(tgt: Catalog, table: String, v: Long): Long =
-    readManifest(tgt, table, v)
-      .flatMap(_.props.get(CommitTsProp))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(artifactMtime(tgt, table, v))
+    committedAt(table, readManifest(tgt, table, v).getOrElse(
+      throw new IllegalArgumentException(s"table '$table' has no version $v")))
 
   /** TIMESTAMP time travel: the newest version committed at or before
     * `tsMillis` — resolved by the manifest-RECORDED commit time
     * ([[CommitTsProp]]; Delta keeps the analogous timestamp in the
-    * commit itself), with file mtime as the legacy fallback. One
+    * commit itself). One
     * manifest read per probed version (vacuum-bounded); versions probe
     * newest-first so the common "recent timestamp" case stops after a
     * few. Throws when every retained commit is newer than the asked
@@ -1750,6 +1744,107 @@ object VersionedTable {
       newRel.map(r => new Path(dataDir(tgt, table), r).toString))
   }
 
+  /** One frame a commit stages. A `checked` frame's rows pass the CHECK
+    * gate; a rewrite of rows the table already holds does not. */
+  private final case class Batch(rows: DataFrame, checked: Boolean = true)
+
+  /** What [[stageCommit]] hands a commit's props builder: the new files
+    * (relative paths) and their footer metadata. `track` registers one
+    * more artifact the builder stages (a tombstone key dir), removed
+    * with the batch when the commit does not land. */
+  private final case class Staged(rel: Seq[String], meta: FileMeta,
+                                  track: Path => Unit)
+
+  /** THE staging step of every commit that writes rows: everything
+    * between "this attempt keeps `keep` of the parent's files and stages
+    * `batches`" and the CAS.
+    *
+    *  - Each batch is written through [[writeBatch]] under `layout`.
+    *  - A version must list at least one file, because reads take the
+    *    schema from one: when `keep` and the batches leave none, one
+    *    empty file carrying `schema` is staged, unbucketed and unchecked
+    *    (it holds no rows to lay out or gate).
+    *  - `check` (the table's CHECK constraint) gates the staged files of
+    *    the checked batches — the bytes that would commit, not the plan
+    *    that produced them, which a non-deterministic source could
+    *    change between a probe and the write.
+    *  - The new files' footers are read once ([[manifestMeta]]).
+    *  - THE ID FLOOR RULE: a commit that stamped no fresh ids
+    *    (`idsAbove` None) keeps the parent's floor. One that stamped
+    *    ids above `floor` records max(`floor`, the new files' footer
+    *    max id) — or NO floor when that footer max is unknown (a
+    *    populated new file without id statistics), so the next load
+    *    scans; the parent's floor would sit below the ids just stamped.
+    *    A commit whose new files hold no rows issued no id and keeps the
+    *    parent's floor.
+    *  - The manifest carries `props(staged)`, the version's schema
+    *    (`recordSchema`, parent field metadata carried), the layout's
+    *    column mapping, the tombstone hygiene of [[pruneEqProps]], and
+    *    the kept files' DVs plus `dvs`. `fresh` (a whole new
+    *    declaration) carries nothing from the parent but its id floor.
+    *  - It commits through `a`. Everything staged — the batches, the
+    *    artifacts in `staged0` and those tracked by the props builder —
+    *    is removed on a CHECK violation, on any other exception before
+    *    the CAS and on a lost CAS; never after an exception thrown by the
+    *    CAS itself, whose commit may have landed. */
+  private def stageCommit(tgt: Catalog, table: String, a: CommitAttempt,
+                          keep: Seq[String], batches: Seq[Batch],
+                          schema: org.apache.spark.sql.types.StructType,
+                          layout: Layout,
+                          check: Option[String] = None,
+                          idsAbove: Option[Long] = None,
+                          recordSchema: Boolean = false,
+                          fresh: Boolean = false,
+                          dvs: Map[String, (String, Long)] = Map.empty,
+                          staged0: Seq[Path] = Nil)
+                         (props: Staged => Map[String, String]): Option[Long] = {
+    val parent = if (fresh) None else a.head
+    val f = fs(tgt, dataDir(tgt, table))
+    val staged = scala.collection.mutable.ArrayBuffer[Path](staged0: _*)
+    def cleanup(): Unit = staged.foreach(p =>
+      try f.delete(p, true) catch { case _: java.io.IOException => () })
+    val m = try {
+      def write(rows: DataFrame, l: Layout): Seq[(String, Long)] = {
+        val (dir, parts) = writeBatch(tgt, table, rows, l)
+        if (parts.isEmpty) f.delete(dir, true) else staged += dir
+        parts
+      }
+      val written = batches.map(b => (b, write(b.rows, layout)))
+      val parts =
+        if (keep.nonEmpty || written.exists(_._2.nonEmpty)) written.flatMap(_._2)
+        else write(tgt.spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), schema),
+          Layout(None, physOf = layout.physOf))
+      for (c <- check) {
+        val gated = written.collect { case (b, ps) if b.checked => ps }.flatten
+        if (gated.nonEmpty)
+          enforceCheckStaged(tgt, gated.map(p =>
+            new Path(dataDir(tgt, table), p._1).toString), layout.physOf, c, table)
+      }
+      val newRel = parts.map(_._1)
+      val fm = manifestMeta(tgt, table, parent, keep, parts, schema, layout.physOf)
+      val maxId = idsAbove match {
+        case Some(floor) if !newRel.forall(r => fm.rows.get(r).contains(0L)) =>
+          newFilesMaxId(tgt, table, fm, newRel).map(math.max(_, floor))
+        case _ => a.head.flatMap(_.maxId)
+      }
+      val p0 = props(Staged(newRel, fm, staged += _))
+      val p1 =
+        if (recordSchema)
+          p0 + (SchemaProp -> schemaJson(carryFieldMetadata(parent, schema)))
+        else p0
+      val all = keep ++ newRel
+      Manifest(a.next, maxId, layout.bucket, all,
+        fm.stats, fm.sizes, fm.nulls, fm.rows,
+        pruneEqProps(withMappingProps(p1, layout.physOf,
+          parent.fold(Set.empty[String])(retiredOf)), all),
+        dvCarry(parent, keep) ++ dvs)
+    } catch { case e: Throwable => cleanup(); throw e }
+    val v = a.commit(m)
+    if (v.isEmpty) cleanup()
+    v
+  }
+
   // --------------------------------------------------------------- zone maps
 
   /** Manifest zone maps cover at most this many columns (schema order) —
@@ -1786,7 +1881,8 @@ object VersionedTable {
   private def manifestMeta(tgt: Catalog, table: String,
                            parent: Option[Manifest], carryRel: Seq[String],
                            newParts: Seq[(String, Long)],
-                           schema: org.apache.spark.sql.types.StructType): FileMeta = {
+                           schema: org.apache.spark.sql.types.StructType,
+                           physOf: Map[String, String]): FileMeta = {
     val keep = carryRel.toSet
     val cStats = parent.fold(Map.empty: FileStats)(_.stats.filter(kv => keep(kv._1)))
     val cSizes = parent.fold(Map.empty[String, Long])(_.sizes.filter(kv => keep(kv._1)))
@@ -1803,7 +1899,6 @@ object VersionedTable {
       // the files carry PHYSICAL names (the writeBatch boundary); the
       // manifest records stats under LOGICAL names — request physical,
       // re-key back, and the whole stat/pruning layer stays logical
-      val physOf = extendMapping(parent, schema)
       val toLogical = org.apache.spark.sql.graft.ColumnMapping.reverse(physOf)
       def rekey[A](m: Map[String, A]): Map[String, A] =
         if (toLogical.isEmpty) m
@@ -2252,14 +2347,6 @@ object VersionedTable {
         seg.stripPrefix(Loader.BucketCol + "=").toInt
     }
 
-  /** Write `out` as a fresh batch dir (bucketed when the layout says so,
-    * so every file's path names its bucket) and return (batch dir,
-    * relative part paths with byte sizes — recorded in the manifest so
-    * readers and compaction never pay a per-file status RPC).
-    * An empty result under a bucketed layout writes
-    * a flat empty file instead — a partitioned write of zero rows emits no
-    * files at all, and a version must keep at least one file so its schema
-    * survives. */
   /** Parquet BLOOM FILTER write options for the table's recorded bloom
     * columns (restricted to columns present in this batch): row-group
     * point-lookup skipping on columns whose VALUE DISTRIBUTION defeats
@@ -2279,14 +2366,31 @@ object VersionedTable {
       // degrades fpp, never correctness
       s"parquet.bloom.filter.expected.ndv#$c" -> "100000")).toMap
 
+  /** How a commit lays out the rows it stages: the hash buckets (every
+    * file's path names its bucket), the bloom columns, the column
+    * mapping (files carry physical names), the partition transforms and
+    * z-order, and extra parquet write options. */
+  private final case class Layout(bucket: Option[(Seq[String], Int)],
+                                  bloom: Seq[String] = Nil,
+                                  physOf: Map[String, String] = Map.empty,
+                                  partSpec: Seq[PartTransform] = Nil,
+                                  zorder: Boolean = false,
+                                  extraOpts: Map[String, String] = Map.empty)
+
+  /** `man`'s own layout; `extraProps` (a commit's own declarations)
+    * join its props for the partition transforms and z-order. */
+  private def layoutOf(man: Manifest,
+                       extraProps: Map[String, String] = Map.empty): Layout =
+    Layout(man.bucket, bloomColsOf(man), physOfMan(man),
+      partSpecOf(man.props ++ extraProps), zorderLayout(man.props ++ extraProps))
+
+  /** Write `out0` under `layout` as a fresh batch dir and return (batch
+    * dir, relative part paths with byte sizes — recorded in the manifest
+    * so readers and compaction never pay a per-file status RPC). Only
+    * [[stageCommit]] calls it. */
   private def writeBatch(tgt: Catalog, table: String, out0: DataFrame,
-                         bucket: Option[(Seq[String], Int)],
-                         bloomCols: Seq[String] = Nil,
-                         physOf: Map[String, String] = Map.empty,
-                         partSpec: Seq[PartTransform] = Nil,
-                         zorder: Boolean = false,
-                         extraOpts: Map[String, String] = Map.empty)
-      : (Path, Seq[(String, Long)]) = {
+                         layout: Layout): (Path, Seq[(String, Long)]) = {
+    val Layout(bucket, bloomCols, physOf, partSpec, zorder, extraOpts) = layout
     // the WRITE boundary of column mapping: files always carry PHYSICAL
     // names (bucket keys, bloom columns, and partition-transform columns
     // are identity-mapped by the rename refusal matrix, so their
@@ -2341,16 +2445,10 @@ object VersionedTable {
         out.withColumn(Loader.BucketCol, Loader.bucketIdExpr(keys, n))
           .write.mode(SaveMode.Overwrite).options(opts)
           .partitionBy(Loader.BucketCol).parquet(batch.toString)
-        val rel = partFiles(tgt, table, batch)
-        if (rel.nonEmpty) (batch, rel)
-        else {
-          out.write.mode(SaveMode.Overwrite).options(opts).parquet(batch.toString)
-          (batch, partFiles(tgt, table, batch))
-        }
       case None =>
         out.write.mode(SaveMode.Overwrite).options(opts).parquet(batch.toString)
-        (batch, partFiles(tgt, table, batch))
     }
+    (batch, partFiles(tgt, table, batch))
   }
 
   /** GENERATED / IDENTITY materialization over a user-provided write
@@ -2622,86 +2720,40 @@ object VersionedTable {
     // the commit's column mapping: the parent's, extended with fresh
     // physical names for any new column colliding with a retired one
     val physOf = extendMapping(headMan, out.schema)
-    val (batch, newParts) = writeBatch(tgt, table, out, bucket,
-      (headMan.toSeq.flatMap(bloomColsOf) ++ bloomBy).distinct, physOf,
-      partSpecOf(headMan.fold(Map.empty[String, String])(_.props) ++ extraProps),
-      zorderLayout(headMan.fold(Map.empty[String, String])(_.props) ++ extraProps))
-    // CHECK constraint gates the STAGED files — the bytes that would
-    // commit — not the incoming plan: a non-deterministic source
-    // (rand(), current_timestamp()) re-executes between a plan-side
-    // probe and the write, so only the staged batch is atomic with the
-    // manifest. Also NULL-satisfies narrow appends for free (the staged
-    // schema is the final one, absent columns already null-filled).
-    // On violation the staged batch is removed and nothing committed.
-    checkSql.filter(_ => newParts.nonEmpty).foreach { c =>
-      try enforceCheckStaged(tgt, newParts.map(p =>
-        new Path(dataDir(tgt, table), p._1).toString), physOf, c, table)
-      catch { case e: Throwable =>
-        fs(tgt, dataDir(tgt, table)).delete(batch, true)
-        throw e
-      }
-    }
-    val newRel = newParts.map(_._1)
-    val newAbs = newRel.map(r => new Path(dataDir(tgt, table), r).toString)
-    val fm = manifestMeta(tgt, table, headMan, carryRel, newParts, out.schema)
-    // the committed version's max id, from the new files' footer stats
-    // (metadata-only), combined with the prior floor whenever prior files
-    // carry forward (their ids are ≤ the floor by construction).
-    // MONOTONE floor: always at least the parent's — a rewrite that drops
-    // the max-id row must not lower the floor (its id may be referenced
-    // by retained older versions; reissuing it would corrupt audit joins)
-    val committedMax = newFilesMaxId(tgt, table, fm, newRel)
-      .map(m => math.max(m, maxId))
-    a.commit(
-      { // a keyed load RECORDS its keys ([[UpsertKeysProp]]); appends
-        // carry the recorded keys forward untouched, a keyed load with
-        // different keys overwrites (latest declaration wins)
-        val props0 = headMan.fold(Map.empty[String, String])(_.props)
-        val props1 = if (upsertFields.nonEmpty)
-          props0 + (UpsertKeysProp -> upsertFields.mkString(","))
-        else props0
-        // [[EqLiveUniqueProp]] base case / conservative clear: a KEYED
-        // FIRST load verifies the staged batch is key-distinct (one
-        // column-pruned O(batch) job, once per table — the whole table
-        // IS the batch here) and records the invariant; every other load
-        // shape (appends, CoW merges, bucket-scoped rewrites) may land
-        // duplicate keys, so the flag drops and the truncation pad
-        // stands down until an eq-upsert chain re-establishes it
-        val liveUniqueAdj: Map[String, String] =
-          if (upsertFields.nonEmpty && existing.isEmpty &&
-              newRel.nonEmpty && {
-                val staged = newRel.flatMap(fm.rows.get)
-                staged.size == newRel.size &&
-                  staged.sum == readFileList(tgt, newAbs, Some(out.schema),
-                    physOf).select(upsertFields.map(col): _*)
-                    .distinct().count()
-              })
-            Map(EqLiveUniqueProp -> eqUniqueKeyCsv(upsertFields))
-          else Map.empty
-        val props2 = (props1 - EqLiveUniqueProp) ++ liveUniqueAdj
-        val props = withMappingProps(
-          (((if (bloomBy.nonEmpty)
-            props2 + (BloomColsProp -> bloomBy.mkString(","))
-          else props2) ++ extraProps) -- dropProps) +
-            // the committed batch's schema is the version's schema — the
-            // read-path source of truth (see SchemaProp)
-            (SchemaProp -> schemaJson(carryFieldMetadata(headMan, out.schema))),
-          physOf, headMan.fold(Set.empty[String])(retiredOf))
-        // tombstone hygiene: a CoW rewrite (full or bucket-scoped)
-        // replaces stamped files — stamps survive only for carried
-        // files, and a tombstone no surviving file is stamped below is
-        // fully materialized by the rewrite (the read applied it) and
-        // must NOT ride forward as live-looking props (it would keep
-        // CDC/clone/rename refusing forever over nothing)
-        Manifest(a.next, committedMax, bucket, carryRel ++ newRel,
-          fm.stats, fm.sizes, fm.nulls, fm.rows,
-          pruneEqProps(props, carryRel ++ newRel),
-          dvCarry(headMan, carryRel)) }).orElse {
-      // lost the race: the staged batch references a superseded head —
-      // remove it (a crash before this delete leaves unreachable files for
-      // vacuum, same as any crashed commit)
-      fs(tgt, dataDir(tgt, table)).delete(batch, true)
-      None
+    val declared = headMan.fold(Map.empty[String, String])(_.props) ++ extraProps
+    stageCommit(tgt, table, a, carryRel, Seq(Batch(out)), out.schema,
+      Layout(bucket, (headMan.toSeq.flatMap(bloomColsOf) ++ bloomBy).distinct,
+        physOf, partSpecOf(declared), zorderLayout(declared)),
+      check = checkSql, idsAbove = Some(maxId), recordSchema = true) { st =>
+      // a keyed load RECORDS its keys ([[UpsertKeysProp]]); appends
+      // carry the recorded keys forward untouched, a keyed load with
+      // different keys overwrites (latest declaration wins)
+      val props0 = headMan.fold(Map.empty[String, String])(_.props)
+      val props1 = if (upsertFields.nonEmpty)
+        props0 + (UpsertKeysProp -> upsertFields.mkString(","))
+      else props0
+      // [[EqLiveUniqueProp]] base case / conservative clear: a KEYED
+      // FIRST load verifies the staged batch is key-distinct (one
+      // column-pruned O(batch) job, once per table — the whole table
+      // IS the batch here) and records the invariant; every other load
+      // shape (appends, CoW merges, bucket-scoped rewrites) may land
+      // duplicate keys, so the flag drops and the truncation pad
+      // stands down until an eq-upsert chain re-establishes it
+      val liveUniqueAdj: Map[String, String] =
+        if (upsertFields.nonEmpty && existing.isEmpty &&
+            st.rel.nonEmpty && {
+              val staged = st.rel.flatMap(st.meta.rows.get)
+              staged.size == st.rel.size &&
+                staged.sum == readFileList(tgt,
+                  st.rel.map(r => new Path(dataDir(tgt, table), r).toString),
+                  Some(out.schema), physOf).select(upsertFields.map(col): _*)
+                  .distinct().count()
+            })
+          Map(EqLiveUniqueProp -> eqUniqueKeyCsv(upsertFields))
+        else Map.empty
+      val props2 = (props1 - EqLiveUniqueProp) ++ liveUniqueAdj
+      ((if (bloomBy.nonEmpty) props2 + (BloomColsProp -> bloomBy.mkString(","))
+        else props2) ++ extraProps) -- dropProps
     }
   }
 
@@ -3224,27 +3276,11 @@ object VersionedTable {
         incoming0.drop(Loader.IdCol) else incoming0
       val out = Loader.withSurrogateIds(incoming, floor,
         incoming.columns.toSeq)
-      val (batch, newParts) = writeBatch(tgt, table, out, None,
-        partSpec = partSpecOf(extraProps), zorder = zorderLayout(extraProps))
-      effectiveCheck(extraProps)
-        .filter(_ => newParts.nonEmpty).foreach { c =>
-          try enforceCheckStaged(tgt, newParts.map(p =>
-            new Path(dataDir(tgt, table), p._1).toString), Map.empty, c, table)
-          catch { case e: Throwable =>
-            fs(tgt, dataDir(tgt, table)).delete(batch, true)
-            throw e
-          }
-        }
-      val newRel = newParts.map(_._1)
-      val fm = manifestMeta(tgt, table, None, Nil, newParts, out.schema)
-      val committedMax = newFilesMaxId(tgt, table, fm, newRel)
-        .map(math.max(_, floor)).orElse(headMan.flatMap(_.maxId))
-      a.commit(Manifest(a.next, committedMax, None, newRel,
-        fm.stats, fm.sizes, fm.nulls, fm.rows,
-        extraProps + (SchemaProp -> schemaJson(out.schema)))).orElse {
-        fs(tgt, dataDir(tgt, table)).delete(batch, true)
-        None
-      }
+      stageCommit(tgt, table, a, Nil, Seq(Batch(out)), out.schema,
+        Layout(None, partSpec = partSpecOf(extraProps),
+          zorder = zorderLayout(extraProps)),
+        check = effectiveCheck(extraProps), idsAbove = Some(floor),
+        recordSchema = true, fresh = true)(_ => extraProps)
     }
   }
 
@@ -3269,57 +3305,19 @@ object VersionedTable {
           incoming0.drop(Loader.IdCol) else incoming0)
       val out = Loader.withSurrogateIds(incoming, floor,
         incoming.columns.toSeq)
-      val physOf = extendMapping(Some(headMan), out.schema)
-      val (batch0, newParts0) = writeBatch(tgt, table, out, headMan.bucket,
-        bloomColsOf(headMan), physOf, partSpecOf(headMan.props),
-      zorderLayout(headMan.props))
-      // an OVERWRITE from an empty query must still leave one
-      // schema-bearing file (the invariant every read relies on); an
-      // empty plan can stage zero part files
-      val (batch, newParts) =
-        if (newParts0.nonEmpty) (batch0, newParts0)
-        else {
-          fs(tgt, dataDir(tgt, table)).delete(batch0, true)
-          writeBatch(tgt, table, tgt.spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), out.schema),
-            headMan.bucket, bloomColsOf(headMan), physOf,
-            partSpecOf(headMan.props), zorderLayout(headMan.props))
-        }
-      effectiveCheck(headMan.props)
-        .filter(_ => newParts.nonEmpty).foreach { c =>
-          try enforceCheckStaged(tgt, newParts.map(p =>
-            new Path(dataDir(tgt, table), p._1).toString), physOf, c, table)
-          catch { case e: Throwable =>
-            fs(tgt, dataDir(tgt, table)).delete(batch, true)
-            throw e
-          }
-        }
-      val newRel = newParts.map(_._1)
-      val fm = manifestMeta(tgt, table, Some(headMan), Nil, newParts,
-        out.schema)
-      val committedMax = newFilesMaxId(tgt, table, fm, newRel)
-        .map(math.max(_, floor)).orElse(headMan.maxId)
-      // the staged files were written under `physOf` — the commit must
-      // record that SAME mapping (extendMapping can assign a FRESH
+      // the staged files are written under extendMapping's mapping and
+      // the commit records that SAME mapping: it can assign a FRESH
       // physical when the overwrite frame re-adds a retired name via the
-      // path-based acceptAnySchema writer); committing headMan.props
-      // verbatim would strand such a column's bytes under a name the
-      // manifest never learns
-      a.commit(
-        Manifest(a.next, committedMax, headMan.bucket, newRel,
-          fm.stats, fm.sizes, fm.nulls, fm.rows,
-          // an overwrite replaces EVERY file, so any live equality
-          // tombstone becomes inert — prune it (its refusal matrix
-          // would otherwise keep gating CDC/clone/renames for nothing)
-          // replaced contents are arbitrary — live-key uniqueness
-          // ([[EqLiveUniqueProp]]) does not survive an overwrite
-          withMappingProps(pruneEqProps(headMan.props - EqLiveUniqueProp,
-            newRel) +
-            (SchemaProp -> schemaJson(carryFieldMetadata(Some(headMan),
-              out.schema))), physOf, retiredOf(headMan)))).orElse {
-        fs(tgt, dataDir(tgt, table)).delete(batch, true)
-        None
-      }
+      // path-based acceptAnySchema writer, and committing headMan's
+      // mapping verbatim would strand such a column's bytes under a name
+      // the manifest never learns
+      stageCommit(tgt, table, a, Nil, Seq(Batch(out)), out.schema,
+        layoutOf(headMan).copy(physOf = extendMapping(Some(headMan), out.schema)),
+        check = effectiveCheck(headMan.props), idsAbove = Some(floor),
+        recordSchema = true)(_ =>
+        // replaced contents are arbitrary — live-key uniqueness
+        // ([[EqLiveUniqueProp]]) does not survive an overwrite
+        headMan.props - EqLiveUniqueProp)
     }
   }
 
@@ -3366,45 +3364,16 @@ object VersionedTable {
         new Path(dataDir(tgt, table), r).toString)).getOrElse(0L))
     val order = if (idOrder.nonEmpty) idOrder else replacement.columns.toSeq
     val out = Loader.withSurrogateIds(replacement, floor, order)
-    val physOf = physOfMan(headMan)
-    val (batch, newParts) = writeBatch(tgt, table, out, headMan.bucket,
-      bloomColsOf(headMan), physOf, partSpecOf(headMan.props),
-      zorderLayout(headMan.props))
-    // SQL UPDATE/MERGE must not write rows the table's CHECK refuses —
-    // validated on the STAGED files (atomic with what would commit; see
-    // loadAttempt), cleaned up on violation
-    effectiveCheck(headMan.props)
-      .filter(_ => newParts.nonEmpty).foreach { c =>
-        try enforceCheckStaged(tgt, newParts.map(p =>
-          new Path(dataDir(tgt, table), p._1).toString), physOf, c, table)
-        catch { case e: Throwable =>
-          fs(tgt, dataDir(tgt, table)).delete(batch, true)
-          throw e
-        }
-      }
-    val newRel = newParts.map(_._1)
-    val fm = manifestMeta(tgt, table, Some(headMan), keepRel, newParts, out.schema)
-    // same strictness as loadAttempt: when the footer probe bails on a
-    // populated file, record NO floor (the next load scans) — fabricating
-    // `floor` here would reissue the ids just stamped above it
-    val committedMax = newFilesMaxId(tgt, table, fm, newRel)
-      .map(math.max(_, floor))
-    if (tryCommitManifest(tgt, table,
-      Manifest(expectedVersion + 1, committedMax, headMan.bucket,
-        keepRel ++ newRel, fm.stats, fm.sizes, fm.nulls, fm.rows,
-        // the rewrite's eq-filtered output materializes any tombstone
-        // whose last stamped file it replaced — prune the inert entries.
-        // UPDATE/MERGE may rewrite key values into duplicates — the
-        // live-uniqueness invariant drops ([[EqLiveUniqueProp]])
-        pruneEqProps(headMan.props - EqLiveUniqueProp, keepRel) +
-          (SchemaProp -> schemaJson(carryFieldMetadata(Some(headMan), out.schema))),
-        dvCarry(Some(headMan), keepRel)), op)) {
-      maybeAutoCompact(tgt, table)
-      Some(expectedVersion + 1)
-    } else {
-      fs(tgt, dataDir(tgt, table)).delete(batch, true)
-      None
-    }
+    // SQL UPDATE/MERGE must not write rows the table's CHECK refuses
+    val v = stageCommit(tgt, table, new CommitAttempt(tgt, table, op, Some(headMan)),
+      keepRel, Seq(Batch(out)), out.schema, layoutOf(headMan),
+      check = effectiveCheck(headMan.props), idsAbove = Some(floor),
+      recordSchema = true)(_ =>
+      // UPDATE/MERGE may rewrite key values into duplicates — the
+      // live-uniqueness invariant drops ([[EqLiveUniqueProp]])
+      headMan.props - EqLiveUniqueProp)
+    if (v.isDefined) maybeAutoCompact(tgt, table)
+    v
   }
 
   /** The SQL row-level operations' refusal of a lost race
@@ -3536,161 +3505,91 @@ object VersionedTable {
     val rewriteDvs: Map[String, (String, Long)] = outcomes.collect {
       case (rel, Rewrite(p, n)) => rel -> ((p, n))
     }
-    def cleanupSidecars(paths: Iterable[String]): Unit = paths.foreach { p =>
-      try f.delete(new Path(dataDir(tgt, table), p), false)
-      catch { case _: java.io.IOException => () }
-    }
-    def cleanupAllSidecars(): Unit =
-      cleanupSidecars((newDvs.values ++ rewriteDvs.values).map(_._1))
     // a file whose merged DV covers every recorded row is LOGICALLY
     // EMPTY: drop it (and its DV) from the manifest — readers never
     // mount it, vacuum reclaims both once unreferenced. `dropWhole`
-    // joins the same set (its proof was metadata-only).
+    // joins the same set (its proof was metadata-only). Gone files carry
+    // no committed DV, so none of them may stay listed.
     val gone = outcomes.collect { case (rel, Gone) => rel }.toSet ++ dropWhole
     val rewriteRel = rewriteDvs.keySet
     val keepRel = headMan.files.filterNot(r => gone(r) || rewriteRel(r))
     val schemaFull = recordedSchema(headMan)
     // CoW-fraction fallback: the heavily-deleted files' LIVE rows (ids
     // preserved — these are existing rows) rewrite as a fresh batch, read
-    // distributed with the merged sidecars applied executor-side
-    val (rwBatch, rwParts) =
-      if (rewriteRel.isEmpty) (null, Seq.empty[(String, Long)])
-      else writeBatch(tgt, table,
+    // distributed with the merged sidecars applied executor-side. They
+    // were validated when they landed, so they skip the CHECK gate.
+    val rewrite =
+      if (rewriteRel.isEmpty) Nil
+      else Seq(Batch(
         // eq-wrapped: a rewritten file is born UNSTAMPED (past every
         // tombstone), so re-emitting a tombstoned row here would
         // resurrect it — the stamp-grouped anti-join filters first
         readRelsEq(tgt, table, headMan, rewriteRel.toSeq, rels =>
           readRelsApplyingSidecars(tgt, table, headMan, rels,
             rewriteDvs.map { case (rel, (p, _)) => rel -> p }, schemaFull)),
-        headMan.bucket, bloomColsOf(headMan), physOfMan(headMan),
-        partSpecOf(headMan.props), zorderLayout(headMan.props))
-    def cleanupRewrite(): Unit =
-      if (rwBatch != null) fs(tgt, dataDir(tgt, table)).delete(rwBatch, true)
-    // keep at least one schema-bearing file (the invariant every rewrite
-    // path maintains — an empty table still reads its schema). When the
-    // statement empties the table outright (every file Gone/dropped,
-    // nothing staged), a FRESH EMPTY file carries the schema — the CoW
-    // delete's own TRUNCATE shape. Re-mounting a fully-deleted file
-    // bare (the old fallback) would RESURRECT its rows: Gone files
-    // carry no committed DV.
-    val keepSafe =
-      if (keepRel.nonEmpty || stagedFiles.nonEmpty ||
-          stagedWithIds.nonEmpty || rwParts.nonEmpty) keepRel
-      else Nil
-    val (emptyBatch, emptyParts) =
-      if (keepSafe.nonEmpty || stagedFiles.nonEmpty ||
-          stagedWithIds.nonEmpty || rwParts.nonEmpty)
-        (null, Seq.empty[(String, Long)])
-      else {
-        val sch = schemaFull.getOrElse(tgt.spark.read.parquet(
-          new Path(dataDir(tgt, table), headMan.files.head).toString).schema)
-        writeBatch(tgt, table, tgt.spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), sch),
-          headMan.bucket, bloomColsOf(headMan), physOfMan(headMan))
-      }
-    def cleanupEmpty(): Unit =
-      if (emptyBatch != null) fs(tgt, dataDir(tgt, table)).delete(emptyBatch, true)
-    val goneSafe = (gone ++ rewriteRel) -- keepSafe
+        checked = false))
+    // the statement's inserted rows get fresh ids above the floor
     val schema = schemaFull
       .map(s => org.apache.spark.sql.types.StructType(
         s.fields.filterNot(_.name == Loader.IdCol)))
-    val replacement =
-      if (stagedFiles.nonEmpty) {
-        val r = tgt.spark.read
-        schema.fold(r)(r.schema).parquet(stagedFiles: _*)
-      } else null
-    val (batch, newParts) =
-      if (replacement == null) (null, Seq.empty[(String, Long)])
+    val freshIds = stagedFiles.nonEmpty || stagedWithIds.nonEmpty
+    lazy val floor = headMan.maxId.getOrElse(
+      footerMaxId(tgt, headMan.files.map(r =>
+        new Path(dataDir(tgt, table), r).toString)).getOrElse(0L))
+    val inserted =
+      if (stagedFiles.isEmpty) Nil
       else {
-        val floor = headMan.maxId.getOrElse(
-          footerMaxId(tgt, headMan.files.map(r =>
-            new Path(dataDir(tgt, table), r).toString)).getOrElse(0L))
+        val r = tgt.spark.read
+        val replacement = schema.fold(r)(r.schema).parquet(stagedFiles: _*)
         val order = if (idOrder.nonEmpty) idOrder
           else replacement.columns.toSeq
-        val out = Loader.withSurrogateIds(replacement, floor, order)
-        // the MOR statement's inserted rows respect the declared
-        // partition-transform layout like every other write
-        writeBatch(tgt, table, out, headMan.bucket, bloomColsOf(headMan),
-          physOfMan(headMan), partSpecOf(headMan.props),
-          zorderLayout(headMan.props))
+        Seq(Batch(Loader.withSurrogateIds(replacement, floor, order)))
       }
     // id-carrying staged rows (MOR upsert's merged-matched + fresh):
-    // written through the same bucket/bloom-aware batch writer, ids
-    // verbatim
-    val (idBatch, idParts) =
-      if (stagedWithIds.isEmpty) (null, Seq.empty[(String, Long)])
+    // ids verbatim
+    val withIds =
+      if (stagedWithIds.isEmpty) Nil
       else {
         val r = tgt.spark.read
-        writeBatch(tgt, table,
-          schemaFull.fold(r)(r.schema).parquet(stagedWithIds: _*),
-          headMan.bucket, bloomColsOf(headMan), physOfMan(headMan),
-          partSpecOf(headMan.props), zorderLayout(headMan.props))
+        Seq(Batch(schemaFull.fold(r)(r.schema).parquet(stagedWithIds: _*)))
       }
-    def cleanupBatch(): Unit = {
-      if (batch != null) fs(tgt, dataDir(tgt, table)).delete(batch, true)
-      if (idBatch != null) fs(tgt, dataDir(tgt, table)).delete(idBatch, true)
-    }
-    def cleanupAll(): Unit = {
-      cleanupBatch(); cleanupRewrite(); cleanupEmpty(); cleanupAllSidecars()
-    }
-    // the CHECK gate validates the STAGED bytes, like every write path
-    // (rewrite parts hold pre-existing, already-validated rows; the
-    // id-carrying merged rows are MODIFIED rows and validate too)
-    effectiveCheck(headMan.props ++ propsDelta)
-      .filter(_ => newParts.nonEmpty || idParts.nonEmpty).foreach { c =>
-        try enforceCheckStaged(tgt, (newParts ++ idParts).map(p =>
-          new Path(dataDir(tgt, table), p._1).toString),
-          physOfMan(headMan), c, table)
-        catch { case e: Throwable =>
-          cleanupAll()
-          throw e
-        }
-      }
-    val newRel = rwParts.map(_._1) ++ newParts.map(_._1) ++
-      idParts.map(_._1) ++ emptyParts.map(_._1)
-    val stagedRel = (newParts ++ idParts).map(_._1)
-    val floor0 = headMan.maxId
-    val fm = manifestMeta(tgt, table, Some(headMan), keepSafe,
-      rwParts ++ newParts ++ idParts ++ emptyParts,
-      schemaFull.getOrElse(org.apache.spark.sql.types.StructType(Nil)))
-    val committedMax =
-      if (stagedRel.isEmpty) floor0
-      else newFilesMaxId(tgt, table, fm, stagedRel)
-        .map(m => math.max(m, floor0.getOrElse(0L))).orElse(floor0)
     // [[EqLiveUniqueProp]]: inserted/modified rows (MOR upsert merges,
     // MERGE inserts, UPDATE rewrites) may introduce duplicate keys —
     // the uniqueness invariant drops; a pure delete (DV-only) only
     // removes rows and preserves it
     val propsAfter = {
       val p = (headMan.props ++ propsDelta) -- dropProps
-      if (stagedFiles.nonEmpty || stagedWithIds.nonEmpty)
-        p - EqLiveUniqueProp
-      else p
+      if (freshIds) p - EqLiveUniqueProp else p
     }
-    if (tryCommitManifest(tgt, table,
-      Manifest(expectedVersion + 1, committedMax, headMan.bucket,
-        keepSafe ++ newRel, fm.stats, fm.sizes, fm.nulls, fm.rows,
-        pruneEqProps(propsAfter, keepSafe ++ newRel),
-        (dvCarry(Some(headMan), keepSafe) ++ newDvs) -- goneSafe -- newRel),
-      op)) {
+    val sidecar = (p: String) => new Path(dataDir(tgt, table), p)
+    val v = stageCommit(tgt, table,
+      new CommitAttempt(tgt, table, op, Some(headMan)), keepRel,
+      rewrite ++ inserted ++ withIds,
+      schemaFull.getOrElse(tgt.spark.read.parquet(
+        new Path(dataDir(tgt, table), headMan.files.head).toString).schema),
+      layoutOf(headMan), check = effectiveCheck(headMan.props ++ propsDelta),
+      idsAbove = if (freshIds) Some(floor) else None, dvs = newDvs,
+      staged0 = (newDvs.values ++ rewriteDvs.values).map(d => sidecar(d._1)).toSeq)(
+      _ => propsAfter)
+    if (v.isDefined) {
       // rewritten files' merged sidecars were commit-transient: nothing
       // references them now (best-effort — vacuum sweeps leftovers)
-      cleanupSidecars(rewriteDvs.values.map(_._1))
+      rewriteDvs.values.foreach { case (p, _) =>
+        try f.delete(sidecar(p), false)
+        catch { case _: java.io.IOException => () }
+      }
       maybeAutoCompact(tgt, table)
-      Some(expectedVersion + 1)
-    } else {
-      cleanupAll()
-      None
     }
+    v
   }
 
   // ------------------------------------------------------------------ delete
 
   /** Logical DELETE: commit a new version containing only the rows NOT
     * matching `cond`. Copy-on-write AND FILE-PRUNED: a probe pass finds
-    * the files that actually CONTAIN matching rows (`input_file_name` over
-    * the pushed-down predicate — parquet row-group stats skip most files
-    * without reading rows), only those files are rewritten without their
+    * the files that actually CONTAIN matching rows (the pushed-down
+    * predicate over the candidate files — parquet row-group stats skip
+    * most without reading rows), only those files are rewritten without their
     * matches, and every other file carries into the new manifest untouched
     * — O(matching files), not O(table). Every prior version still reads
     * its own files (the rows are logically gone, physically reclaimed by
@@ -3715,18 +3614,9 @@ object VersionedTable {
     * mostly deleted. Untouched files carry byte-for-byte verbatim. */
   def delete(tgt: Catalog, table: String, cond: org.apache.spark.sql.Column): Long = {
     Loader.ensureParquetWriteConf(tgt.spark)
-    if (isMergeOnRead(tgt, table))
-      return commitWithRetry(tgt, table, "delete") { a =>
-        val man = a.man
-        val tree = org.apache.spark.sql.graft.ColumnExprBridge.predTree(cond)
-        val (candRel0, _) = pruneByStats(man, cond)
-        val dropped = candRel0.filter(r => fileCovered(man, r, tree)).toSet
-        deleteMorAttempt(tgt, table, a, _.where(cond),
-          candRel0.filterNot(dropped), dropped)
-      }
+    val mor = isMergeOnRead(tgt, table)
     val committed = commitWithRetry(tgt, table, "delete") { a =>
       val man = a.man
-      def absOf(rel: String) = new Path(dataDir(tgt, table), rel).toUri.getPath
       val tree = org.apache.spark.sql.graft.ColumnExprBridge.predTree(cond)
       // three-way split, all driver-side metadata: files provably ALL
       // matching drop outright; files provably NOT matching carry; only
@@ -3734,64 +3624,12 @@ object VersionedTable {
       val (candRel0, _) = pruneByStats(man, cond)
       val dropped = candRel0.filter(r => fileCovered(man, r, tree)).toSet
       val candRel = candRel0.filterNot(dropped)
-      // file-match probe: which undecided files hold at least one matching
-      // row (parquet row-group stats skip most without reading rows)
-      // the probe reads WITHOUT the equality-tombstone wrap: the wrap's
-      // anti-joins add the key files as extra sources and Spark refuses
-      // input_file_name over a multi-source plan (PreReadCheck). The
-      // un-wrapped hit set is a SUPERSET (dead rows can match `cond`) —
-      // over-hit only rewrites a file whose matches were already
-      // tombstone-dead, and the rewrite below reads eq-wrapped, so it
-      // can never resurrect them
-      val hit: Set[String] =
-        if (candRel.isEmpty) Set.empty
-        else readRelsWithDvNoEq(tgt, table, man, candRel)
-          .where(cond).select(input_file_name().as("f")).distinct()
-          .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-      val (hitRel, keepRel) = man.files.filterNot(dropped)
-        .partition(r => hit.contains(absOf(r)))
-      if (hitRel.isEmpty && dropped.isEmpty)
-        // nothing matches: the delete is recorded without touching a byte
-        a.commit(man)
-      else if (hitRel.isEmpty && keepRel.nonEmpty) {
-        // METADATA-ONLY delete: every matching file was fully covered —
-        // commit the survivors' manifest without reading a byte
-        val fm = manifestMeta(tgt, table, Some(man), keepRel, Nil,
-          org.apache.spark.sql.types.StructType(Nil))
-        a.commit(Manifest(a.next, man.maxId, man.bucket, keepRel,
-          fm.stats, fm.sizes, fm.nulls, fm.rows,
-          pruneEqProps(man.props, keepRel),
-          dvCarry(Some(man), keepRel)))
-      } else {
-        // partial rewrite; when EVERYTHING matched (hitRel empty AND
-        // keepRel empty) the empty-survivors write keeps the schema alive
-        val srcRel = if (hitRel.nonEmpty) hitRel else Seq(man.files.head)
-        val srcDf = readRelsWithDv(tgt, table, man, srcRel)
-        val survivors =
-          if (hitRel.nonEmpty) srcDf.where(!coalesce(cond, lit(false)))
-          else srcDf.where(lit(false))
-        val (batch, newParts) = writeBatch(tgt, table, survivors, man.bucket,
-          bloomColsOf(man), physOfMan(man), partSpecOf(man.props),
-          zorderLayout(man.props))
-        val newRel = newParts.map(_._1)
-        // the id floor NEVER decreases on delete (deleted rows' ids are
-        // not reissued — they may still be referenced by older versions);
-        // carry the recorded floor, falling back to the survivors' footers
-        val keepAbs = (keepRel ++ newRel).map(r =>
-          new Path(dataDir(tgt, table), r).toString)
-        val maxId = man.maxId.orElse(footerMaxId(tgt, keepAbs))
-        val fm = manifestMeta(tgt, table, Some(man), keepRel, newParts,
-          survivors.schema)
-        a.commit(Manifest(a.next, maxId, man.bucket, keepRel ++ newRel,
-          fm.stats, fm.sizes, fm.nulls, fm.rows,
-          pruneEqProps(man.props, keepRel ++ newRel),
-          dvCarry(Some(man), keepRel))).orElse {
-          fs(tgt, dataDir(tgt, table)).delete(batch, true)
-          None
-        }
-      }
+      if (mor) deleteMorAttempt(tgt, table, a, _.where(cond), candRel, dropped)
+      else deleteCowAttempt(tgt, table, a, _.where(cond),
+        _.where(!coalesce(cond, lit(false))), candRel, dropped)
     }
-    maybeAutoCompact(tgt, table)
+    // the merge-on-read route checks inside applyRowDeltas
+    if (!mor) maybeAutoCompact(tgt, table)
     committed
   }
 
@@ -3834,51 +3672,15 @@ object VersionedTable {
     }
     try {
       val committed = commitWithRetry(tgt, table, "deleteKeys") { a =>
-      val man = a.man
-      def absOf(rel: String) = new Path(dataDir(tgt, table), rel).toUri.getPath
-      val candRel = envelope.map(p => pruneByStats(man, p)._1).getOrElse(man.files)
-      if (man.props.get(WriteModeProp).contains(MergeOnRead))
-        // merge-on-read: victims become DV positions (fragments written
-        // executor-side); no file rewrites below dv_max_fraction
-        deleteMorAttempt(tgt, table, a,
-          _.join(kr, keys, "left_semi"), candRel, Set.empty)
-      else {
-      // input_file_name() must bind on the SCAN side — above a join it is
-      // ambiguous (MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION) — so the
-      // probe reads WITHOUT the eq-tombstone wrap (whose anti-joins add
-      // the key files as extra sources): the un-wrapped hit set is a
-      // superset, and the survivor rewrite below reads eq-wrapped, so an
-      // over-hit rewrite cannot resurrect tombstone-dead rows
-      val hit: Set[String] =
-        if (candRel.isEmpty) Set.empty
-        else readRelsWithDvNoEq(tgt, table, man, candRel)
-          .withColumn("__f", input_file_name())
-          .join(kr, keys, "left_semi")
-          .select(col("__f")).distinct()
-          .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-      val (hitRel, keepRel) = man.files.partition(r => hit.contains(absOf(r)))
-      if (hitRel.isEmpty) a.commit(man)
-      else {
-        val survivors = readRelsWithDv(tgt, table, man, hitRel)
-          .join(kr, keys, "left_anti")
-        val (batch, newParts) = writeBatch(tgt, table, survivors, man.bucket,
-          bloomColsOf(man), physOfMan(man), partSpecOf(man.props),
-          zorderLayout(man.props))
-        val newRel = newParts.map(_._1)
-        val keepAbs = (keepRel ++ newRel).map(r =>
-          new Path(dataDir(tgt, table), r).toString)
-        val maxId = man.maxId.orElse(footerMaxId(tgt, keepAbs))
-        val fm = manifestMeta(tgt, table, Some(man), keepRel, newParts,
-          survivors.schema)
-        a.commit(Manifest(a.next, maxId, man.bucket, keepRel ++ newRel,
-          fm.stats, fm.sizes, fm.nulls, fm.rows,
-          pruneEqProps(man.props, keepRel ++ newRel),
-          dvCarry(Some(man), keepRel))).orElse {
-          fs(tgt, dataDir(tgt, table)).delete(batch, true)
-          None
-        }
-      }
-      }
+        val man = a.man
+        val candRel = envelope.map(p => pruneByStats(man, p)._1).getOrElse(man.files)
+        if (man.props.get(WriteModeProp).contains(MergeOnRead))
+          // merge-on-read: victims become DV positions (fragments written
+          // executor-side); no file rewrites below dv_max_fraction
+          deleteMorAttempt(tgt, table, a,
+            _.join(kr, keys, "left_semi"), candRel, Set.empty)
+        else deleteCowAttempt(tgt, table, a, _.join(kr, keys, "left_semi"),
+          _.join(kr, keys, "left_anti"), candRel, Set.empty)
       }
       // CoW deletes rewrite boundary files into fresh small ones — the
       // same accretion the trigger exists for (the MOR route already
@@ -3925,6 +3727,46 @@ object VersionedTable {
     } finally {
       try { val p = new Path(stage); if (f.exists(p)) f.delete(p, true) }
       catch { case _: java.io.IOException => () }
+    }
+  }
+
+  /** One COPY-ON-WRITE delete attempt (shared by [[delete]] and
+    * [[deleteKeys]]): `matchedOf` narrows rows to the victims (a
+    * predicate or a semi-join), `survivorsOf` to the rest. A probe over
+    * the candidate files finds those holding at least one victim
+    * (parquet row-group stats skip most without reading rows); only
+    * those rewrite to their survivors, every other file carries
+    * untouched, and `dropWhole` (files a zone-map proof showed fully
+    * matching) drops without a byte read. The probe names each row's
+    * file through the scan's own `_metadata` column, so it binds below
+    * a join and a predicate still pushes into the scan; it reads WITHOUT
+    * the equality-tombstone wrap — the un-wrapped hit set is a superset
+    * (tombstone-dead rows can match), and the survivor read below is
+    * eq-wrapped, so an over-hit rewrite cannot resurrect them. A delete
+    * matching nothing commits the head's manifest (the operation stays
+    * in history); one left with no file keeps one schema-bearing file
+    * ([[stageCommit]]). Deleted ids are never reissued: the floor
+    * carries. None on a lost CAS. */
+  private def deleteCowAttempt(tgt: Catalog, table: String, a: CommitAttempt,
+                               matchedOf: DataFrame => DataFrame,
+                               survivorsOf: DataFrame => DataFrame,
+                               candRel: Seq[String],
+                               dropWhole: Set[String]): Option[Long] = {
+    val man = a.man
+    val hit: Set[String] =
+      if (candRel.isEmpty) Set.empty
+      else matchedOf(readRelsLiveWithIdentityNoEq(tgt, table, man, candRel, None))
+        .select(col("__graft_fp")).distinct()
+        .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
+    val (hitRel, keepRel) = man.files.filterNot(dropWhole).partition(r =>
+      hit.contains(new Path(dataDir(tgt, table), r).toUri.getPath))
+    if (hitRel.isEmpty && dropWhole.isEmpty) a.commit(man)
+    else {
+      val src = readRelsWithDv(tgt, table, man,
+        if (hitRel.nonEmpty) hitRel else man.files.take(1))
+      stageCommit(tgt, table, a, keepRel,
+        if (hitRel.isEmpty) Nil else Seq(Batch(survivorsOf(src))),
+        src.schema, layoutOf(man))(_ => man.props)
     }
   }
 
@@ -4291,25 +4133,15 @@ object VersionedTable {
         // bound the parquet row group at a quarter of the file target so
         // every at-target compacted file carries ≥4 independently
         // readable row groups — a single-row-group file is one scan task
-        // forever, no matter how the re-read splits it (guide §6)
-        val (batch, newParts) = writeBatch(tgt, table, out, man.bucket,
-          bloomColsOf(man), physOfMan(man),
-          extraOpts = Map("parquet.block.size" -> math.max(1L << 20,
-            math.min(128L << 20, targetFileBytes / 4)).toString))
-        val newRel = newParts.map(_._1)
-        val fm = manifestMeta(tgt, table, Some(man), keep.map(_._1),
-          newParts, rows.schema)
-        // equality tombstones: rewritten files are born PAST every
+        // forever, no matter how the re-read splits it (guide §6).
+        // Equality tombstones: rewritten files are born PAST every
         // tombstone (unstamped); carried files keep their stamps, and a
         // tombstone no surviving file is stamped below drops — the
         // materialization step of the write-without-read upsert
-        a.commit(Manifest(a.next, man.maxId, man.bucket,
-          keep.map(_._1) ++ newRel, fm.stats, fm.sizes, fm.nulls, fm.rows,
-          pruneEqProps(man.props, keep.map(_._1)),
-          dvCarry(Some(man), keep.map(_._1)))).orElse {
-          fs(tgt, dataDir(tgt, table)).delete(batch, true)
-          None
-        }
+        stageCommit(tgt, table, a, keep.map(_._1), Seq(Batch(out)), rows.schema,
+          Layout(man.bucket, bloomColsOf(man), physOfMan(man),
+            extraOpts = Map("parquet.block.size" -> math.max(1L << 20,
+              math.min(128L << 20, targetFileBytes / 4)).toString)))(_ => man.props)
       }
     }
   }
@@ -4354,19 +4186,11 @@ object VersionedTable {
         else graft.operators.ZOrder.zValue(rows, clusterBy)
       val out = rows.repartitionByRange(parts, sortKey)
         .sortWithinPartitions(sortKey)
-      val (batch, newParts) = writeBatch(tgt, table, out, None,
-        bloomColsOf(man), physOfMan(man))
-      val newRel = newParts.map(_._1)
-      // parent = Some(man): the rewritten files carry PHYSICAL names, so
-      // the footer-stat request must translate through the table's
-      // column mapping (a renamed column's zone maps would otherwise
-      // vanish from the reclustered manifest — or worse, mis-key)
-      val fm = manifestMeta(tgt, table, Some(man), Nil, newParts, rows.schema)
-      a.commit(Manifest(a.next, man.maxId, None, newRel,
-        fm.stats, fm.sizes, fm.nulls, fm.rows, man.props)).orElse {
-        fs(tgt, dataDir(tgt, table)).delete(batch, true)
-        None
-      }
+      // the rewritten files carry PHYSICAL names, so their footer stats
+      // translate through the table's column mapping (a renamed
+      // column's zone maps would otherwise vanish or mis-key)
+      stageCommit(tgt, table, a, Nil, Seq(Batch(out)), rows.schema,
+        Layout(None, bloomColsOf(man), physOfMan(man)))(_ => man.props)
     }
   }
 
@@ -5088,7 +4912,7 @@ object VersionedTable {
       physOfMan(man))
 
   /** DESCRIBE HISTORY: one row per retained version, from PURE METADATA
-    * (manifests + their commit mtimes — no data I/O): version,
+    * (manifests and their recorded commit times — no data I/O): version,
     * committed_at, n_files, total_bytes, total_rows, max_id, bucketed,
     * live_eq_tombstones, eq_tombstone_keys (recorded key total; null
     * when any live tombstone predates count recording).
@@ -5099,11 +4923,9 @@ object VersionedTable {
   def history(tgt: Catalog, table: String): DataFrame = {
     val rows = versions(tgt, table).map { v =>
       val man = readManifest(tgt, table, v).get
-      // manifest-recorded commit time first (survives mtime-scrambling
-      // copies), mtime for legacy manifests — same rule as versionAt
-      val ts = new java.sql.Timestamp(man.props.get(CommitTsProp)
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .getOrElse(artifactMtime(tgt, table, v)))
+      // the manifest-recorded commit time (survives mtime-scrambling
+      // copies) — same rule as versionAt
+      val ts = new java.sql.Timestamp(committedAt(table, man))
       def total(m: Map[String, Long]): Option[Long] =
         if (man.files.forall(m.contains)) Some(man.files.map(m).sum) else None
       // live-tombstone accretion per version (count + recorded keys) —
@@ -5771,156 +5593,125 @@ object VersionedTable {
     }
     val out = Loader.withSurrogateIds(incoming, maxId, order)
     val physOf = extendMapping(headMan, out.schema)
-    val checkSql = effectiveCheck(man.props ++ extraProps)
-    val (batch, newParts) = writeBatch(tgt, table, out, man.bucket,
-      bloomColsOf(man), physOf,
-      partSpecOf(man.props ++ extraProps),
-      zorderLayout(man.props ++ extraProps))
-    def abort(e: Throwable): Nothing = {
-      fs(tgt, dataDir(tgt, table)).delete(batch, true)
-      throw e
-    }
-    checkSql.filter(_ => newParts.nonEmpty).foreach { c =>
-      try enforceCheckStaged(tgt, newParts.map(p =>
-        new Path(dataDir(tgt, table), p._1).toString), physOf, c, table)
-      catch { case e: Throwable => abort(e) }
-    }
     val newV = a.next
-    val newRel = newParts.map(_._1)
-    val stagedAbs = newRel.map(r => new Path(dataDir(tgt, table), r).toString)
-    // routed-MERGE cardinality contract ([[graft.sources.RouteEqualityMerge]]):
-    // SQL MERGE errors when several source rows hit one target row; the
-    // equality path would land them as duplicate rows instead, so the
-    // routed spelling verifies the STAGED batch is key-distinct (two
-    // O(batch) jobs over the staged files) and aborts rather than
-    // silently diverging from MERGE semantics
-    if (requireDistinctKeys && newRel.nonEmpty) {
-      val kdf0 = readFileList(tgt, stagedAbs, Some(out.schema), physOf)
-        .select(keys.map(col): _*)
-      val total = kdf0.count()
-      val dist = kdf0.distinct().count()
-      if (total != dist) abort(new IllegalArgumentException(
-        s"equality merge into '$table': the source holds ${total - dist} " +
-          s"duplicate key row(s) on (${keys.mkString(",")}) — MERGE " +
-          "admits at most one source row per target row; dedupe the " +
-          "source (e.g. keep the latest row per key) or use " +
-          "upsertEqualityDelete directly for last-writer-wins batches"))
-    }
-    // the tombstone derives from the STAGED bytes (not the incoming
-    // plan — a nondeterministic source must not disagree with what was
-    // written); written only when the parent can hold matching rows
-    val parentHasRows = man.files.exists(r => man.liveRows(r).forall(_ > 0))
-    val tombEntry0: Option[EqTombstone] =
-      if (!parentHasRows || (newParts.isEmpty && deleteKeyRows.isEmpty)) None
-      else try {
-        // staged keys ∪ explicit DELETE keys (the mixed-op CDC batch:
-        // upsert rows tombstone-and-replace, delete rows only tombstone
-        // — one key file, one commit, one epoch stamp)
-        val stagedK: Option[DataFrame] =
-          if (newParts.isEmpty) None
-          else Some(readFileList(tgt, stagedAbs, Some(out.schema), physOf)
-            .select(keys.map(col): _*))
-        val delK: Option[DataFrame] = deleteKeyRows.map(d =>
-          alignEqKeys(d, recorded, keys, table))
-        val kdf = (stagedK.toSeq ++ delK.toSeq)
-          .reduce(_.unionByName(_)).distinct().repartition(1)
-        val (rels, nKeys, nBytes) = stageEqKeyFiles(tgt, table, kdf)
-        if (nKeys.contains(0L)) {
-          // zero keys (an empty batch with an empty delete frame):
-          // a tombstone would only tax reads — stage dir swept, none
-          rels.headOption.foreach(r => fs(tgt, dataDir(tgt, table))
-            .delete(new Path(dataDir(tgt, table), r).getParent, true))
-          None
-        } else
-          Some(EqTombstone(rels, newV, keys.map(_.toLowerCase), nKeys, nBytes))
-      } catch { case e: Throwable => abort(e) }
-    val oldStamps = eqSeqsOf(man.props)
-    val stamps: Map[String, Long] = tombEntry0 match {
-      case None => oldStamps
-      case Some(_) =>
-        // stamp the parent's unstamped files with (newV - 1): they were
-        // added after the previous tombstone, so older tombstones
-        // correctly don't apply; the batch's own files stamp newV
-        man.files.map(r => r -> oldStamps.getOrElse(r, newV - 1)).toMap ++
-          newRel.map(_ -> newV)
-    }
-    val fm = manifestMeta(tgt, table, headMan, man.files, newParts, out.schema)
-    val committedMax = newFilesMaxId(tgt, table, fm, newRel)
-      .map(m => math.max(m, maxId)).orElse(Some(maxId))
-    // UNIQUENESS INDUCTION for the truncation pad ([[EqTombstone.uniq]]):
-    // the staged batch is key-distinct iff its row total equals the
-    // tombstone's recorded key count — both already-computed metadata
-    // (fm.rows over the staged files; the distinct()'d key file's footer
-    // count). Combined with the parent's [[EqLiveUniqueProp]], each
-    // flagged tombstone provably kills ≤ 1 row per key, which is what
-    // lets pushed LIMIT/top-N keep truncating over live tombstones.
-    val stagedRows: Option[Long] = {
-      val rs = newRel.map(fm.rows.get)
-      if (rs.isEmpty || rs.exists(_.isEmpty)) None else Some(rs.flatten.sum)
-    }
     val parentUnique = man.props.get(EqLiveUniqueProp)
       .contains(eqUniqueKeyCsv(keys))
-    // staged-batch key-distinctness (for the POST-state invariant): with
-    // no explicit delete keys the tombstone's recorded key count IS the
-    // staged distinct count (free); a mixed-op batch needs one O(batch)
-    // distinct over the staged key columns (the key file mixed in the
-    // delete keys)
-    val batchUnique: Boolean =
-      if (newParts.isEmpty) false // unused: no rows landed
-      else if (deleteKeyRows.isEmpty) tombEntry0 match {
-        case Some(t) => t.rows.isDefined && t.rows == stagedRows
-        case None => // parent had no live rows — no tombstone written
-          stagedRows.exists(_ == readFileList(tgt, stagedAbs,
-            Some(out.schema), physOf)
-            .select(keys.map(col): _*).distinct().count())
-      }
-      else stagedRows.exists(_ == readFileList(tgt, stagedAbs,
-        Some(out.schema), physOf)
-        .select(keys.map(col): _*).distinct().count())
-    // uniq (kills ≤ 1 row per key) needs only PARENT uniqueness: the
-    // staged files stamp at the tombstone's own seq, so the tombstone
-    // never applies to them — only to the (unique) parent rows
-    val tombEntry = tombEntry0.map(_.copy(uniq = Some(parentUnique)))
-    val eq = eqTombstonesOf(man.props) ++ tombEntry
-    val nowUnique =
-      if (parentHasRows) parentUnique && batchUnique
-      else batchUnique // no parent rows: the staged batch IS the live set
-    val liveUniqueAdj: Map[String, String] =
-      if (newParts.isEmpty) // deletes/no-ops only remove rows — the
-        // invariant (whatever its state) carries verbatim
-        man.props.get(EqLiveUniqueProp)
-          .map(v => Map(EqLiveUniqueProp -> v)).getOrElse(Map.empty)
-      else if (nowUnique) Map(EqLiveUniqueProp -> eqUniqueKeyCsv(keys))
-      else Map.empty
     // widened (batch-only) columns record NULLABLE regardless of the
     // batch frame's flag: every pre-evolution row reads them as null
     val recordedOut = org.apache.spark.sql.types.StructType(
       carryFieldMetadata(headMan, out.schema).fields.map(f =>
         if (extra.exists(_.name.equalsIgnoreCase(f.name)))
           f.copy(nullable = true) else f))
-    // first-equality-write DEFAULT compaction trigger (see
-    // [[DefaultEqTombstoneTrigger]]) — only when nothing configured it
-    val trigDefault: Map[String, String] =
-      if ((man.props ++ extraProps).contains(CompactEqTombstonesProp) ||
-          dropProps.contains(CompactEqTombstonesProp)) Map.empty
-      else Map(CompactEqTombstonesProp -> DefaultEqTombstoneTrigger.toString)
-    val props = withMappingProps(
+    stageCommit(tgt, table, a, man.files, Seq(Batch(out)), recordedOut,
+      layoutOf(man, extraProps).copy(physOf = physOf),
+      check = effectiveCheck(man.props ++ extraProps), idsAbove = Some(maxId),
+      recordSchema = true) { st =>
+      val stagedAbs = st.rel.map(r => new Path(dataDir(tgt, table), r).toString)
+      def stagedKeys = readFileList(tgt, stagedAbs, Some(out.schema), physOf)
+        .select(keys.map(col): _*)
+      // routed-MERGE cardinality contract ([[graft.sources.RouteEqualityMerge]]):
+      // SQL MERGE errors when several source rows hit one target row; the
+      // equality path would land them as duplicate rows instead, so the
+      // routed spelling verifies the STAGED batch is key-distinct (two
+      // O(batch) jobs over the staged files) and aborts rather than
+      // silently diverging from MERGE semantics
+      if (requireDistinctKeys && st.rel.nonEmpty) {
+        val total = stagedKeys.count()
+        val dist = stagedKeys.distinct().count()
+        if (total != dist) throw new IllegalArgumentException(
+          s"equality merge into '$table': the source holds ${total - dist} " +
+            s"duplicate key row(s) on (${keys.mkString(",")}) — MERGE " +
+            "admits at most one source row per target row; dedupe the " +
+            "source (e.g. keep the latest row per key) or use " +
+            "upsertEqualityDelete directly for last-writer-wins batches")
+      }
+      // the tombstone derives from the STAGED bytes (not the incoming
+      // plan — a nondeterministic source must not disagree with what was
+      // written); written only when the parent can hold matching rows
+      val parentHasRows = man.files.exists(r => man.liveRows(r).forall(_ > 0))
+      val tombEntry0: Option[EqTombstone] =
+        if (!parentHasRows || (st.rel.isEmpty && deleteKeyRows.isEmpty)) None
+        else {
+          // staged keys ∪ explicit DELETE keys (the mixed-op CDC batch:
+          // upsert rows tombstone-and-replace, delete rows only tombstone
+          // — one key file, one commit, one epoch stamp)
+          val delK: Option[DataFrame] = deleteKeyRows.map(d =>
+            alignEqKeys(d, recorded, keys, table))
+          val kdf = ((if (st.rel.isEmpty) Nil else Seq(stagedKeys)) ++ delK.toSeq)
+            .reduce(_.unionByName(_)).distinct().repartition(1)
+          val (rels, nKeys, nBytes) = stageEqKeyFiles(tgt, table, kdf)
+          val dir = rels.headOption.map(r => new Path(dataDir(tgt, table), r).getParent)
+          if (nKeys.contains(0L)) {
+            // zero keys (an empty batch with an empty delete frame): a
+            // tombstone would only tax reads — stage dir swept, none
+            dir.foreach(fs(tgt, dataDir(tgt, table)).delete(_, true))
+            None
+          } else {
+            dir.foreach(st.track)
+            Some(EqTombstone(rels, newV, keys.map(_.toLowerCase), nKeys, nBytes))
+          }
+        }
+      val oldStamps = eqSeqsOf(man.props)
+      val stamps: Map[String, Long] = tombEntry0 match {
+        case None => oldStamps
+        case Some(_) =>
+          // stamp the parent's unstamped files with (newV - 1): they were
+          // added after the previous tombstone, so older tombstones
+          // correctly don't apply; the batch's own files stamp newV
+          man.files.map(r => r -> oldStamps.getOrElse(r, newV - 1)).toMap ++
+            st.rel.map(_ -> newV)
+      }
+      // UNIQUENESS INDUCTION for the truncation pad ([[EqTombstone.uniq]]):
+      // the staged batch is key-distinct iff its row total equals the
+      // tombstone's recorded key count — both already-computed metadata
+      // (the staged files' row counts; the distinct()'d key file's footer
+      // count). Combined with the parent's [[EqLiveUniqueProp]], each
+      // flagged tombstone provably kills ≤ 1 row per key, which is what
+      // lets pushed LIMIT/top-N keep truncating over live tombstones.
+      val stagedRows: Option[Long] = {
+        val rs = st.rel.map(st.meta.rows.get)
+        if (rs.isEmpty || rs.exists(_.isEmpty)) None else Some(rs.flatten.sum)
+      }
+      // staged-batch key-distinctness (for the POST-state invariant): with
+      // no explicit delete keys the tombstone's recorded key count IS the
+      // staged distinct count (free); otherwise (a mixed-op batch, whose
+      // key file mixed in the delete keys, or no tombstone because the
+      // parent had no live rows) one O(batch) distinct over the staged
+      // key columns
+      val batchUnique: Boolean =
+        if (st.rel.isEmpty) false // unused: no rows landed
+        else tombEntry0 match {
+          case Some(t) if deleteKeyRows.isEmpty =>
+            t.rows.isDefined && t.rows == stagedRows
+          case _ => stagedRows.exists(_ == stagedKeys.distinct().count())
+        }
+      // uniq (kills ≤ 1 row per key) needs only PARENT uniqueness: the
+      // staged files stamp at the tombstone's own seq, so the tombstone
+      // never applies to them — only to the (unique) parent rows
+      val tombEntry = tombEntry0.map(_.copy(uniq = Some(parentUnique)))
+      val eq = eqTombstonesOf(man.props) ++ tombEntry
+      val nowUnique =
+        if (parentHasRows) parentUnique && batchUnique
+        else batchUnique // no parent rows: the staged batch IS the live set
+      val liveUniqueAdj: Map[String, String] =
+        if (st.rel.isEmpty) // deletes/no-ops only remove rows — the
+          // invariant (whatever its state) carries verbatim
+          man.props.get(EqLiveUniqueProp)
+            .map(v => Map(EqLiveUniqueProp -> v)).getOrElse(Map.empty)
+        else if (nowUnique) Map(EqLiveUniqueProp -> eqUniqueKeyCsv(keys))
+        else Map.empty
+      // first-equality-write DEFAULT compaction trigger (see
+      // [[DefaultEqTombstoneTrigger]]) — only when nothing configured it
+      val trigDefault: Map[String, String] =
+        if ((man.props ++ extraProps).contains(CompactEqTombstonesProp) ||
+            dropProps.contains(CompactEqTombstonesProp)) Map.empty
+        else Map(CompactEqTombstonesProp -> DefaultEqTombstoneTrigger.toString)
       (((man.props ++ extraProps) -- dropProps) - EqLiveUniqueProp) ++
         trigDefault ++ liveUniqueAdj +
         (UpsertKeysProp -> keys.mkString(",")) +
-        (SchemaProp -> schemaJson(recordedOut)) +
         (EqDelProp -> renderEqTombstones(eq)) ++
         (if (stamps.isEmpty) Map.empty[String, String]
-         else Map(EqSeqProp -> renderEqSeqs(stamps))),
-      physOf, retiredOf(man))
-    a.commit(Manifest(newV, committedMax, man.bucket, man.files ++ newRel,
-      fm.stats, fm.sizes, fm.nulls, fm.rows, props,
-      dvCarry(headMan, man.files))).orElse {
-      val f = fs(tgt, dataDir(tgt, table))
-      f.delete(batch, true)
-      tombEntry.foreach(t => t.files.headOption.foreach(r =>
-        f.delete(new Path(dataDir(tgt, table), r).getParent, true)))
-      None
+         else Map(EqSeqProp -> renderEqSeqs(stamps)))
     }
   }
 
@@ -6760,7 +6551,7 @@ object VersionedTable {
   /** TIME-based retention (the Delta `VACUUM ... RETAIN` shape): reclaim
     * versions whose RECORDED commit time is strictly older than
     * `olderThanMs`, always keeping the head. Resolution is by the
-    * manifest-recorded wall clock ([[CommitTsProp]], mtime fallback) —
+    * manifest-recorded wall clock ([[CommitTsProp]]) —
     * commit times are parent-monotone, so the kept set is exactly the
     * newest suffix and the count feeds the positional [[vacuum]]. */
   def vacuumOlderThan(tgt: Catalog, table: String, olderThanMs: Long,

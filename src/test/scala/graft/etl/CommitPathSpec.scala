@@ -141,6 +141,16 @@ class CommitPathSpec extends SparkSpec {
     VersionedTable.load(c, "t",
       Seq((2L, -1.0, "upd", 2), (50L, 5.0, "new", 50)).toDF("k", "v", "s", "n"),
       upsertFields = Seq("k"), idOrder = Seq("k")))
+  libraryCase("copy-on-write keyed load on a bucketed table", "load",
+    prepare = c => VersionedTable.load(c, "t", rows(10 to 12), idOrder = Seq("k"),
+      bucketBy = Some((Seq("k"), 4))))(c =>
+    VersionedTable.load(c, "t",
+      Seq((2L, -1.0, "upd", 2), (50L, 5.0, "new", 50)).toDF("k", "v", "s", "n"),
+      upsertFields = Seq("k"), idOrder = Seq("k")))
+  libraryCase("replaceContents", "replaceContents", rivalAtHead = false)(c =>
+    VersionedTable.replaceContents(c, "t", rows(30 to 32)))
+  libraryCase("replaceAll", "replaceAll", rivalAtHead = false)(c =>
+    VersionedTable.replaceAll(c, "t", rows(30 to 32), Map.empty))
   libraryCase("compact", "compact")(c =>
     VersionedTable.compact(c, "t", 64L * 1024 * 1024))
   libraryCase("recluster", "recluster")(c =>
@@ -207,6 +217,54 @@ class CommitPathSpec extends SparkSpec {
       val head = VersionedTable.read(sqlCat, t).select("k", "v")
         .as[(Long, Double)].collect().toMap
       assert(head == Map(1L -> 1.0, 2L -> 2.0, 3L -> 3.0, RivalKey -> 9.0))
+      assertNoLeak(sqlCat, t)
+    }
+  }
+
+  /** A commit whose staged rows violate the table's CHECK constraint
+    * (`k > 0`): refused, no version added, nothing staged left behind. */
+  private def checkCase(name: String)(op: Catalog => Any): Unit =
+    test(s"$name: staged rows that violate the CHECK are refused and removed") {
+      val c = seeded()
+      VersionedTable.addCheckConstraint(c, "t", "k_pos", "k > 0")
+      val h = VersionedTable.currentVersion(c, "t").get
+      val e = intercept[IllegalArgumentException](op(c))
+      assert(e.getMessage.contains("CHECK constraint violated"), e.getMessage)
+      assert(VersionedTable.currentVersion(c, "t").contains(h))
+      assertNoLeak(c, "t")
+    }
+
+  private val negative = rows(1 to 2).withColumn("k", -col("k"))
+
+  checkCase("load")(c => VersionedTable.load(c, "t", negative, idOrder = Seq("k")))
+  checkCase("replaceAll")(c => VersionedTable.replaceAll(c, "t", negative,
+    Map(VersionedTable.CheckConstraintProp -> "k > 0")))
+  checkCase("replaceContents")(c => VersionedTable.replaceContents(c, "t", negative))
+  checkCase("upsertEqualityDelete")(c =>
+    VersionedTable.upsertEqualityDelete(c, "t", negative, Seq("k")))
+
+  for ((mode, props) <- Seq(
+    "copy-on-write" -> "",
+    "merge-on-read" -> " TBLPROPERTIES ('write.mode' = 'merge-on-read')")) {
+    test(s"SQL UPDATE on a $mode table refuses rows that violate the CHECK and removes its staging") {
+      val t = s"chk_${mode.replace('-', '_')}"
+      spark.sql(s"CREATE TABLE gcommit.default.$t (k BIGINT, v DOUBLE)$props")
+      spark.sql(s"INSERT INTO gcommit.default.$t VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
+      VersionedTable.addCheckConstraint(sqlCat, t, "k_pos", "k > 0")
+      val h = VersionedTable.currentVersion(sqlCat, t).get
+      val e = intercept[Exception](
+        spark.sql(s"UPDATE gcommit.default.$t SET k = -k WHERE k = 1"))
+      // Spark enforces the constraints the table reports in the write
+      // tasks, before the staged files reach the engine's own gate; either
+      // refusal must leave no version and no staged file
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(x => Option(x.getMessage).exists(m =>
+        m.contains("CHECK constraint") && m.contains("violated"))),
+        s"expected a CHECK violation, got $e")
+      assert(VersionedTable.currentVersion(sqlCat, t).contains(h))
+      val head = VersionedTable.read(sqlCat, t).select("k", "v")
+        .as[(Long, Double)].collect().toMap
+      assert(head == Map(1L -> 1.0, 2L -> 2.0, 3L -> 3.0))
       assertNoLeak(sqlCat, t)
     }
   }

@@ -44,4 +44,23 @@ class HistoryOpsSpec extends SparkSpec {
     intercept[Exception](spark.sql(
       "ALTER TABLE ghops.default.t SET TBLPROPERTIES ('operation'='x')"))
   }
+
+  test("a manifest without a recorded commit time fails history and time travel, naming its version") {
+    val c = new Catalog(spark, tmpDir("ghops-ts"))
+    VersionedTable.load(c, "t", Seq((1L, 1.0)).toDF("k", "v")) // v1: a root manifest
+    val f = new java.io.File(s"${c.dirPath("t")}.__vmeta/v1.manifest.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = mapper.readTree(f)
+    root.get("props").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .remove(VersionedTable.CommitTsProp)
+    mapper.writeValue(f, root)
+    new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+    for (read <- Seq[() => Any](
+      () => VersionedTable.history(c, "t").collect(),
+      () => VersionedTable.versionAt(c, "t", Long.MaxValue))) {
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("version 1 of 't' records no commit time"),
+        e.getMessage)
+    }
+  }
 }

@@ -17,6 +17,12 @@ class ManifestPlanningSpec extends SparkSpec {
 
   private def freshCat() = new Catalog(spark, tmpDir("vtplan"))
 
+  private val warehouse = tmpDir("gplan")
+  spark.conf.set("spark.sql.catalog.gplan",
+    classOf[graft.sources.GraftCatalog].getName)
+  spark.conf.set("spark.sql.catalog.gplan.dir", warehouse)
+  private val sqlCat = new Catalog(spark, warehouse)
+
   private def isListing(desc: String) = desc.startsWith("Listing leaf files")
 
   // ------------------------------------------------------------ job counts
@@ -218,5 +224,56 @@ class ManifestPlanningSpec extends SparkSpec {
     val ids = VersionedTable.read(tgt, "t").select("id").as[Long].collect()
     assert(ids.length == 65 && ids.distinct.length == 65 && ids.max == 65L)
     assertMaxIdExact(tgt, "t")
+  }
+
+  private def kv(ks: Seq[Long]) = ks.map(i => (i, i * 1.0)).toDF("k", "v")
+
+  /** `op` with id statistics off, so its new files record no id range. */
+  private def withoutIdStats[A](op: => A): A = {
+    val noIdStats = s"parquet.column.statistics.enabled#${Loader.IdCol}"
+    spark.conf.set(noIdStats, "false")
+    try op finally spark.conf.unset(noIdStats)
+  }
+
+  // every commit that stamps fresh ids: with no id range in its new
+  // files, it must record no floor rather than the parent's, which sits
+  // below the ids it just stamped
+  for ((name, op) <- Seq[(String, String => Unit)](
+    "upsertEqualityDelete" -> (t =>
+      VersionedTable.upsertEqualityDelete(sqlCat, t, kv(51L to 60L), Seq("k"))),
+    "replaceContents" -> (t =>
+      VersionedTable.replaceContents(sqlCat, t, kv(51L to 60L))),
+    "replaceAll" -> (t =>
+      VersionedTable.replaceAll(sqlCat, t, kv(51L to 60L), Map.empty)),
+    "merge-on-read SQL MERGE" -> { t =>
+      VersionedTable.setTableProps(sqlCat, t,
+        Map("write.mode" -> "merge-on-read"), Nil)
+      kv(Seq(5L) ++ (51L to 60L)).createOrReplaceTempView(s"${t}_src")
+      spark.sql(s"""MERGE INTO gplan.default.$t t USING ${t}_src s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET v = -s.v
+        WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""")
+    })) {
+    test(s"$name: fresh ids in new files without id statistics are never reissued") {
+      val t = "ids_" + name.filter(_.isLetter).toLowerCase
+      VersionedTable.load(sqlCat, t, kv(1L to 50L), idOrder = Seq("k"))
+      val v0 = VersionedTable.currentVersion(sqlCat, t).get
+      withoutIdStats(op(t))
+      val v1 = VersionedTable.currentVersion(sqlCat, t).get
+      val man = VersionedTable.readManifest(sqlCat, t, v1).get
+      val added = man.files.filterNot(
+        VersionedTable.readManifest(sqlCat, t, v0).get.files.toSet)
+      assert(added.nonEmpty && added.forall(r =>
+        !man.stats.get(r).exists(_.contains(Loader.IdCol))),
+        "the setup needs new files with no id range")
+      val stamped = VersionedTable.readVersion(sqlCat, t, v1)
+        .agg(max("id")).head().getLong(0)
+      assert(stamped > 50L, s"the setup needs fresh ids above 50: $stamped")
+      assert(man.maxId.forall(_ >= stamped),
+        s"v$v1 records floor ${man.maxId} below its max id $stamped")
+      VersionedTable.load(sqlCat, t, kv(61L to 65L))
+      val ids = VersionedTable.read(sqlCat, t).select("id").as[Long].collect()
+      assert(ids.distinct.length == ids.length,
+        s"reissued ids: ${ids.groupBy(identity).filter(_._2.length > 1).keys.toSeq.sorted}")
+    }
   }
 }
